@@ -521,15 +521,8 @@ object Bench {
     // deadline (the quiet full run fits in ~40%) degrades to single-run
     def singleRun: Boolean = contended || elapsedS > DeadlineS * 0.45
 
-    def newSession(partitions: String = cpus): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", partitions)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    def newSession(): SparkSession = {
+      val s = context.SessionContext.local(cpus.toInt, cpus.toInt).spark
       s.sparkContext.setLogLevel("ERROR")
       s
     }
@@ -805,10 +798,8 @@ object Bench {
       None
     } else sf1Dir.toOption.map { dir =>
       spark.stop()
-      val s2 = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.memory.fraction", "0.01")
+      val s2 = context.SessionContext.local(cpus.toInt, 2,
+        "spark.memory.fraction" -> "0.01",
         // fixture rows are small enough that even 1% of the sandbox heap
         // holds them (r7 recorded spilled:false — the squeeze alone never
         // pressured the aggregate). Force the machinery itself: cap the
@@ -817,14 +808,8 @@ object Bench {
         // sort actually round-trips through disk. At 100 TB real memory
         // pressure triggers these same paths; here the thresholds do, and
         // the task metrics prove the spill path completes and is counted.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-          "128")
-        .config("spark.shuffle.spill.numElementsForceSpillThreshold", "10000")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
+        "spark.shuffle.spill.numElementsForceSpillThreshold" -> "10000").spark
       s2.sparkContext.setLogLevel("ERROR")
       val spilledMem = new java.util.concurrent.atomic.AtomicLong
       val spilledDisk = new java.util.concurrent.atomic.AtomicLong

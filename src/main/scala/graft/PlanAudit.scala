@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** By-hand plan audit harness (the batch sibling of [[StreamAudit]], not
   * part of the gate): prints the executed physical plan of named
   * `SparkEntry.queries` rows so shuffle counts, join strategies, and
-  * codegen spans can be eyeballed after every operator change.
+  * codegen spans can be eyeballed after every operator change, plus each
+  * row's wall time from construction through a `noop` write (the
+  * Bench.runOnce convention).
   *
   * Usage: `sbt "runMain graft.PlanAudit <sfDir> <row> [<row>...]"`.
   *
@@ -17,19 +17,17 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanAudit <sfDir> <row> [<row>...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("plan-audit").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = context.SessionContext.local(cpus, cpus).spark
     val outDir = sys.env.get("SPARK_GRAFT_PLAN_OUT")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "plan")
     outDir.foreach(d => new java.io.File(d).mkdirs(): Unit)
     try for (q <- args.drop(1)) {
       println(s"===== $q =====")
+      val t0 = System.nanoTime()
       val df = SparkEntry.queries(q)(spark, args(0))
+      df.write.format("noop").mode("overwrite").save()
+      println(f"[plan-audit] $q wall ${(System.nanoTime() - t0) / 1e9}%.3f s")
       println(df.queryExecution.executedPlan.toString.take(12000))
       outDir.foreach { d =>
         // ADVICE r18: two-arg Paths.get so a suffix with a path

@@ -14,12 +14,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("tpch_q1")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first adapts the caller's session to what the operators assume of a
+    * `SessionContext.local` session, so a driver-built session without
+    * `spark.sql.extensions=graft.functions.GraftExtensions` still works:
+    * graft's functions are registered (idempotent — a no-op where the
+    * extension installed them) and parquet TIMESTAMP(NANOS) columns are
+    * read as longs (the events fixture throws on read otherwise).
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Tpch.queries ++ operators.Relational.queries ++
+    (operators.Tpch.queries ++ operators.Relational.queries ++
       operators.TextAnalysis.queries ++ operators.Dedup.queries ++
       operators.Similarity.queries ++ operators.Multimodal.queries ++
-      operators.Graph.queries ++ streaming.Streaming.queries
+      operators.Graph.queries ++ streaming.Streaming.queries)
+      .map { case (name, fn) => name -> { (s: SparkSession, d: String) =>
+        adapt(s)
+        fn(s, d)
+      } }
+
+  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private def adapt(s: SparkSession): Unit = {
+    functions.GraftFunctions.register(s)
+    if (!s.conf.getOption(NanosKey).contains("true")) s.conf.set(NanosKey, "true")
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

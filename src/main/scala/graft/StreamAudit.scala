@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway audit harness for the streaming slow-tail rows (run by hand,
   * not part of the gate): times a named stream row and dumps every
   * micro-batch's durationMs breakdown via a progress listener.
@@ -10,17 +8,10 @@ object StreamAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val name = args.headOption.getOrElse("stream_exec_ckpt_restart")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.stream.statePartitions",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = context.SessionContext.local(cpus, cpus,
+      "spark.graft.stream.statePartitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "8")).spark
     // per-JOB wall + task-time breakdown: micro-batch durationMs says
     // addBatch dominates but not which of the funnel's jobs inside it
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

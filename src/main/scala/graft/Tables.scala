@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -46,23 +46,31 @@ object Tables {
     * (maxPartitionBytes split sizing, the OperatorsSpec contract) applies
     * per query, and NO data or listing is ever cached across calls.
     *
-    * Keyed by (path, mtime, length), session-independent (a parquet
-    * file's schema is a property of the bytes): a rewritten fixture
-    * (tests regenerate tables under temp dirs) is a cache miss. Bounded:
-    * ~10 tables × a few dirs per JVM; cleared wholesale at the cap.
+    * Keyed by (path, mtime, length) plus the two session confs that
+    * change how the same bytes map to Spark types
+    * ([[SchemaConfs]]): a rewritten fixture (tests regenerate tables
+    * under temp dirs) is a cache miss, and so is a session that reads
+    * NANOS or NTZ timestamps differently. Bounded: ~10 tables × a few
+    * dirs per JVM; cleared wholesale at the cap.
     */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+    (String, Long, Long, Seq[Option[String]]),
+    org.apache.spark.sql.types.StructType]()
+
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
 
   /** Raw footer schema of a parquet path, memoized by (path, mtime,
-    * length). Measured (LoadProbe, sf0.1): inference costs ~47 ms/table;
-    * the memoized path ~4 ms.
+    * length, [[SchemaConfs]]). Measured (LoadProbe, sf0.1): inference
+    * costs ~47 ms/table; the memoized path ~4 ms.
     */
   def parquetSchema(spark: SparkSession, p: String)
       : org.apache.spark.sql.types.StructType = {
     if (schemaMemo.size > 256) schemaMemo.clear()
     val f = new java.io.File(p)
-    schemaMemo.computeIfAbsent((p, f.lastModified, f.length),
+    schemaMemo.computeIfAbsent(
+      (p, f.lastModified, f.length, SchemaConfs.map(spark.conf.getOption)),
       _ => spark.read.parquet(p).schema)
   }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,7 +9,7 @@ object Verify {
     // iteration on a few rows (the driver always runs the full map)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Process-private scratch root unless the caller pinned one: the
     // correctness gate must never read a build-once artifact written by a
     // concurrent or earlier process (the r13 lesson — Verify and a
@@ -21,15 +20,8 @@ object Verify {
     val scratchRoot =
       sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
         s"target/scratch-verify-${ProcessHandle.current.pid}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.scratch", scratchRoot)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = context.SessionContext.local(cpus, cpus,
+      "spark.graft.scratch" -> scratchRoot).spark
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -150,23 +150,29 @@ class SessionContext(val spark: SparkSession) {
 }
 
 object SessionContext {
-  /** Build a context with the engine's recommended large-scale defaults:
-    * AQE on (runtime shuffle-partition coalescing + skew-join handling —
-    * the adaptive re-planning the reference lacks, SURVEY.md §4.2), UTC
-    * session time, shuffle partitions sized for the local[32] test rig.
+  /** The one place a graft `SparkSession` is built. Every session gets the
+    * engine defaults: graft's functions and plan rules installed through
+    * `spark.sql.extensions` (so they also reach every `newSession()`
+    * child), AQE on (runtime shuffle-partition coalescing + skew-join
+    * handling — the adaptive re-planning the reference lacks, SURVEY.md
+    * §4.2), UTC session time, nanosecond parquet timestamps read as
+    * longs, UI off. `confs` are applied last, for the few entry points
+    * that really differ (a scratch root, a memory squeeze).
     */
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SessionContext = {
-    val spark = SparkSession.builder()
+  def local(cores: Int, shufflePartitions: Int,
+            confs: (String, String)*): SessionContext = {
+    val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // nanosecond-precision parquet timestamps (as the driver fixtures
-      // carry) surface as LongType instead of an illegal-type error —
-      // same setting every other entry point of this repo runs with
+      // carry) surface as LongType instead of an illegal-type error
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+    val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new SessionContext(spark)

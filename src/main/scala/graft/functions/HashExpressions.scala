@@ -736,11 +736,16 @@ case class HtmlExtract(child: Expression)
 }
 
 /** SQL registration + Column-level wrappers (via the function registry, so
-  * the same names work from SQL and the DataFrame API). Two installation
-  * paths share one builder table: [[register]] (imperative, per-session —
-  * what the operators call) and [[injectInto]] (the
-  * `SparkSessionExtensions` hook behind [[GraftExtensions]], for
-  * `spark.sql.extensions=graft.functions.GraftExtensions` deployment).
+  * the same names work from SQL and the DataFrame API). The install path
+  * is [[injectInto]], the `SparkSessionExtensions` hook behind
+  * [[GraftExtensions]]: `graft.context.SessionContext.local` sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, so every
+  * session it builds — and every `newSession()` child of one — resolves
+  * these names. Precondition for the operators: a session from
+  * `SessionContext.local`, or one with that extension set.
+  * `graft.SparkEntry.queries` adapts any other session through
+  * [[register]], the imperative per-session form of the same builder
+  * table (it does not carry into `newSession()` children).
   */
 object GraftFunctions {
   import org.apache.spark.sql.functions.call_function
@@ -802,7 +807,7 @@ object GraftFunctions {
         " — the idempotent register() would silently skip them; rename")
   }
 
-  /** Idempotent: operator builders call this at every entry point, so a
+  /** Idempotent: `SparkEntry.queries` calls this before every row, so a
     * long-lived session (Verify/Bench run hundreds of queries) would
     * otherwise re-replace each name per query — harmless, but it emits a
     * `SimpleFunctionRegistry ... replaced` WARN per name per query, and
@@ -832,7 +837,7 @@ object GraftFunctions {
     }
   }
 
-  /** Wrappers assume [[register]] ran on the active session. */
+  /** Wrappers assume the functions are installed in the active session. */
   def rolling_hash(c: Column): Column = call_function("rolling_hash", c)
   def simhash64(c: Column): Column = call_function("simhash64", c)
   def minhash64(c: Column, k: Int): Column =
@@ -951,7 +956,8 @@ case class BpeTokenCount(child: Expression)
   * path): `--conf spark.sql.extensions=graft.functions.GraftExtensions`
   * makes every graft function available in ANY session of the
   * application — no imperative register() call, the idiomatic way to ship
-  * a function library to a shared cluster.
+  * a function library to a shared cluster. `SessionContext.local` always
+  * sets it.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {

@@ -52,11 +52,7 @@ final class GramTriangleAgg(d: Int)
   private val len = d * (d + 1) / 2
   def zero: Array[Long] = new Array[Long](len)
   def reduce(buf: Array[Long], q: Seq[Long]): Array[Long] = {
-    val a = q match {
-      case w: scala.collection.mutable.ArraySeq[Long @unchecked] =>
-        w.array.asInstanceOf[Array[Long]]
-      case _ => q.toArray
-    }
+    val a = q.toArray
     var k = 0
     var i = 0
     while (i < d) {

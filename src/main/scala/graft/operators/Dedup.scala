@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -70,7 +70,6 @@ object Dedup {
     * fallback but evaluates higher-order lambdas interpreted).
     */
   private def shingleSets(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     docs(s, d).select(col("doc_id"),
       GraftFunctions.word_shingles(TF.words(col("text")), ShingleN).as("sh"))
   }
@@ -222,7 +221,6 @@ object Dedup {
     * aggregate's own hash exchange immediately discards.
     */
   private def joinFuzzyCore(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val par = pmod(regexp_replace(col("source"), "^src", "")
       .cast("int"), lit(2))
     // exact-duplicate pre-collapse PER SIDE (the [[jaccardPairs]]
@@ -337,7 +335,6 @@ object Dedup {
     */
   private def minhashVerifiedPairsReleasable(
       s: SparkSession, d: String): (DataFrame, () => Unit) = {
-    GraftFunctions.register(s)
     // Exact-duplicate pre-collapse, same contract as [[jaccardPairs]]:
     // identical normalized text ⇒ identical shingle set ⇒ identical
     // MinHash signature, so banding is deterministic across a duplicate
@@ -434,7 +431,6 @@ object Dedup {
     */
   private def dedupEditDistance(s: SparkSession, d: String): DataFrame = {
     val K = 10
-    GraftFunctions.register(s)
     // Exact-duplicate pre-collapse (the jaccard/minhash tier contract,
     // completed here by the r16 review): lev is a function of the
     // NORMALIZED text, so identical-norm docs form an equivalence class —
@@ -620,7 +616,6 @@ object Dedup {
     */
   private def dedupEditQgram(s: SparkSession, d: String): DataFrame = {
     val K = 10
-    GraftFunctions.register(s)
     val keyed = docs(s, d).select(col("doc_id"),
       md5(TF.normText(col("text"))).as("gk"))
     val groups = keyed.groupBy(col("gk")).agg(min(col("doc_id")).as("rep"))
@@ -816,28 +811,20 @@ object Dedup {
     // pairs, but NOT constant-bounded like the nation graph, so the
     // width is derived from the measured edge count (the count also
     // eagerly materializes the edge cache the first round would pay
-    // anyway) at [[LoopRowsPerTask]] rows per reduce task instead of
-    // being pinned to 1 or left at the session's corpus-scale setting.
+    // anyway) at [[LoopRowsPerTaskDefault]] rows per reduce task instead
+    // of being pinned to 1 or left at the session's corpus-scale setting.
     // At fixture SFs this plans 1-wide rounds (the measured 32-empty-
     // task scheduling floor is gone); at a billion edges the same
-    // arithmetic plans thousands of tasks. AQE is scoped off for the
-    // loop for the measured reason documented at
-    // [[graft.operators.Graph]]: with the width already right, each AQE
+    // arithmetic plans thousands of tasks. [[LoopSession.static]] runs
+    // the loop with AQE off: with the width already right, each AQE
     // stage is its own mini-job and the per-round job count multiplies.
-    // Both confs restore in the finally; the caller's downstream frames
-    // plan under the session's normal settings.
     val nEdges = edges.count()
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqeWas = s.conf.get(aqeKey, "true")
-    val partWas = s.conf.get(partKey)
     val rowsPerTask = s.conf.get("spark.graft.loop.rowsPerTask",
       LoopRowsPerTaskDefault.toString).toLong
     val width = math.min(s.sessionState.conf.numShufflePartitions.toLong,
-      math.max(1L, nEdges / rowsPerTask + 1L)).toString
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partKey, width)
-    try {
+      math.max(1L, nEdges / rowsPerTask + 1L))
+    try LoopSession.static(s, width) { in =>
+      val loopEdges = in(edges)
       // init = min(self, neighbors): one propagation folded into the
       // node-set groupBy that the old `distinct()` init paid anyway. On
       // pair-dominated graphs (every dedup tier's common case: near-dup
@@ -847,7 +834,7 @@ object Dedup {
       // first equality check is meaningful (labels only ever decrease, so
       // Σ unchanged across a round ⇒ pointwise unchanged ⇒ fixpoint).
       var (labels, labelIds) = tracked(
-        edges.groupBy(col("u")).agg(min(col("v")).as("mv"))
+        loopEdges.groupBy(col("u")).agg(min(col("v")).as("mv"))
           .select(col("u").as("node"),
             least(col("u"), col("mv")).as("label")))
       var prevSum = Option(labels.agg(sum(col("label"))).head().get(0))
@@ -858,7 +845,7 @@ object Dedup {
         while (!converged && iter < maxRounds) {
           iter += 1
           // 1) min-label propagation across edges
-          val prop = edges.join(labels, col("v") === col("node"))
+          val prop = loopEdges.join(labels, col("v") === col("node"))
             .select(col("u").as("node"), col("label"))
             .union(labels)
             .groupBy(col("node")).agg(min(col("label")).as("label"))
@@ -885,10 +872,7 @@ object Dedup {
             s"connectedComponents: label propagation not converged after $iter rounds")
         labels
       } catch { case e: Throwable => drop(labelIds); throw e }
-    } finally {
-      s.conf.set(aqeKey, aqeWas); s.conf.set(partKey, partWas)
-      edges.unpersist(blocking = true)
-    }
+    } finally edges.unpersist(blocking = true)
   }
 
   private def dedupClusters(s: SparkSession, d: String): DataFrame = {
@@ -955,7 +939,6 @@ object Dedup {
     * recall is the banding guarantee (miss ≈ 1e-14 at J = 0.8).
     */
   private def dedupIncremental(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val sh = shingleSets(s, d).filter(size(col("sh")) > 0).cache()
     val isNew = pmod(col("doc_id"), lit(10)) === 0
     val candidates = bandKeys(sh.filter(isNew))
@@ -1097,7 +1080,6 @@ object Dedup {
     * sub-quadratic LSH tier is [[simhashPairs]]/[[minhashLsh]].
     */
   private def embeddingPairs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.load(s, d, "embeddings")
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("v"))
       .withColumn("bk", pmod(col("vec_id"), lit(EmbBlocks)).cast(IntegerType))
@@ -1258,7 +1240,6 @@ object Dedup {
         col("first.chunk_idx").as("chunk_idx"), col("chunk"))
 
   private def dedupCdcChunks(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     // cached: feeds both the per-doc chunk counts and the keeper
     // aggregate — one cut scan, two consumers (released by the session
     // owner via Caches.releaseAll, same contract as substringDups)
@@ -1286,7 +1267,6 @@ object Dedup {
     * like the oracle.
     */
   private def dedupCdcKeep(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     cdcKeepers(cdcChunkTable(docs(s, d)))
       .groupBy(col("doc_id"))
       .agg(
@@ -1462,7 +1442,6 @@ object Dedup {
     * candidate).
     */
   private def dedupContainment(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val t = 0.9
     // Exact-duplicate pre-collapse on BOTH sides, same contract as the
     // jaccard/minhash tiers. Corpus side: identical normalized text ⇒

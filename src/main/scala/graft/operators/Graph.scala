@@ -135,8 +135,7 @@ object Graph {
       .coalesce(1).localCheckpoint(true)
     val nodes = nation.select(col("n_nationkey").as("node"))
     val n = nodes.count().toDouble
-    var (ranks, blocks) =
-      tracked(nodes.withColumn("rank", lit(1.0 / n)))
+    val (ranks0, blocks0) = tracked(nodes.withColumn("rank", lit(1.0 / n)))
     var iter = 0
     var delta = Double.MaxValue
     // Per-round cost here is pure ORCHESTRATION, so every round's frame
@@ -160,29 +159,21 @@ object Graph {
     // checkpointed round frame, so the L1-delta probe is one map-side
     // aggregate over 25 local rows instead of a join of two checkpoints
     // (the join cost a broadcast build + an extra stage per round); (b)
-    // AQE is scoped OFF for the loop — every frame here is node-sized
-    // metadata, so adaptive re-planning buys nothing and each of its
-    // per-stage mini-jobs pays the full scheduling round-trip (measured
-    // ~11 AQE jobs/round, 241 total; static planning runs the same
-    // round as 2 actions with in-flight broadcasts). The conf is
-    // restored in the finally — corpus-scale rows keep AQE.
-    // Both confs are loop-scoped and restored below. shuffle.partitions=1
-    // is NOT a local[32] tuning: every exchange inside the loop carries a
+    // the loop runs under [[LoopSession.static]]: AQE off (measured ~11
+    // AQE jobs/round, 241 total; static planning runs the same round as
+    // 2 actions with in-flight broadcasts) and width 1. Width 1 is NOT a
+    // local[32] tuning: every exchange inside the loop carries a
     // ≤|nations| frame by construction (the corpus-scale work — the edge
     // derivation — is checkpointed BEFORE the loop under the session's
     // normal width), so one reduce task per round is the right width at
     // ANY scale, and without it the static plan schedules 32 empty tasks
     // per round (measured 628 tasks / 13.6 task-seconds for 22 rounds).
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqeWas = s.conf.get(aqeKey, "true")
-    val partWas = s.conf.get(partKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partKey, "1")
-    try {
+    val ranks = LoopSession.static(s, 1) { in =>
+      val (loopEdges, loopDeg) = (in(edges), in(deg))
+      var (ranks, blocks) = (in(ranks0), blocks0)
       while (delta >= ConvEps && iter < ConvMaxIters) {
         iter += 1
-        val contrib = edges.join(deg, "src")
+        val contrib = loopEdges.join(loopDeg, "src")
           .join(ranks.select(col("node").as("src"), col("rank")), "src")
           .select(col("dst"), (col("rank") / col("outdeg")).as("c"))
           .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
@@ -201,7 +192,8 @@ object Graph {
         ranks = next.select(col("node"), col("rank"))
         blocks = nextBlocks
       }
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partKey, partWas) }
+      ranks
+    }
     require(delta < ConvEps,
       s"pagerank did not converge within $ConvMaxIters iterations " +
         s"(last delta $delta)")
@@ -297,12 +289,9 @@ object Graph {
     require(!srcRow.isNullAt(0),
       "significant-trade graph is empty at this scale factor; bfs has no source")
     val srcNode = srcRow.getLong(0)
-    var dist = nodes.filter(col("node") === srcNode)
+    val source = nodes.filter(col("node") === srcNode)
       .select(col("node"), lit(0).as("dist")).coalesce(1)
       .localCheckpoint(true)
-    var frontier = dist
-    var level = 1
-    var active = true
     // Loop-scoped static 1-wide planning (the pagerankConverged r18
     // treatment): frontier and distance frames are node-sized by
     // construction — the corpus-scale edge derivation is checkpointed
@@ -311,15 +300,14 @@ object Graph {
     // leaf is already-materialized local blocks, so the plan is a flat
     // N-leaf scan) instead of re-checkpointing the whole union every
     // level — one driver action per level instead of two.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqeWas = s.conf.get(aqeKey, "true")
-    val partWas = s.conf.get(partKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partKey, "1")
-    try {
+    val dist = LoopSession.static(s, 1) { in =>
+      val loopEdges = in(edges)
+      var dist = in(source)
+      var frontier = dist
+      var level = 1
+      var active = true
       while (active && level <= 30) {
-        val next = frontier.join(edges, col("node") === col("u"))
+        val next = frontier.join(loopEdges, col("node") === col("u"))
           .select(col("v").as("node")).distinct()
           .join(dist.select(col("node").as("seen")),
             col("node") === col("seen"), "left_anti")
@@ -332,7 +320,8 @@ object Graph {
           level += 1
         }
       }
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partKey, partWas) }
+      dist
+    }
     nodes.join(dist, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("dist"), lit(-1)).as("dist"))
@@ -503,11 +492,9 @@ object Graph {
     require(!srcRow.isNullAt(0),
       "significant-trade graph is empty at this scale factor; sssp has no source")
     val srcNode = srcRow.getLong(0)
-    var dist = nodes.select(col("node"),
+    val dist0 = nodes.select(col("node"),
         when(col("node") === srcNode, lit(0L)).as("dist"))
       .coalesce(1).localCheckpoint(true) // null dist = unreached
-    var round = 0
-    var active = true
     // Loop-scoped static 1-wide planning (the pagerankConverged r18
     // treatment, same justification): every frame in the relaxation loop
     // is node-sized by construction — the corpus-scale edge derivation
@@ -518,15 +505,13 @@ object Graph {
     // row per node, so max(prev) over the group recovers it exactly),
     // making the did-anything-improve probe one map-side aggregate over
     // the checkpointed frame instead of a per-round join + count.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqeWas = s.conf.get(aqeKey, "true")
-    val partWas = s.conf.get(partKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partKey, "1")
-    try {
+    val dist = LoopSession.static(s, 1) { in =>
+      val loopEdges = in(edges)
+      var dist = in(dist0)
+      var round = 0
+      var active = true
       while (active && round < SsspMaxRounds) {
-        val relaxed = edges
+        val relaxed = loopEdges
           .join(dist.select(col("node").as("u"), col("dist").as("du")), "u")
           .filter(col("du").isNotNull)
           .select(col("v").as("node"), (col("du") + col("w")).as("cand"),
@@ -544,7 +529,8 @@ object Graph {
         round += 1
         if (improved == 0) active = false
       }
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partKey, partWas) }
+      dist
+    }
     dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
       .orderBy(col("node"))
   }

@@ -276,13 +276,13 @@ object Relational {
   /** 1-row empty-relation (`SELECT 1`) —
     * reference: ballista.proto:232-234, serde from_proto.rs:183-187.
     */
-  private def emptyRelation(s: SparkSession, d: String): DataFrame =
+  private def emptyRelation(s: SparkSession, @annotation.unused d: String): DataFrame =
     s.range(1).select(lit(1).as("one"))
 
   /** Client-provided in-memory table
     * (reference: rust/core/src/memory_stream.rs:1-93).
     */
-  private def memTable(s: SparkSession, d: String): DataFrame = {
+  private def memTable(s: SparkSession, @annotation.unused d: String): DataFrame = {
     val ctx = new SessionContext(s)
     val schema = StructType(Seq(
       StructField("id", IntegerType, nullable = false),

@@ -91,7 +91,6 @@ object Similarity {
 
   /** Exact brute-force cosine top-k for the first NQueries vectors. */
   private def bruteTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = emb(s, d).cache()
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -145,7 +144,6 @@ object Similarity {
   private[graft] def assignByBroadcast(
       e: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
     val s = e.sparkSession
-    GraftFunctions.register(s)
     val centsDf = s.createDataFrame(cents.map(c => (c._1, c._2)))
       .toDF("cell", "cv")
     e.crossJoin(broadcast(centsDf))
@@ -199,7 +197,6 @@ object Similarity {
     * table is read back.
     */
   def buildIvfIndex(s: SparkSession, d: String): IvfIndex = {
-    GraftFunctions.register(s)
     val dir = graft.Scratch.ensure(s, indexKey(d)) { dir =>
       val corpusPath = s"$dir/corpus"
       val e = emb(s, d).cache()
@@ -234,7 +231,6 @@ object Similarity {
     * Pure QUERY path: reads the prebuilt index, never writes.
     */
   def ivfTopKWithProbes(s: SparkSession, d: String, nprobe: Int): DataFrame = {
-    GraftFunctions.register(s)
     val idx = buildIvfIndex(s, d)
 
     // coarse quantization: nprobe nearest cells per query
@@ -341,7 +337,6 @@ object Similarity {
     * shortlist. Division is IEEE-exact, so normalization is deterministic.
     */
   private def embUnit(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val nrm = sqrt(GraftFunctions.dot_product(col("v"), col("v")))
     // zero-norm guard: an all-zero embedding divided by its norm is a NaN
     // vector, and NaNs silently poison codebook training and ADC argmax
@@ -363,7 +358,6 @@ object Similarity {
     */
   def buildPqIndex(s: SparkSession, d: String)
       : (Seq[(Int, Int, Seq[Double])], String) = {
-    GraftFunctions.register(s)
     val dir = graft.Scratch.ensure(s, pqKey(d)) { tmp =>
       val e = embUnit(s, d).cache()
       val dim = e.select(size(col("v"))).head().getInt(0)
@@ -424,7 +418,6 @@ object Similarity {
     * exercise it and so [[pqFullRerank]] can set shortlist = corpus size).
     */
   def pqTopKWithShortlist(s: SparkSession, d: String, shortlistN: Int): DataFrame = {
-    GraftFunctions.register(s)
     val (books, codesPath) = buildPqIndex(s, d)
     val subDim = books.head._3.size
     val booksDf = s.createDataFrame(books).toDF("sub", "code", "cv")
@@ -522,7 +515,6 @@ object Similarity {
     * by exactly one cell pair, so no distinct is needed.
     */
   def embeddingThresholdPairs(s: SparkSession, d: String, t: Double): DataFrame = {
-    GraftFunctions.register(s)
     val idx = buildIvfIndex(s, d)
     val (kept, _) = prunedCellPairs(idx.centroids, t)
     val pairsDf = broadcast(s.createDataFrame(kept).toDF("bi", "bj"))
@@ -587,7 +579,6 @@ object Similarity {
     * same sub-quadratic banding shape as the MinHash text tier.
     */
   def hyperplaneCandidates(corpus: DataFrame): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val bandRows = corpus.select(col("vec_id"),
       posexplode(GraftFunctions.hyperplane_bands(
         col("v"), LshBands, LshRows, LshSeed)).as(Seq("band", "bk")))
@@ -619,7 +610,6 @@ object Similarity {
       .orderBy(col("vec_a"), col("vec_b"))
 
   private def dedupEmbeddingLsh(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     hyperplaneLshPairs(lshCorpus(s, d), LshThreshold)
   }
 
@@ -717,7 +707,6 @@ object Similarity {
                             t: Double = LshThreshold,
                             maxBroadcastLabels: Long = 5L * 1000 * 1000)
       : DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     // groups and reps are each referenced several times by the banded
     // machinery below (band explode ×2, cosine-verify ×2, the member
     // expansion) and everything that reads them is materialized INSIDE
@@ -785,7 +774,6 @@ object Similarity {
   }
 
   private def dedupSemantic(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val corpus = lshCorpus(s, d).cache()
     try semanticDedupVerdicts(corpus)
     finally { corpus.unpersist(blocking = true); () }
@@ -978,7 +966,6 @@ object Similarity {
     */
   private[graft] def semdedupDroppedReleasable(corpus: DataFrame)
       : (DataFrame, DataFrame, () => Unit) = {
-    GraftFunctions.register(corpus.sparkSession)
     val cached = corpus.select(col("vec_id"), col("v")).cache()
     val qv = cached.select(col("vec_id"),
       transform(col("v"), x => floor(x * lit(KmScale))).as("q")).cache()
@@ -1037,7 +1024,6 @@ object Similarity {
   }
 
   private[graft] def pipelineSemdedup(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     semdedupFunnel(lshCorpus(s, d))
   }
 
@@ -1130,7 +1116,6 @@ object Similarity {
     * session owner via Caches.releaseAll, the substringDups contract.
     */
   private[graft] def pipelineRagDense(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import graft.functions.{TextFunctions => TF}
     // the cache holds the COMPUTED 16-int profiles + token counts, not
     // the norm strings: kmFit's five passes (seeds, 2× assign+update,
@@ -1226,7 +1211,6 @@ object Similarity {
     */
   private def knnRanked(s: SparkSession, d: String,
       sharedCents: Option[Seq[Seq[Long]]] = None): DataFrame = {
-    GraftFunctions.register(s)
     val base = emb(s, d).cache()
     // assignment carries the raw vector THROUGH the map-only pass
     // (kmAssign preserves input columns since r18) instead of joining it
@@ -1285,7 +1269,6 @@ object Similarity {
     */
   private def knnMultiprobeRanked(s: SparkSession, d: String,
       sharedCents: Option[Seq[Seq[Long]]] = None): DataFrame = {
-    GraftFunctions.register(s)
     val base = emb(s, d).cache()
     val qv = base.select(col("vec_id"),
       transform(col("v"), x => floor(x * lit(KmScale))).as("q"))
@@ -1385,7 +1368,6 @@ object Similarity {
     // one deterministic coarse-quantizer fit shared by both tiers (the
     // builds over the same corpus fit identical centroids; each fit is 3
     // eager collect jobs over the corpus — r18)
-    GraftFunctions.register(s)
     val cents = kmFit(emb(s, d).cache().select(col("vec_id"),
       transform(col("v"), x => floor(x * lit(KmScale))).as("q")))
     tierRecall("multiprobe", knnMultiprobeRanked(s, d, Some(cents)),

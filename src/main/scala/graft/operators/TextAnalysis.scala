@@ -323,7 +323,6 @@ object TextAnalysis {
     * determinism is asserted for it).
     */
   private def textFingerprintNative(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val base = docs(s, d).select(TF.normText(col("text")).as("norm"))
       .select(col("norm"),
         GraftFunctions.rolling_hash(col("norm")).as("fp_rolling"),
@@ -469,8 +468,6 @@ object TextAnalysis {
     */
   def decontaminate(trainDocs: DataFrame, benchDocs: DataFrame, n: Int = 5,
                     maxBroadcastShingles: Long = 50L * 1000 * 1000): DataFrame = {
-    val s = trainDocs.sparkSession
-    GraftFunctions.register(s)
     val bench = benchDocs
       .select(explode(
         GraftFunctions.word_shingles(TF.words(col("text")), n)).as("shingle"))
@@ -508,7 +505,6 @@ object TextAnalysis {
   def decontaminateBloom(trainDocs: DataFrame, benchDocs: DataFrame,
                          n: Int = 5, fpp: Double = 0.01): DataFrame = {
     val s = trainDocs.sparkSession
-    GraftFunctions.register(s)
     val bench = benchDocs
       .select(explode(
         GraftFunctions.word_shingles(TF.words(col("text")), n)).as("shingle"))
@@ -549,8 +545,6 @@ object TextAnalysis {
                             n: Int = 5, dropAt: Double = 0.5,
                             maxBroadcastShingles: Long = 50L * 1000 * 1000)
       : DataFrame = {
-    val s = trainDocs.sparkSession
-    GraftFunctions.register(s)
     val bench = benchDocs
       .select(explode(
         GraftFunctions.word_shingles(TF.words(col("text")), n)).as("shingle"))
@@ -587,7 +581,6 @@ object TextAnalysis {
                                  n: Int = 5, dropAt: Double = 0.5,
                                  fpp: Double = 0.01): DataFrame = {
     val s = trainDocs.sparkSession
-    GraftFunctions.register(s)
     val bench = benchDocs
       .select(explode(
         GraftFunctions.word_shingles(TF.words(col("text")), n)).as("shingle"))
@@ -632,8 +625,6 @@ object TextAnalysis {
                          n: Int = 5,
                          maxBroadcastShingles: Long = 50L * 1000 * 1000)
       : DataFrame = {
-    val s = trainDocs.sparkSession
-    GraftFunctions.register(s)
     val bench = benchDocs
       .select(explode(
         GraftFunctions.word_shingles(TF.words(col("text")), n)).as("shingle"))
@@ -768,7 +759,6 @@ object TextAnalysis {
     * boilerplate before any pairwise dedup runs.
     */
   private def textRepetition(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val w = TF.words(col("text"))
     val n = size(w)
     val topWord = maxRunCount(w)
@@ -854,7 +844,6 @@ object TextAnalysis {
     * entries (~2^-64 per pair), and the 8-byte key halves both shuffles.
     */
   private def textNovelty(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val ex = docs(s, d)
       .select(col("doc_id"),
         explode(GraftFunctions.word_shingles(TF.words(col("text")), 3))
@@ -885,7 +874,6 @@ object TextAnalysis {
     * occupied deciles (10 rows).
     */
   private def textNoveltyCurve(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val ex0 = docs(s, d)
       .select(col("doc_id"),
         explode(GraftFunctions.word_shingles(TF.words(col("text")), 3))
@@ -1367,7 +1355,6 @@ object TextAnalysis {
     * longest-match decision is hash-gated, not just the plumbing.
     */
   private def textTokenBudget(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val budget = 256
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1398,7 +1385,6 @@ object TextAnalysis {
     * different bin sum and fails the hash gate.
     */
   private def textTokenBudgetBpe(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val budget = 256
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2111,7 +2097,6 @@ object TextAnalysis {
     * more than k×buckets driver-side state.
     */
   private def pipelinePretraining(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val raw = docs(s, d).select(col("doc_id"), col("text"))
     // Each pipeline stage runs ONCE. The naive funnel re-evaluated the
     // whole lazy upstream per stage (classifier 3×, decontamination 2×)
@@ -2241,7 +2226,6 @@ object TextAnalysis {
     * candidates, all five rows from one tagged aggregate.
     */
   private def pipelineEvalHarness(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val n = 5
     val raw = docs(s, d).select(col("doc_id"), col("lang"), col("text"))
     val isEval = substring(md5(col("text")), 1, 1) === "1"
@@ -2577,7 +2561,6 @@ object TextAnalysis {
     // chain interpreted AND once per referenced field — 7.0 s for the
     // sf0.1 row; the native struct expression is computed once under
     // projection CSE and the row drops to scan speed
-    GraftFunctions.register(pages.sparkSession)
     val f = GraftFunctions.html_extract(col("html"))
     pages.select(col("doc_id"),
       f.getField("n_lines_raw").as("n_lines_raw"),

@@ -18,25 +18,13 @@ object Streaming {
 
   /** The events parquet carries TIMESTAMP(NANOS), which Spark 4 rejects by
     * default; read nanos as long and truncate to Spark's native µs
-    * precision (same truncation DuckDB applies casting ns→µs).
-    *
-    * The conf belongs in session construction (graft's own entry points —
-    * Bench, Verify, the test session — all set it there); [[ensureNanosConf]]
-    * is a defensive guard for externally-constructed sessions (e.g. the
-    * driver calling SparkEntry.entry with its own SparkSession). It forces
-    * the conf to true whenever it isn't already — without it every events
-    * read throws on the NANOS column, so callers of the events operators
-    * have opted into this semantic; after the first call it is a no-op.
+    * precision (same truncation DuckDB applies casting ns→µs). The conf
+    * `spark.sql.legacy.parquet.nanosAsLong` comes with every
+    * `SessionContext.local` session, and `SparkEntry.queries` sets it on
+    * any other session before a row builds. [[Tables.load]] normalizes
+    * ts (ns-long / NTZ / µs) to session TIMESTAMP.
     */
-  private def ensureNanosConf(s: SparkSession): Unit =
-    if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  def events(s: SparkSession, d: String): DataFrame = {
-    ensureNanosConf(s)
-    // Tables.load normalizes ts (ns-long / NTZ / µs) to session TIMESTAMP
-    Tables.load(s, d, "events")
-  }
+  def events(s: SparkSession, d: String): DataFrame = Tables.load(s, d, "events")
 
   private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
@@ -84,7 +72,6 @@ object Streaming {
     * running the transforms above under `readStream` — used by the specs.
     */
   def readEventStream(s: SparkSession, d: String): DataFrame = {
-    ensureNanosConf(s)
     // declare the stream with the RAW file schema (ns-long / NTZ / µs —
     // whatever this round's fixtures carry), then apply the same ts
     // normalization the batch loader does. Memoized footer schema: every
@@ -104,7 +91,7 @@ object Streaming {
     * (streaming source → watermark → state store → sink) against a batch
     * DuckDB oracle, not just the batch twin of the same plan.
     */
-  /** `statePartitions`: state-store count is bound to
+  /** State-store count is bound to
     * spark.sql.shuffle.partitions at query start, and EVERY store commits
     * per micro-batch whether or not it holds state — the r6 cost audit of
     * the interval join measured the commit machinery (32 partitions × 4
@@ -127,17 +114,17 @@ object Streaming {
   private[graft] def stateParts(s: SparkSession): Int =
     s.conf.get("spark.graft.stream.statePartitions", "8").toInt
   private def runToMemory(s: SparkSession, name: String, df: DataFrame,
-                          mode: String,
-                          statePartitions: Option[Int] = None,
-                          checkpoint: Option[String] = None): DataFrame = {
+                          mode: String): DataFrame = {
     s.catalog.dropTempView(name) // re-runs in one session replace the sink
+    // Set and restored on the CALLER's session, not a newSession() child:
+    // StreamingQueryListener and QueryExecutionListener buses are per
+    // session, so a query started in a child is invisible to listeners
+    // the caller attached (perfbench --trace reads both).
     val saved = s.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      s.conf.set("spark.sql.shuffle.partitions", n.toString))
+    s.conf.set("spark.sql.shuffle.partitions", stateParts(s).toString)
     try {
-      val w0 = df.writeStream.format("memory").queryName(name).outputMode(mode)
+      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val q = checkpoint.fold(w0)(c => w0.option("checkpointLocation", c))
         .start()
       require(q.awaitTermination(300000), s"$name did not self-terminate")
     } finally s.conf.set("spark.sql.shuffle.partitions", saved)
@@ -175,7 +162,6 @@ object Streaming {
     */
   private[graft] def streamExecCheckpointRestart(s: SparkSession, d: String)
       : DataFrame = {
-    ensureNanosConf(s)
     val ev = events(s, d)
     val Array(minUs, maxUs) = ev
       .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
@@ -219,6 +205,7 @@ object Streaming {
     // + two source appends + the commit-log read, i.e. the restart
     // drill itself, not a plan defect.
     def runOnce(): Unit = {
+      // caller's session, not a child: see runToMemory
       val saved = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", stateParts(s).toString)
       try {
@@ -271,7 +258,7 @@ object Streaming {
   private def streamExecWindowAgg(s: SparkSession, d: String): DataFrame =
     runToMemory(s, "graft_exec_win",
       windowAgg(readEventStream(s, d).withWatermark("ts", "1 minute")),
-      "complete", statePartitions = Some(stateParts(s)))
+      "complete")
       .orderBy(col("window_start"), col("event_type"))
 
   /** The sliding-window aggregate executed BY the streaming engine
@@ -288,7 +275,7 @@ object Streaming {
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .select(col("w.start").as("window_start"), col("n"),
           col("sum_value")),
-      "complete", statePartitions = Some(stateParts(s)))
+      "complete")
       .orderBy(col("window_start"))
 
   /** Watermarked stream-stream interval join (the streaming form of
@@ -332,8 +319,7 @@ object Streaming {
         col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"))
       .select(col("click_event"), col("purchase_event"),
         col("c_user").as("user_id"))
-    runToMemory(s, "graft_exec_ssj", joined, "append",
-        statePartitions = Some(stateParts(s)))
+    runToMemory(s, "graft_exec_ssj", joined, "append")
       .orderBy(col("click_event"), col("purchase_event"))
   }
 
@@ -390,8 +376,7 @@ object Streaming {
       .filter(col("c_ts") <= lit(cutoff))
       .select(col("click_event"), col("purchase_event"),
         col("c_user").as("user_id"))
-    runToMemory(s, "graft_exec_ssj_outer", joined, "append",
-        statePartitions = Some(stateParts(s)))
+    runToMemory(s, "graft_exec_ssj_outer", joined, "append")
       .orderBy(col("click_event"), col("purchase_event"))
   }
 
@@ -416,7 +401,6 @@ object Streaming {
     * only shape batch contents, never the final aggregate.
     */
   private def streamExecMultiBatch(s: SparkSession, d: String): DataFrame = {
-    ensureNanosConf(s)
     val ev = events(s, d)
     val src = graft.Scratch.ensure(s,
       s"events_split4_${graft.Scratch.sanitize(d)}_" +
@@ -436,8 +420,7 @@ object Streaming {
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
     runToMemory(s, "graft_exec_multi",
-      windowAgg(stream.withWatermark("ts", "1 minute")), "complete",
-      statePartitions = Some(stateParts(s)))
+      windowAgg(stream.withWatermark("ts", "1 minute")), "complete")
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -452,7 +435,7 @@ object Streaming {
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type")),
-      "append", statePartitions = Some(stateParts(s)))
+      "append")
       .orderBy(col("user_id"), col("event_type"))
 
   /** [[streamSessionAgg]] executed BY the streaming engine: session
@@ -472,7 +455,7 @@ object Streaming {
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .select(col("user_id"), col("w.start").as("session_start"),
           col("n"), col("sum_value")),
-      "complete", statePartitions = Some(stateParts(s)))
+      "complete")
       .orderBy(col("user_id"), col("session_start"))
 
   /** Typed event row for the custom-state machine: `ts` (timestamp) rides
@@ -694,8 +677,7 @@ object Streaming {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(sessionFn)
     sessionRows(
-      runToMemory(s, "graft_exec_custom", sessions.toDF(), "append",
-        statePartitions = Some(stateParts(s))),
+      runToMemory(s, "graft_exec_custom", sessions.toDF(), "append"),
       cutoffUs)
   }
 
@@ -713,12 +695,12 @@ object Streaming {
       .transformWithState(new SessionProcessor, TimeMode.EventTime(),
         OutputMode.Append())
     val provKey = "spark.sql.streaming.stateStore.providerClass"
+    // caller's session, not a child: see runToMemory
     val saved = s.conf.getOption(provKey)
     s.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val sink =
-      try runToMemory(s, "graft_exec_tws", sessions.toDF(), "append",
-        statePartitions = Some(stateParts(s)))
+      try runToMemory(s, "graft_exec_tws", sessions.toDF(), "append")
       finally saved match {
         case Some(v) => s.conf.set(provKey, v)
         case None    => s.conf.unset(provKey)
@@ -752,8 +734,7 @@ object Streaming {
     val flags = typed.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(anomalyFn)
-    runToMemory(s, "graft_exec_anomaly", flags.toDF(), "append",
-        statePartitions = Some(stateParts(s)))
+    runToMemory(s, "graft_exec_anomaly", flags.toDF(), "append")
       .filter(col("ts_us") <= lit(cutoffUs))
       .select(col("event_id"), col("user_id"), col("n_hist"),
         col("is_anomaly"))
@@ -775,8 +756,7 @@ object Streaming {
       readEventStream(s, d).filter(col("user_id") >= lo && col("user_id") < hi)
         .withWatermark("ts", "1 minute")
     val unioned = branch(0L, 25L).unionAll(branch(25L, Long.MaxValue))
-    runToMemory(s, "graft_exec_union", windowAgg(unioned), "complete",
-        statePartitions = Some(stateParts(s)))
+    runToMemory(s, "graft_exec_union", windowAgg(unioned), "complete")
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -915,7 +895,6 @@ object Streaming {
   private[graft] def ingestOneBatch(acceptedDir: String, bandsDir: String)
       (df: DataFrame, batchId: Long): Unit = {
     val s = df.sparkSession
-    graft.functions.GraftFunctions.register(s)
     import graft.operators.{Dedup, TextAnalysis}
     import graft.functions.{GraftFunctions, TextFunctions => TF}
     // spread the drop across the session's cores BEFORE the extract
@@ -926,14 +905,15 @@ object Streaming {
     // (KBs/doc) once; the explicit partition count keeps AQE from
     // coalescing the small exchange back to one partition, and it is
     // cluster-width-adaptive, not a tuned constant.
-    // AQE scoped OFF for the whole batch fn (the Graph/Dedup loop
-    // pattern, restored in finally): each micro-batch runs ~5 tiny
-    // queries over a ≤drop-sized frame, and AQE's per-exchange
-    // re-optimization turns every one into extra job rounds + driver
-    // planning passes (r19 audit: 6 jobs for the probe alone, ~500 ms
-    // of between-job driver gap per batch). The exchanges here are
-    // drop-sized by construction — there is nothing for AQE to adapt.
-    // Same single-threaded-session caveat as the graph loops.
+    // AQE scoped OFF for the whole batch fn (restored in finally): each
+    // micro-batch runs ~5 tiny queries over a ≤drop-sized frame, and
+    // AQE's per-exchange re-optimization turns every one into extra job
+    // rounds + driver planning passes (r19 audit: 6 jobs for the probe
+    // alone, ~500 ms of between-job driver gap per batch). The exchanges
+    // here are drop-sized by construction — there is nothing for AQE to
+    // adapt.
+    // `s` is already the per-query clone foreachBatch hands each batch,
+    // so setting the conf here never reaches the caller's session.
     val savedAqe = s.conf.get("spark.sql.adaptive.enabled")
     s.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -1016,7 +996,9 @@ object Streaming {
           }
         def keepOnly(df: DataFrame): DataFrame =
           if (droppedIds.isEmpty) df
-          else df.filter(!col("doc_id").isin(droppedIds.toIndexedSeq: _*))
+          // a NULL doc_id is never a dropped id, but a bare NOT IN drops it
+          else df.filter(col("doc_id").isNull ||
+            !col("doc_id").isin(droppedIds.toIndexedSeq: _*))
         // coalesce(1): keep the pre-repartition on-disk layout (one file
         // per batch dir — the corpus reads re-list these dirs every
         // micro-batch); the single write task just drains the cached
@@ -1027,8 +1009,10 @@ object Streaming {
         label("bands write")
         keepOnly(newBands).coalesce(1).write.mode("overwrite")
           .parquet(s"$bandsDir/ingest_batch=$batchId")
+      } finally {
         s.sparkContext.setJobDescription(null)
-      } finally { batch.unpersist(blocking = false); () }
+        batch.unpersist(blocking = false)
+      }
     }
     } finally s.conf.set("spark.sql.adaptive.enabled", savedAqe)
   }
@@ -1187,8 +1171,7 @@ object Streaming {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       .select(col("c_mktsegment").as("segment"), col("n"), col("sum_value"))
-    runToMemory(s, "graft_exec_static", joined, "complete",
-        statePartitions = Some(stateParts(s)))
+    runToMemory(s, "graft_exec_static", joined, "complete")
       .orderBy(col("segment"))
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, HashImpls, TextFunctions => TF}
+import graft.functions.{GraftFunctions, HashImpls}
 
 class HashExpressionsSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -1596,7 +1596,7 @@ class StreamingSpec extends AnyFunSuite {
     val counted = ev.groupByKey(_._1).flatMapGroupsWithState[Long, (Long, Long)](
       org.apache.spark.sql.streaming.OutputMode.Append,
       GroupStateTimeout.NoTimeout) {
-      (uid: Long, rows: Iterator[(Long, Long)], st: GroupState[Long]) =>
+      (uid: Long, rows: Iterator[(Long, Long)], _: GroupState[Long]) =>
         val ts = rows.map(_._2).toArray.sorted
         var sessions = if (ts.isEmpty) 0L else 1L
         ts.zip(ts.tail).foreach { case (a, b) => if (b - a >= gapSec) sessions += 1 }
@@ -1670,7 +1670,6 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("join_fuzzy_best reduces the pair set to the per-left best match") {
-    import org.apache.spark.sql.functions.col
     val pairs = operators.Dedup.queries("join_fuzzy")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val want = pairs.groupBy(_._1).map { case (a, xs) =>
@@ -1689,7 +1688,6 @@ class TextPipelineSpec extends AnyFunSuite {
     // fixture can't: docs with zero query-term hits (score exactly 0),
     // identical docs (score ties broken by doc_id), single-doc corpora
     // (idf = 0.5/0.5 when the one doc contains the term)
-    import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(42)
     val vocab = Vector("a", "b", "c", "dd", "ee")
     val terms = Seq("a", "dd")
@@ -2497,7 +2495,6 @@ class TextPipelineSpec extends AnyFunSuite {
     // this fixture the true hit count is tiny, so candidates must be well
     // under the total corpus shingle volume (a ≥ 50% pass proves the
     // prefilter did nothing).
-    import spark.implicits._
     GraftFunctions.register(spark)
     val totalShingles = train.select(explode(
         GraftFunctions.word_shingles(

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Storage hygiene: the dedup/similarity operators cache shared
@@ -103,6 +105,46 @@ class HygieneSpec extends AnyFunSuite {
         "cacheManager still holds registered datasets after release")
     }
   }
+
+  // -- source hygiene: one session factory, one function-install path,
+  // loop confs only ever on a child session the operator just created
+  private def scalaSources(root: String): Seq[(String, Seq[String])] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(new java.io.File(root)).map { f =>
+      f.getPath -> java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
+    }
+  }
+  private val mainSrc = "src/main/scala/graft"
+
+  test("source: SessionContext.local is the only session builder under src/") {
+    val needle = "SparkSession" + ".builder" // not a hit in this file
+    val hits = scalaSources("src").collect {
+      case (f, ls) if ls.exists(_.contains(needle)) => f
+    }
+    assert(hits == Seq(s"$mainSrc/context/SessionContext.scala"), hits)
+  }
+
+  test("source: operators install no functions themselves") {
+    val hits = Seq("operators", "streaming").flatMap(d => scalaSources(s"$mainSrc/$d"))
+      .collect { case (f, ls) if ls.exists(_.contains("GraftFunctions.register(")) => f }
+    assert(hits.isEmpty, s"GraftFunctions.register in $hits — " +
+      "SessionContext.local's extension and SparkEntry.queries install them")
+  }
+
+  test("source: operators set confs only on a session they just created") {
+    val set = raw"(\w+)\.conf\.(?:set|unset)\(".r
+    val child = raw"val (\w+) = \w+\.newSession\(\)".r
+    val bad = scalaSources(s"$mainSrc/operators").flatMap { case (f, ls) =>
+      val children = ls.flatMap(l => child.findAllMatchIn(l).map(_.group(1))).toSet
+      ls.zipWithIndex.flatMap { case (l, i) =>
+        set.findAllMatchIn(l).map(_.group(1)).filterNot(children)
+          .map(v => s"$f:${i + 1}: $v")
+      }
+    }
+    assert(bad.isEmpty, s"conf set on a caller's session: ${bad.mkString("; ")}")
+  }
 }
 
 /** The driver regenerates /root/testdata between rounds and has already
@@ -141,6 +183,31 @@ class FixtureLoadSpec extends AnyFunSuite {
       assert(gotMap == want, s"$enc encoding changed instants")
     }
   }
+
+  test("parquetSchema memo is keyed on the session's timestamp-inference confs") {
+    // a foreign-writer NTZ column, as the pyarrow fixtures carry it: a
+    // Spark-written copy stores its own schema in the footer, which wins
+    // over the inference conf
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val p = s"${tempDir("graft_ts_memo")}/events.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(MICROS,false)); }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p), spark.sparkContext.hadoopConfiguration))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 0L))
+    finally w.close()
+    assert(Tables.parquetSchema(spark, p)("ts").dataType == TimestampNTZType)
+    val child = spark.newSession()
+    child.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val got = Tables.parquetSchema(child, p)("ts").dataType
+    assert(got == TimestampType,
+      s"memo served the NTZ schema to a session that infers TIMESTAMP: $got")
+  }
+
 }
 
 /** The reference enumerates 7 parquet writer codecs
@@ -283,7 +350,6 @@ class OracleTypeConventionSpec extends AnyFunSuite {
   * breaks the budget fails HERE, in a test, instead of failing the round.
   */
 class BenchBudgetSpec extends AnyFunSuite {
-  import scala.jdk.CollectionConverters._
 
   private lazy val root = {
     val f = new java.io.File("bench_baseline.json")

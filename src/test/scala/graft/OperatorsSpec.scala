@@ -312,7 +312,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("emb_quantize_int8 equals a local float->double->floor replay; map-only") {
-    import org.apache.spark.sql.functions.col
     val vecs = Tables.load(spark, sfDir, "embeddings")
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
@@ -605,7 +604,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("ts_resample buckets are 15-minute aligned and partition the events") {
-    import org.apache.spark.sql.functions._
     val rows = operators.Relational.queries("ts_resample")(spark, sfDir)
       .collect()
     assert(rows.nonEmpty)

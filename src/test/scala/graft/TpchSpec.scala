@@ -4,24 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      // the deployment-style install: function surface arrives via the
-      // extensions conf, not imperative register() (which operators still
-      // call idempotently) — HashExpressionsSpec proves a fresh
-      // newSession() resolves the functions with no register() call
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the factory installs graft's functions via spark.sql.extensions, so
+  // HashExpressionsSpec can prove a fresh newSession() resolves them
+  // with no register() call
+  lazy val spark: SparkSession = context.SessionContext.local(8, 8).spark
   val sfDir = "/root/testdata/sf0.001"
 
   /** Temp dir recursively deleted when the test JVM exits — bare

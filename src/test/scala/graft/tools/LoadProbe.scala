@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only micro-probe for the Tables.load schema memo: times N
   * register-all passes (the per-row fixed cost every bench row pays)
   * with inference (spark.read.parquet) vs the memoized path
@@ -11,12 +9,8 @@ object LoadProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = args.drop(1).headOption.map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.context.SessionContext.local(cpus, cpus).spark
     spark.sparkContext.setLogLevel("ERROR")
     // warm both paths once (classload, first footer read)
     graft.Tables.registerAll(spark, dir)

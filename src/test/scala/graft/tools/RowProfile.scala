@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only profile harness for optimization rounds: runs named
   * `SparkEntry.queries` rows end-to-end (t0 before construction, noop
@@ -19,15 +18,8 @@ object RowProfile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RowProfile <sfDir> <row> [<row>...]")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.context.SessionContext.local(cpus, cpus).spark
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
