@@ -460,6 +460,17 @@ object Bench {
       s""""stream_rotated_n":$streamRotatedN,$sf1,$spill,$load,$budget,""" +
       s""""sf":"$sfDir"}""")
 
+  /** Compact failures fragment: the first 2, each message clipped to 40
+    * chars AFTER escaping (escaping expands a clipped message up to 6×,
+    * so clipping first let the fixed core outgrow its modeled worst
+    * case), plus the full count — a mass-failure round is red regardless;
+    * the evidence is the count and the full artifact's complete map.
+    */
+  private[graft] def failedCompact(failed: Seq[(String, String)]): String =
+    failed.take(2).map { case (k, e) =>
+      s""""$k":"${Json.escapeClipped(e, 40)}""""
+    }.mkString("{", ",", s"""},"failed_n":${failed.size}""")
+
   /** Largest top-N prefix of `slowest` whose line fits `budget`; always
     * returns SOMETHING parseable (the zero-entry line as last resort).
     */
@@ -1384,14 +1395,8 @@ object Bench {
       case (k, (s, q, _, _)) =>
         s""""$k":{"suite":${r3(s)},"quiesced":${r3(q)}}"""
     }.mkString("{", ",", "}")
-    // failures: first 2, messages clipped to 40 chars, plus the full count
-    // (a mass-failure round is red regardless; the evidence is the count
-    // and the full artifact's complete map)
     val failedAll = (results.collect { case (k, Left(e)) => k -> e } ++
       sf1.collect { case (k, Some(Left(e))) => k -> e })
-    val failedCompact = failedAll.take(2).map { case (k, e) =>
-      s""""$k":"${Json.escape(e.take(40))}""""
-    }.mkString("{", ",", s"""},"failed_n":${failedAll.size}""")
     // sf1: ONLY the 3 acceptance headliners plus a ran-count — the full
     // rotation set (14+ keys, ~450 chars in r18) is what pushed the core
     // past budget; every point still rides the full artifact
@@ -1434,7 +1439,7 @@ object Bench {
       s""""partial":$truncatedSuite"""
     val (cPrefix, cSuffix) = compactParts(
       headlineCompact, adaptiveCompact, cpus, names.size, outPathStr,
-      failedCompact, requeriedCompact, acceptRecheckJson,
+      failedCompact(failedAll), requeriedCompact, acceptRecheckJson,
       sf1Tagged.count(_._3), floorCompact, streamRotatedOut.size,
       sf1Compact, spillCompact, loadCompact, budgetCompactSlim, sfDir)
     val slowest = names.filter(measured)

@@ -15,5 +15,16 @@ object Json {
     case c => c.toString
   }
 
+  /** [[escape]] clipped to at most `max` chars. Whole escape sequences
+    * are kept or dropped together, so the result never ends in a dangling
+    * backslash or a cut-off unicode escape.
+    */
+  def escapeClipped(s: String, max: Int): String = {
+    val out = new StringBuilder
+    val it = s.iterator.map(c => escape(c.toString)).buffered
+    while (it.hasNext && out.length + it.head.length <= max) out ++= it.next()
+    out.result()
+  }
+
   def quote(s: String): String = "\"" + escape(s) + "\""
 }

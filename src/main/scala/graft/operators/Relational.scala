@@ -205,21 +205,50 @@ object Relational {
     * 5 codecs whose implementations ship with Spark (none/snappy/gzip/lz4/
     * zstd); brotli and lzo need native codec jars absent from this
     * environment, so they stay API-only ([[Compression]]).
+    *
+    * The five writes are independent small jobs whose wall time is file
+    * commit and schema-inference round-trips, so each codec's write and
+    * its own inferring read-back run on a fresh thread, overlapped. Fresh
+    * threads, not a pool: Spark's local properties (job tags, job
+    * description) and the active session are inheritable thread-locals
+    * copied at thread creation, so a per-call thread carries the caller's
+    * labels while a reused pool thread would carry stale ones. Each codec
+    * keeps its own inferring read, so a codec that wrote a different
+    * schema still fails `unionByName`.
     */
   private def parquetSinkCodecs(s: SparkSession, d: String): DataFrame = {
     val ctx = new SessionContext(s)
-    val src = ord(s, d)
-    val codecs = Seq(Compression.None_, Compression.Snappy, Compression.Gzip,
-                     Compression.Lz4, Compression.Zstd)
-    for (c <- codecs)
-      ctx.writeParquet(src.filter(col("o_orderstatus") === "F"),
-                       scratch(s"orders_${Compression.option(c)}"), c)
-    Seq("snappy", "gzip", "lz4", "zstd")
-      .map(c => ctx.readParquet(scratch(s"orders_$c")))
+    val src = ord(s, d).filter(col("o_orderstatus") === "F")
+    val readBack = Seq(Compression.Snappy, Compression.Gzip, Compression.Lz4,
+                       Compression.Zstd)
+    val jobs = (Compression.None_ +: readBack).map { c =>
+      val path = scratch(s"orders_${Compression.option(c)}") // caller's thread
+      () => {
+        ctx.writeParquet(src, path, c)
+        Option.when(readBack.contains(c))(ctx.readParquet(path))
+      }
+    }
+    onFreshThreads(jobs).flatten
       .reduce(_ unionByName _)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
       .orderBy(col("o_orderpriority"))
+  }
+
+  /** Runs each job on its own newly created thread (inheriting the
+    * caller's Spark local properties and active session), waits for all,
+    * and rethrows the first failure in job order.
+    */
+  private def onFreshThreads[A](jobs: Seq[() => A]): Seq[A] = {
+    val out = new Array[Either[Throwable, A]](jobs.size)
+    val threads = jobs.zipWithIndex.map { case (job, i) =>
+      new Thread(() =>
+        out(i) = try Right(job()) catch { case t: Throwable => Left(t) },
+        s"graft-sink-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    out.toSeq.map(_.fold(throw _, identity))
   }
 
   /** SQL DDL external-table registration — the reference's

@@ -83,51 +83,72 @@ object Streaming {
         .option("pathGlobFilter", "events.parquet").parquet(d))
   }
 
+  /** State-store width for every stateful exec row:
+    * `min(8, max(1, defaultParallelism / 2))` — 4 cores → 2, 8 → 4,
+    * ≥16 → 8 — overridable per session with
+    * `spark.graft.stream.statePartitions`.
+    *
+    * The store count is bound to `spark.sql.shuffle.partitions` at query
+    * start, and EVERY store commits per micro-batch whether or not it
+    * holds state. A commit is fixed checkpoint I/O: the state delta and
+    * its checksum file (Spark's checkpoint checksums stay on), each
+    * written on its own pool thread and awaited, plus a per-store
+    * maintenance thread and directory creation. Per-batch wall time is
+    * stores × batches × files, not data volume, while state fits (every
+    * one of these rows holds <10 MB), so the width follows the instance,
+    * not a constant: half the cores keeps the stateful stage parallel
+    * while cutting the commits (on 4 cores at sf0.01 the inner interval
+    * join read 2.16/1.93/1.52/1.38 s at widths 8/4/2/1). At
+    * scale the override is RAISED for state CAPACITY: target
+    * ~100-500 MB of state per store, e.g. 1 TB of join/session state
+    * wants ~2-10k partitions. Results are partitioning-independent
+    * (StreamingSpec runs the stateful rows at widths 1 and 8 and
+    * requires identical rows).
+    */
+  private[graft] def stateParts(s: SparkSession): Int =
+    s.conf.getOption("spark.graft.stream.statePartitions").map(_.toInt)
+      .getOrElse(math.min(8, math.max(1, s.sparkContext.defaultParallelism / 2)))
+
   /** Runs a streaming DataFrame to completion under Trigger.AvailableNow
     * into a memory sink and returns the sink table. AvailableNow is the
     * operational backfill contract — bounded micro-batches over everything
     * currently in the source, then self-termination, no external stop
     * signal — so a driver row can gate the REAL streaming execution path
     * (streaming source → watermark → state store → sink) against a batch
-    * DuckDB oracle, not just the batch twin of the same plan.
+    * DuckDB oracle, not just the batch twin of the same plan. State width
+    * is [[stateParts]].
+    *
+    * `trailingBatch = false` skips the watermark-only micro-batch that
+    * AvailableNow runs after the data drains
+    * (`spark.sql.streaming.noDataMicroBatches.enabled`, scoped to this
+    * query). That batch only advances the watermark to evict state; it is
+    * SAFE TO SKIP ONLY WHERE NO OUTPUT ROW WAITS ON EVICTION — rows that
+    * emit at first sight or at match time. Rows that emit on eviction
+    * (outer joins, timeouts, append-mode windows) lose output without it,
+    * so the default keeps it and a caller that forgets is only slower.
     */
-  /** State-store count is bound to
-    * spark.sql.shuffle.partitions at query start, and EVERY store commits
-    * per micro-batch whether or not it holds state — the r6 cost audit of
-    * the interval join measured the commit machinery (32 partitions × 4
-    * stores × 2 batches), not data volume, as the wall time. Sizing the
-    * store count to the actual state volume is the real operational knob
-    * (at 100 TB you raise it for state CAPACITY, here ~9 MB of state
-    * wants few stores); results are partitioning-independent either way.
-    */
-  /** State-store width for every stateful exec row, as session conf
-    * `spark.graft.stream.statePartitions` (VERDICT r18 item 4: the r18
-    * remedy landed as a hard-coded `Some(8)` in 8 call sites — sound but
-    * not operator-visible). SIZING RULE: per-micro-batch wall time is
-    * store commits × partitions while state fits (every one of these
-    * rows holds <10 MB of state — the measured r7 interval-join audit),
-    * so default LOW (8) and raise for state CAPACITY at scale: target
-    * ~100-500 MB of state per store, e.g. 1 TB of join/session state
-    * wants ~2-10k partitions. Results are partitioning-independent
-    * (every row is oracle-gated at both widths).
-    */
-  private[graft] def stateParts(s: SparkSession): Int =
-    s.conf.get("spark.graft.stream.statePartitions", "8").toInt
   private def runToMemory(s: SparkSession, name: String, df: DataFrame,
-                          mode: String): DataFrame = {
+                          mode: String,
+                          trailingBatch: Boolean = true): DataFrame = {
     s.catalog.dropTempView(name) // re-runs in one session replace the sink
     // Set and restored on the CALLER's session, not a newSession() child:
     // StreamingQueryListener and QueryExecutionListener buses are per
     // session, so a query started in a child is invisible to listeners
     // the caller attached (perfbench --trace reads both).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts(s).toString)
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> stateParts(s).toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> trailingBatch.toString)
+    val saved = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
+    scoped.foreach { case (k, v) => s.conf.set(k, v) }
     try {
       val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       require(q.awaitTermination(300000), s"$name did not self-terminate")
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    } finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
     s.table(name)
   }
 
@@ -243,17 +264,17 @@ object Streaming {
 
   /** [[windowAgg]] executed BY the streaming engine (complete mode,
     * 1-minute watermark) — same oracle as the batch twin.
-    */
-  /** r18: every stateful exec row now sizes its state-store count to the
-    * row's ACTUAL state volume (`statePartitions = 8`, the r7
-    * interval-join remedy applied uniformly — see the cost audit on
-    * [[streamExecIntervalJoin]]: per-micro-batch wall time is store
-    * commits × partitions, not data volume, and every one of these rows
-    * holds well under 10 MB of state). Results are partitioning-
-    * independent (each row is oracle-gated); at 100 TB the same knob is
-    * RAISED for state capacity. Measured on the defaulted rows before
-    * the change (32 stores, sf0.1): 99–134 tasks / 18–58 task-seconds
-    * per row — commit machinery, not computation.
+    *
+    * Every stateful exec row sizes its state-store count with
+    * [[stateParts]] (derived from the cores, not the session's shuffle
+    * width): per-micro-batch wall time is store commits ×
+    * partitions, not data volume — each commit is a state delta plus its
+    * checksum file — and every one of these rows holds well under 10 MB
+    * of state. Results are partitioning-independent (each row is
+    * oracle-gated); at 100 TB the same knob is RAISED for state
+    * capacity. Measured on the defaulted rows at 32 stores (sf0.1):
+    * 99–134 tasks / 18–58 task-seconds per row — commit machinery, not
+    * computation.
     */
   private def streamExecWindowAgg(s: SparkSession, d: String): DataFrame =
     runToMemory(s, "graft_exec_win",
@@ -298,10 +319,14 @@ object Streaming {
     * either backend; RocksDB pays off when per-partition state outgrows
     * executor heap, which this fixture cannot reach. Acting on that
     * audit (r7): state-store count sized to the ~9 MB of actual state
-    * (`statePartitions = 8`) took the row 8.25 s → 3.5 s at 32 cpus —
-    * the commit machinery was indeed the cost, and store count per
-    * state volume is the knob (raised for capacity at 100 TB, lowered
-    * here).
+    * (8 stores, today [[stateParts]]) took the row 8.25 s → 3.5 s at 32
+    * cpus — the commit machinery was indeed the cost, and store count
+    * per state volume is the knob (raised for capacity at 100 TB,
+    * lowered here). Inner matches emit at match time, so no output row
+    * waits on the watermark-only batch 1: the row skips it
+    * (`trailingBatch = false`) and runs one micro-batch. The eviction
+    * itself is still executed and spec-gated on the LEFT OUTER twin
+    * below, whose null-padded rows are produced by it.
     */
   private def streamExecIntervalJoin(s: SparkSession, d: String): DataFrame = {
     val ev = readEventStream(s, d)
@@ -319,7 +344,7 @@ object Streaming {
         col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"))
       .select(col("click_event"), col("purchase_event"),
         col("c_user").as("user_id"))
-    runToMemory(s, "graft_exec_ssj", joined, "append")
+    runToMemory(s, "graft_exec_ssj", joined, "append", trailingBatch = false)
       .orderBy(col("click_event"), col("purchase_event"))
   }
 
@@ -427,6 +452,8 @@ object Streaming {
   /** Streaming dedup (dropDuplicatesWithinWatermark) executed end-to-end.
     * Which representative row survives is arrival-dependent, so the row
     * returns only the key set — deterministic, and exactly batch DISTINCT.
+    * A key emits at first sight, so the watermark-only trailing batch
+    * (which would only evict dedup state) is skipped: one micro-batch.
     */
   private def streamExecDedup(s: SparkSession, d: String): DataFrame =
     runToMemory(s, "graft_exec_dedup",
@@ -435,7 +462,7 @@ object Streaming {
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type")),
-      "append")
+      "append", trailingBatch = false)
       .orderBy(col("user_id"), col("event_type"))
 
   /** [[streamSessionAgg]] executed BY the streaming engine: session

@@ -20,15 +20,19 @@ class BenchCompactSpec extends AnyFunSuite {
   // longest declared row name (the realistic worst key width everywhere)
   private val longName = SparkEntry.queries.keys.maxBy(_.length)
 
+  // every char escapes to two, so clipping before escaping ships 80
+  private val WorstMessage = "\"\\" * 20
+
   private def worstCore: (String, String) = {
     val headline =
       """"value":9999.999,"timed_total":9999.999,"timed_n":282,""" +
         """"partial":false"""
     val adaptive =
       """"adaptive":{"single_run":282,"full_iters":282},"contended":false"""
-    // failed: capped at 2 entries, messages clipped to 40 chars, + count
-    val failed = Seq.fill(2)(
-      s""""$longName":"${"E" * 40}"""").mkString("{", ",", "},\"failed_n\":99")
+    // failed: capped at 2 entries, + count; each message is one that
+    // escaping doubles (quotes and backslashes), clipped by the real
+    // fragment builder
+    val failed = Bench.failedCompact(Seq.fill(99)(longName -> WorstMessage))
     // requeried: capped at 2 entries
     val requeried = Seq.fill(2)(
       s""""$longName":{"suite":9999.999,"quiesced":9999.999}""")
@@ -76,6 +80,19 @@ class BenchCompactSpec extends AnyFunSuite {
     val tree = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(line)
     assert(tree.path("queries").size() == fitted)
+  }
+
+  test("failure messages are clipped after escaping, on escape boundaries") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // a 39-char prefix leaves room for half of the trailing "\\" only
+    for (msg <- Seq(WorstMessage, "a" * 39 + "\\", "a" * 38 + "\u0001",
+                    "x" * 500)) {
+      val frag = Bench.failedCompact(Seq("row" -> msg))
+      val clipped = mapper.readTree(s"""{"failed":$frag}""")
+        .path("failed").path("row").asText
+      assert(Json.escape(clipped).length <= 40, frag)
+      assert(msg.startsWith(clipped), frag)
+    }
   }
 
   test("fitCompact degrades to zero entries, never exceeds the budget") {

@@ -1188,6 +1188,71 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("stateful exec rows return identical rows at state widths 1 and 8") {
+    // results must not depend on the state-store count (stateParts):
+    // each width runs in its own child session, so the conf never
+    // touches the shared one
+    def rowsAt(width: Int, row: String): Seq[String] = {
+      val child = spark.newSession()
+      child.conf.set("spark.graft.stream.statePartitions", width.toString)
+      SparkEntry.queries(row)(child, sfDir).collect().map(_.toString)
+        .toSeq.sorted
+    }
+    for (row <- Seq("stream_exec_window_agg", "stream_exec_dedup",
+                    "stream_exec_interval_join",
+                    "stream_exec_interval_join_outer",
+                    "stream_exec_custom_state")) {
+      val one = rowsAt(1, row)
+      assert(one.nonEmpty, s"$row returned no rows")
+      assert(one == rowsAt(8, row), s"$row differs between widths 1 and 8")
+    }
+  }
+
+  test("dedup and inner join run one micro-batch; the outer join's eviction batch shrinks state") {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    import StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val names = Set("graft_exec_dedup", "graft_exec_ssj", "graft_exec_ssj_outer")
+    val started = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (names(e.name)) started.put(e.id, e.name): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (names(e.progress.name)) progress.add(e.progress): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (started.containsKey(e.id)) ended.add(e.id): Unit
+    }
+    spark.streams.addListener(listener)
+    try {
+      for (row <- Seq("stream_exec_dedup", "stream_exec_interval_join",
+                      "stream_exec_interval_join_outer"))
+        SparkEntry.queries(row)(spark, sfDir).collect()
+      // listener events drain asynchronously off the bus; a query's
+      // terminated event follows all of its progress events
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (ended.size < names.size && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(ended.size == names.size, s"saw terminations of $started")
+      val byName = progress.asScala.toSeq.groupBy(_.name)
+        .map { case (n, ps) => n -> ps.sortBy(_.batchId) }
+      def batches(n: String) = byName.getOrElse(n, Nil)
+      assert(batches("graft_exec_dedup").size == 1,
+        s"dedup batches: ${batches("graft_exec_dedup").map(_.batchId)}")
+      assert(batches("graft_exec_ssj").size == 1,
+        s"inner join batches: ${batches("graft_exec_ssj").map(_.batchId)}")
+      // the outer row still runs the watermark-only batch, and it EVICTS:
+      // the watermark bounds the join state
+      val outer = batches("graft_exec_ssj_outer")
+      assert(outer.size >= 2, s"outer join batches: ${outer.map(_.batchId)}")
+      def stateRows(p: StreamingQueryProgress) =
+        p.stateOperators.map(_.numRowsTotal).sum
+      assert(stateRows(outer.last) < stateRows(outer.head),
+        s"state rows per batch: ${outer.map(stateRows)}")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("stream_exec_anomaly equals the batch verdicts on the emitted region") {
     import org.apache.spark.sql.functions._
     val got = SparkEntry.queries("stream_exec_anomaly")(spark, sfDir)

@@ -50,6 +50,54 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("sink_parquet_codecs: overlapped writes carry the caller's job tag, leave no _temporary") {
+    // the codec writes run on fresh threads; every job they start must
+    // carry the CURRENT caller's tags, not those of an earlier call (a
+    // reused pool thread would keep the first call's). Job ids are
+    // assigned in submission order, so the window is the ids between two
+    // tagged sentinel jobs.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Set[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.jobId -> Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty)): Unit
+    }
+    def tagged[A](tag: String)(body: => A): A = {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+    }
+    def idOf(tag: String) = jobs.asScala.find(_._2(tag)).map(_._1)
+    sc.addSparkListener(listener)
+    try {
+      tagged("pb-earlier") {
+        SparkEntry.queries("sink_parquet_codecs")(spark, sfDir).collect()
+      }
+      tagged("pb-before")(sc.parallelize(Seq(1), 1).count())
+      tagged("pb-sink") {
+        SparkEntry.queries("sink_parquet_codecs")(spark, sfDir).collect()
+      }
+      tagged("pb-after")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (idOf("pb-after").isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      val (lo, hi) = (idOf("pb-before").get, idOf("pb-after").get)
+      val window = jobs.asScala.toSeq.filter { case (id, _) => id > lo && id < hi }
+      assert(window.nonEmpty, "the sink row started no job")
+      assert(window.forall(_._2("pb-sink")),
+        s"untagged jobs in the sink window: ${window.filterNot(_._2("pb-sink"))}")
+    } finally sc.removeSparkListener(listener)
+    val dirs = Seq("none", "snappy", "gzip", "lz4", "zstd")
+      .map(c => new java.io.File(Scratch.root(spark), s"orders_$c"))
+    assert(dirs.forall(d => new java.io.File(d, "_SUCCESS").exists()),
+      s"a codec write did not commit: $dirs")
+    val leftovers = dirs.filter(d => new java.io.File(d, "_temporary").exists())
+    assert(leftovers.isEmpty, s"uncommitted writes left behind: $leftovers")
+  }
+
   test("asof struct pairing survives a NULL-valued right row (both directions)") {
     // ADVICE r11: the struct-pairing fix (asof_event and asof_value must
     // come from the SAME right row) was unguarded — the fixture never
