@@ -61,10 +61,9 @@ import org.apache.spark.sql.functions._
   *    carry the sum and count of everything successfully timed even when
   *    a failure or truncation nulls "value" (a broken query must never
   *    make the total look better, but a partial total is still evidence);
-  *  - the non-headline sf1 canaries rotate in thirds per 6-hour bucket
-  *    (they exist to catch shape regressions, which survive being
-  *    re-checked every third round); sf1_q1/q18 and the slowest canary
-  *    run every round, in the acceptance phase;
+  *  - every row and every sf1 point is timed in every run: sf1_q1/q18
+  *    and the slowest canary in the acceptance phase, the other sf1
+  *    canaries after the suite;
   *  - queries run in sorted name order for run-to-run comparability;
   *  - `SPARK_GRAFT_BENCH_ONLY=q1,q2` restricts the run to named queries
   *    (dev iteration aid; the driver runs the full set);
@@ -348,56 +347,13 @@ object Bench {
     // join's required 100×-pair output) scales with replication
     "sf1_join_fuzzy" -> "join_fuzzy")
 
-  /** Always-run sf1 points — the ACCEPTANCE PHASE set, measured before
+  /** Headline sf1 points — the ACCEPTANCE PHASE set, measured before
     * anything else in the fresh JVM: the BASELINE.md-comparable headliners
     * (q1 is THE published reference number) plus the slowest canary
     * (dedup_semantic — the one the r13 verdict asked to re-confirm).
     */
   private[graft] val Sf1Headline: Set[String] =
     Set("sf1_q1", "sf1_q18", "sf1_dedup_semantic")
-
-  /** Rotation group for this run: the 20+ non-headline canaries are the
-    * reason the r13 suite outgrew the driver's budget, and each exists to
-    * catch a SHAPE regression (a linear claim going quadratic) — a
-    * guarantee that survives being re-checked every third round. 6-hour
-    * epoch buckets rotate the group between driver rounds (~6 h apart)
-    * while staying stable within one run.
-    */
-  private[graft] val Sf1RotationGroups = 3
-  private val sf1Rotation: Int =
-    ((System.currentTimeMillis() / 21600000L) % Sf1RotationGroups).toInt
-  private def sf1Active(key: String): Boolean =
-    Sf1Headline(key) || {
-      val idx = Sf1Points.indexWhere(_._1 == key)
-      idx % Sf1RotationGroups == sf1Rotation
-    }
-
-  /** Suite rows that EXECUTE real streaming machinery every round
-    * (checkpointed micro-batches, kill-and-restart drills, RocksDB
-    * transformWithState) — ~31 s of single-run steady-state cost that
-    * gates engine behavior changing only when the streaming code
-    * changes (VERDICT r15 item 6). They rotate in thirds on the same
-    * 6-hour epoch bucket as the sf1 canaries; rotated-out rows are
-    * recorded under "stream_rotation_skipped" and excluded from the
-    * run's name set (the headline "value" sums the rows that RAN — same
-    * convention as a deadline-truncated suite, except here the artifact
-    * says exactly which rows rotated out and why). The driver's
-    * CORRECTNESS gate still runs every row every round — rotation only
-    * trims re-TIMING them.
-    */
-  private[graft] val StreamRotationRows: Seq[String] = Seq(
-    "pipeline_streaming_ingest", "stream_exec_anomaly",
-    "stream_exec_ckpt_restart", "stream_exec_custom_state",
-    "stream_exec_dedup", "stream_exec_foreach_batch",
-    "stream_exec_interval_join", "stream_exec_interval_join_outer",
-    "stream_exec_multi_batch", "stream_exec_session",
-    "stream_exec_sliding_agg", "stream_exec_static_join",
-    "stream_exec_tws_session", "stream_exec_union",
-    "stream_exec_window_agg")
-  private def streamActive(name: String): Boolean = {
-    val idx = StreamRotationRows.indexOf(name)
-    idx < 0 || idx % Sf1RotationGroups == sf1Rotation
-  }
 
   /** 1-minute system load average, or -1 where the JMX bean lacks it —
     * recorded at both ends of the run so machine-wide contention (r7: the
@@ -450,14 +406,14 @@ object Bench {
   private[graft] def compactParts(headline: String, adaptive: String,
       cpus: String, queriesTotal: Int, fullPath: String, failed: String,
       requeried: String, acceptRecheck: String, sf1MinMergedN: Int,
-      floor: String, streamRotatedN: Int, sf1: String, spill: String,
+      floor: String, sf1: String, spill: String,
       load: String, budget: String, sfDir: String): (String, String) = (
     s"""{"metric":"total",$headline,"unit":"sec",$adaptive,""" +
       s""""cpus":"$cpus","queries":""",
     s""","queries_total":$queriesTotal,"full":"$fullPath",""" +
       s""""failed":$failed,"requeried":$requeried,$acceptRecheck,""" +
       s""""sf1_min_merged_n":$sf1MinMergedN,$floor,""" +
-      s""""stream_rotated_n":$streamRotatedN,$sf1,$spill,$load,$budget,""" +
+      s"""$sf1,$spill,$load,$budget,""" +
       s""""sf":"$sfDir"}""")
 
   /** Compact failures fragment: the first 2, each message clipped to 40
@@ -584,8 +540,8 @@ object Bench {
           // sf1 canaries live at the top level of the emitted format;
           // they deserve the same outlier re-measurement as suite rows.
           // Restricted to ACTUAL Sf1Points keys (ADVICE r14: a bare
-          // startsWith("sf1_") also ingested the emitted "sf1_rotation"
-          // field whenever an artifact was committed as the baseline)
+          // startsWith("sf1_") would also ingest any other sf1_-prefixed
+          // field of an artifact committed as the baseline)
           val sf1Keys = Sf1Points.map(_._1).toSet
           val sf1 = root.fieldNames().asScala
             .filter(k => sf1Keys(k) && root.get(k).isNumber)
@@ -732,15 +688,8 @@ object Bench {
 
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // which sf1 points run THIS round: an explicit dev filter names them
-    // outright; otherwise the rotation group plus the always-run headline
-    // set (r13 rc=124 remedy — 26 canaries × Iters on 10× data was the
-    // single biggest phase, and shape regressions survive being
-    // re-checked every third round)
-    def sf1Runs(key: String): Boolean = only match {
-      case Some(f) => f.contains(key)
-      case None => sf1Active(key)
-    }
+    // every sf1 point runs unless a dev filter leaves it out
+    def sf1Runs(key: String): Boolean = only.forall(_.contains(key))
     // per-point cost estimate for deadline checks (unknown points assume
     // 5 s/iter); single-run mode pays ~1 measured run + slack
     def sf1CostEst(key: String): Double =
@@ -822,29 +771,16 @@ object Bench {
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
         "spark.shuffle.spill.numElementsForceSpillThreshold" -> "10000").spark
       s2.sparkContext.setLogLevel("ERROR")
-      val spilledMem = new java.util.concurrent.atomic.AtomicLong
-      val spilledDisk = new java.util.concurrent.atomic.AtomicLong
-      s2.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = e.taskMetrics
-            if (m != null) {
-              spilledMem.addAndGet(m.memoryBytesSpilled)
-              spilledDisk.addAndGet(m.diskBytesSpilled): Unit
-            }
-          }
-        })
+      val metrics = RowMetrics.attach(s2)
       // two spill points under the same squeezed session (VERDICT r16
       // item 7): the shuffle-heavy dedup aggregate AND the largest
       // window+hash-aggregate row (scd2_history — per-user running
       // windows over the ×10 events sort through UnsafeExternalSorter's
       // forced threshold, and the island aggregate takes the fallback),
       // so both halves of the 100 TB degradation story carry task-metric
-      // evidence. Counters reset between points so each point's bytes
-      // are its own.
+      // evidence. Each point takes only its own jobs' bytes.
       def spillPoint(key: String, query: String): String = {
-        spilledMem.set(0); spilledDisk.set(0)
+        metrics.take()
         val t0 = System.nanoTime()
         val res = try {
           SparkEntry.queries(query)(s2, dir)
@@ -853,28 +789,15 @@ object Bench {
         } catch { case e: Throwable =>
           Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
         }
-        // listener events drain asynchronously, and a fixed grace window
-        // can under-wait (ADVICE r17: events draining past it were
-        // attributed to the NEXT point's counters). The bus itself is
-        // private[spark], so wait for the observable equivalent: both
-        // counters stable across consecutive reads (a late event with
-        // zero spill can't contaminate anything), bounded at 5 s.
-        Thread.sleep(500)
-        var prev = (-1L, -1L)
-        var cur = (spilledMem.get, spilledDisk.get)
-        var drained = 0
-        while (cur != prev && drained < 5000) {
-          Thread.sleep(250); drained += 250
-          prev = cur
-          cur = (spilledMem.get, spilledDisk.get)
-        }
+        val m = metrics.take()
+        val (mem, disk) = (m.total(_.memorySpillBytes), m.total(_.diskSpillBytes))
         res match {
           case Right(t) =>
-            spillDisk(key) = cur._2
+            spillDisk(key) = disk
             s""""$key":{"query":"$query","sec":${r3(t)},""" +
-              s""""memory_spilled_bytes":${cur._1},""" +
-              s""""disk_spilled_bytes":${cur._2},""" +
-              s""""spilled":${cur._2 > 0}}"""
+              s""""memory_spilled_bytes":$mem,""" +
+              s""""disk_spilled_bytes":$disk,""" +
+              s""""spilled":${disk > 0}}"""
           case Left(e) =>
             spillDisk(key) = -1L
             s""""$key":{"query":"$query","sec":null,""" +
@@ -893,14 +816,8 @@ object Bench {
     // fresh SparkContext (the spill point stopped the last one): one
     // untimed pass absorbs context startup before the first timed row
     runOnce(spark2, "tpch_q6", sfDir)
-    val allNames = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // streaming-exec rotation: skipped only on un-filtered full runs (a
-    // dev BENCH_ONLY filter runs exactly what it names)
-    val streamRotatedOut: Seq[String] =
-      if (only.isDefined) Seq.empty
-      else allNames.filterNot(streamActive)
-    val names = allNames.filterNot(streamRotatedOut.toSet)
     // the suite itself also spends against the deadline: if a future
     // suite outgrows even the single-pass budget, the remaining rows are
     // recorded under "deadline_skipped" and every later phase still
@@ -1060,11 +977,11 @@ object Bench {
       }
     }.mkString("{", ",", "}")
 
-    // ==== PHASE 3: the non-headline sf1 rotation canaries (shape
-    // regressions re-checked every third round). The headline points
-    // already ran in the acceptance phase; these are the cheap watchdogs.
-    val rotationPoints = Sf1Points.filter { case (k, _) => !Sf1Headline(k) }
-    val anyRot = rotationPoints.exists { case (k, _) => sf1Runs(k) }
+    // ==== PHASE 3: the non-headline sf1 canaries (shape regressions).
+    // The headline points already ran in the acceptance phase; these are
+    // the cheap watchdogs.
+    val canaryPoints = Sf1Points.filter { case (k, _) => !Sf1Headline(k) }
+    val anyCanary = canaryPoints.exists { case (k, _) => sf1Runs(k) }
     // LOAD GATE (r9 verdict item 1): refuse to measure canaries in the
     // suite's contention tail — bounded wait for the 1-minute load to
     // decay below 4 on this 32-cpu box (the gate value and wait time go
@@ -1072,7 +989,7 @@ object Bench {
     // No wait in contended mode: external load won't decay on our
     // schedule, and the artifact already carries the contention stamps.
     val sf1Gate: Option[(Double, Int)] =
-      if (!anyRot) None
+      if (!anyCanary) None
       else {
         spark2.stop()
         System.gc()
@@ -1085,9 +1002,9 @@ object Bench {
     markPhase("sf1_start")
     // 10× the image-dedup corpus for the sf1 phase only (read per-call by
     // Multimodal.MediaDocs; the driver's correctness runs never set it)
-    if (anyRot) System.setProperty("graft.mm.mediaDocs", "5120")
+    if (anyCanary) System.setProperty("graft.mm.mediaDocs", "5120")
     val sparkSf1: SparkSession =
-      if (!anyRot) spark2
+      if (!anyCanary) spark2
       else {
         val s2 = newSession()
         // untimed warmup — EVERY fresh session pays codegen/JIT/classload
@@ -1098,10 +1015,10 @@ object Bench {
         runOnce(s2, "tpch_q6", sfDir)
         s2
       }
-    val rotationRaw: Seq[(String, Option[Either[String, Double]])] = {
+    val canaryRaw: Seq[(String, Option[Either[String, Double]])] = {
       val acc = scala.collection.mutable.ArrayBuffer
         .empty[(String, Option[Either[String, Double]])]
-      for ((key, query) <- rotationPoints) {
+      for ((key, query) <- canaryPoints) {
         val v: Option[Either[String, Double]] =
           if (!sf1Runs(key)) None
           // per-point deadline check, costed from the committed baseline:
@@ -1114,15 +1031,15 @@ object Bench {
         acc += key -> v
         // keep the partial artifact current through the sf1 phase too:
         // suite rows plus every sf1 point measured so far (no flush for
-        // rotated-out/skipped points — nothing new to record)
+        // filtered-out/skipped points — nothing new to record)
         if (v.isDefined)
           flushPartial(acceptanceDone ++ results ++ acc.collect {
             case (k, Some(e)) => k -> e }, "sf1", stdout = true)
       }
       acc.toSeq
     }
-    // acceptance + rotation merged back into declaration order
-    val sf1ByKey = (acceptanceRaw ++ rotationRaw).toMap
+    // acceptance + canaries merged back into declaration order
+    val sf1ByKey = (acceptanceRaw ++ canaryRaw).toMap
     val sf1Raw: Seq[(String, Option[Either[String, Double]])] =
       Sf1Points.map { case (k, _) => k -> sf1ByKey.getOrElse(k, None) }
     markPhase("sf1_requery_start")
@@ -1206,7 +1123,7 @@ object Bench {
     // the 10× media-corpus cap is an sf1-phase-only fixture knob; clear it
     // so anything else later in this JVM touching ensureMediaTable sees
     // the default corpus again
-    if (anyRot) System.clearProperty("graft.mm.mediaDocs")
+    if (anyCanary) System.clearProperty("graft.mm.mediaDocs")
     // run-end re-read of the BASELINE.md acceptance points (VERDICT r15
     // item 4: the acceptance phase runs FIRST by design so it can never
     // wait out a loaded start — r15's sf1_q1 read 2.905 s un-gated vs
@@ -1304,8 +1221,7 @@ object Bench {
         s""""sf1_requery_load_gate":{"load":$l,"waited_s":$w}"""
       case None => s""""sf1_requery_load_gate":null"""
     })
-    // requery-batch control verdicts + the run-end acceptance re-reads +
-    // which streaming-exec rows rotated out of this run's timing
+    // requery-batch control verdicts + the run-end acceptance re-reads
     def ctlJson(o: Option[String]): String = o.getOrElse("null")
     val controlJson =
       s""""requery_control":${ctlJson(requeryControl)},""" +
@@ -1315,15 +1231,13 @@ object Bench {
       else acceptRecheck.toSeq.sortBy(_._1)
         .map { case (k, t) => s""""$k":${r3(t)}""" }
         .mkString(""""accept_recheck":{""", ",", "}")
-    val rotationJson = s""""stream_rotation_skipped":${streamRotatedOut
-      .map(s => s""""$s"""").mkString("[", ",", "]")}"""
     // per-phase contended verdict + suite-total-vs-committed-floor ratio
     // (VERDICT r17 #4): the r17 window's 468 s raw suite total vs the
     // 215 s floor needed bench_runs/ archaeology to attribute to
     // mid-window load — now each phase boundary carries its own gate
     // verdict and the artifact states the ratio itself. The ratio
     // compares ONLY rows present in both this run and the committed
-    // baseline (rotation drops rows; new rows have no floor yet).
+    // baseline (new rows have no floor yet).
     def phaseContended(l: Double, p: Double): Boolean =
       l > ContentionLoadGate || p > ContentionProbeGateS
     val phasesJson = phaseMarks.map { case (n, l, p) =>
@@ -1352,7 +1266,7 @@ object Bench {
       .mkString("[", ",", "]")
     val budgetJson =
       s""""deadline_s":$DeadlineS,"elapsed_s":${r3(elapsedS)},""" +
-      s""""deadline_skipped":$skippedJson,"sf1_rotation":$sf1Rotation"""
+      s""""deadline_skipped":$skippedJson"""
     // FULL artifact → file (committed by the end-of-round snapshot):
     // every per-query median at full precision. Overwrites the partial
     // flushes — a completed artifact has "partial":false.
@@ -1361,7 +1275,7 @@ object Bench {
       s""""cpus":"$cpus","queries":$qs,"failed":$failed,""" +
       s""""requeried":$requeriedJson,$controlJson,$acceptRecheckJson,""" +
       s"""$sf1MinMergedJson,$minimaJson,""" +
-      s"""$rotationJson,$sf1Json,$spillJson,$loadJson,""" +
+      s"""$sf1Json,$spillJson,$loadJson,""" +
       s"""$budgetJson,"sf":"$sfDir"}"""
     atomicWriteArtifact(line)
 
@@ -1398,7 +1312,7 @@ object Bench {
     val failedAll = (results.collect { case (k, Left(e)) => k -> e } ++
       sf1.collect { case (k, Some(Left(e))) => k -> e })
     // sf1: ONLY the 3 acceptance headliners plus a ran-count — the full
-    // rotation set (14+ keys, ~450 chars in r18) is what pushed the core
+    // canary set (14+ keys, ~450 chars in r18) is what pushed the core
     // past budget; every point still rides the full artifact
     val sf1Compact = (sf1.collect {
       case (k, Some(Right(t))) if Sf1Headline(k) => s""""$k":${r3(t)}"""
@@ -1431,8 +1345,7 @@ object Bench {
       s""""elapsed_s":${r3(elapsedS)},""" +
       s""""deadline_skipped_n":${deadlineSkipped.size},""" +
       s""""deadline_skipped":${deadlineSkipped.take(1)
-        .map(s => s""""$s"""").mkString("[", ",", "]")},""" +
-      s""""sf1_rotation":$sf1Rotation"""
+        .map(s => s""""$s"""").mkString("[", ",", "]")}"""
     val headlineCompact =
       s""""value":${if (total == "null") "null" else r3(total.toDouble)},""" +
       s""""timed_total":$timedTotal,"timed_n":$timedN,""" +
@@ -1440,8 +1353,7 @@ object Bench {
     val (cPrefix, cSuffix) = compactParts(
       headlineCompact, adaptiveCompact, cpus, names.size, outPathStr,
       failedCompact(failedAll), requeriedCompact, acceptRecheckJson,
-      sf1Tagged.count(_._3), floorCompact, streamRotatedOut.size,
-      sf1Compact, spillCompact, loadCompact, budgetCompactSlim, sfDir)
+      sf1Tagged.count(_._3), floorCompact, sf1Compact, spillCompact, loadCompact, budgetCompactSlim, sfDir)
     val slowest = names.filter(measured)
       .flatMap(k => finalTime(k).toOption.map(k -> _))
       .sortBy(-_._2)

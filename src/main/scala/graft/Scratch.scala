@@ -59,6 +59,33 @@ object Scratch {
     */
   def purge(path: String): Unit = deleteRecursively(new java.io.File(path))
 
+  /** `<root>/<name>_pid<pid>`: a tree private to this process, for rows
+    * that rebuild their files on every run. A concurrent Verify, Bench or
+    * test process on the same dataset gets its own tree, so wiping it at
+    * row start can never race a sibling's in-flight run.
+    */
+  def pidDir(s: SparkSession, name: String): String =
+    s"${root(s)}/${name}_pid${java.lang.ProcessHandle.current.pid}"
+
+  /** Empties [[pidDir]] and returns it, first reaping the `<name>_pid*`
+    * trees of dead processes, so repeated runs don't accumulate copies;
+    * a live sibling's tree is never touched.
+    */
+  def freshPidDir(s: SparkSession, name: String): String = {
+    val prefix = s"${name}_pid"
+    Option(new java.io.File(root(s)).listFiles()).foreach(_.foreach { f =>
+      if (f.getName.startsWith(prefix)) {
+        val alive = f.getName.stripPrefix(prefix).toLongOption
+          .exists(p => java.lang.ProcessHandle.of(p)
+            .map[Boolean](_.isAlive).orElse(false))
+        if (!alive) purge(f.getPath)
+      }
+    })
+    val dir = pidDir(s, name)
+    purge(dir)
+    dir
+  }
+
   /** Returns `<root>/<key>`, running `build(tmpDir)` first unless the
     * marker from a previous build is present. The build writes into a
     * process-private temp dir that is atomically renamed into place, so a

@@ -62,7 +62,7 @@ object Tables {
     "spark.sql.parquet.inferTimestampNTZ.enabled")
 
   /** Raw footer schema of a parquet path, memoized by (path, mtime,
-    * length, [[SchemaConfs]]). Measured (LoadProbe, sf0.1): inference
+    * length, [[SchemaConfs]]). Measured at sf0.1: inference
     * costs ~47 ms/table; the memoized path ~4 ms.
     */
   def parquetSchema(spark: SparkSession, p: String)

@@ -39,12 +39,11 @@ object Dedup {
   /** Target rows per reduce task for driver-orchestrated ITERATION loops
     * ([[connectedComponents]]): loop frames are edge/node-sized skinny
     * rows (two longs), so 4M rows ≈ 64–128 MB of shuffle per task —
-    * the guide's 100 MB–1 GB partition band. Overridable per session via
-    * `spark.graft.loop.rowsPerTask` (a deployment knob, not a local[32]
-    * tuning: the loop width is nEdges/this, clamped to the session's
-    * shuffle width, so it scales with the data on any cluster).
+    * the guide's 100 MB–1 GB partition band. Not a local[32] tuning: the
+    * loop width is nEdges/this, clamped to the session's shuffle width,
+    * so it scales with the data on any cluster.
     */
-  private[graft] val LoopRowsPerTaskDefault = 4L * 1000 * 1000
+  private[graft] val LoopRowsPerTask = 4L * 1000 * 1000
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
   /** Exact-integer ppjoin prefix divisor for a similarity threshold t:
@@ -811,7 +810,7 @@ object Dedup {
     // pairs, but NOT constant-bounded like the nation graph, so the
     // width is derived from the measured edge count (the count also
     // eagerly materializes the edge cache the first round would pay
-    // anyway) at [[LoopRowsPerTaskDefault]] rows per reduce task instead
+    // anyway) at [[LoopRowsPerTask]] rows per reduce task instead
     // of being pinned to 1 or left at the session's corpus-scale setting.
     // At fixture SFs this plans 1-wide rounds (the measured 32-empty-
     // task scheduling floor is gone); at a billion edges the same
@@ -819,10 +818,8 @@ object Dedup {
     // the loop with AQE off: with the width already right, each AQE
     // stage is its own mini-job and the per-round job count multiplies.
     val nEdges = edges.count()
-    val rowsPerTask = s.conf.get("spark.graft.loop.rowsPerTask",
-      LoopRowsPerTaskDefault.toString).toLong
     val width = math.min(s.sessionState.conf.numShufflePartitions.toLong,
-      math.max(1L, nEdges / rowsPerTask + 1L))
+      math.max(1L, nEdges / LoopRowsPerTask + 1L))
     try LoopSession.static(s, width) { in =>
       val loopEdges = in(edges)
       // init = min(self, neighbors): one propagation folded into the

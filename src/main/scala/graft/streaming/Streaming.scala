@@ -109,6 +109,29 @@ object Streaming {
     s.conf.getOption("spark.graft.stream.statePartitions").map(_.toInt)
       .getOrElse(math.min(8, math.max(1, s.sparkContext.defaultParallelism / 2)))
 
+  /** Where [[streamExecCheckpointRestart]]'s source, checkpoint and sink
+    * for dataset `d` live ([[graft.Scratch.pidDir]]: private to this
+    * process) — exposed so the spec can count the checkpoint's commits.
+    */
+  private[graft] def ckptRoot(s: SparkSession, d: String): String =
+    graft.Scratch.pidDir(s, ckptName(d))
+  private def ckptName(d: String) = s"ckpt_restart_${graft.Scratch.sanitize(d)}"
+
+  /** Runs `body` with `kv` set on `s`, then restores each key's previous
+    * value (or unsets it). On the CALLER's session, not a newSession()
+    * child: StreamingQueryListener and QueryExecutionListener buses are
+    * per session, so a query started in a child is invisible to listeners
+    * the caller attached (RowMetrics and perfbench --trace read them).
+    */
+  private def withConfs[A](s: SparkSession, kv: (String, String)*)(body: => A): A = {
+    val saved = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** Runs a streaming DataFrame to completion under Trigger.AvailableNow
     * into a memory sink and returns the sink table. AvailableNow is the
     * operational backfill contract — bounded micro-batches over everything
@@ -126,28 +149,20 @@ object Streaming {
     * emit at first sight or at match time. Rows that emit on eviction
     * (outer joins, timeouts, append-mode windows) lose output without it,
     * so the default keeps it and a caller that forgets is only slower.
+    * `confs` joins the same query-scoped set.
     */
   private def runToMemory(s: SparkSession, name: String, df: DataFrame,
-                          mode: String,
-                          trailingBatch: Boolean = true): DataFrame = {
+                          mode: String, trailingBatch: Boolean = true,
+                          confs: Seq[(String, String)] = Nil): DataFrame = {
     s.catalog.dropTempView(name) // re-runs in one session replace the sink
-    // Set and restored on the CALLER's session, not a newSession() child:
-    // StreamingQueryListener and QueryExecutionListener buses are per
-    // session, so a query started in a child is invisible to listeners
-    // the caller attached (perfbench --trace reads both).
-    val scoped = Seq(
+    withConfs(s, Seq(
       "spark.sql.shuffle.partitions" -> stateParts(s).toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> trailingBatch.toString)
-    val saved = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      ++ confs: _*) {
       val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       require(q.awaitTermination(300000), s"$name did not self-terminate")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
     s.table(name)
   }
@@ -176,8 +191,8 @@ object Streaming {
     * region (window_end ≤ max ts − watermark − 61 s safety margin, the
     * same eviction-contract pattern as the outer interval join and
     * custom-state rows); the oracle is the batch aggregate under the
-    * same cutoff. Source/checkpoint live under a per-dataset scratch dir
-    * wiped at row start, so re-runs are deterministic. At 100 TB this IS
+    * same cutoff. Source/checkpoint live under [[ckptRoot]], wiped at row
+    * start, so re-runs are deterministic. At 100 TB this IS
     * the upgrade/failure drill: bounded state (watermark), resumable
     * offsets, idempotent sink.
     */
@@ -188,26 +203,9 @@ object Streaming {
       .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
       .head.toSeq.map(_.asInstanceOf[Long]).toArray
     val splitUs = minUs + (maxUs - minUs) / 2
-    // pid-suffixed like Scratch.ensure's tmp dirs: a concurrent
-    // Verify/Bench/test process on the same dataset gets its own tree, so
-    // the wipe-at-row-start below can never race a sibling's in-flight
-    // run. Sibling dirs whose pid is DEAD are reaped here (the row can't
-    // self-clean at the end — the returned frame lazily reads the sink),
-    // so repeated runs don't accumulate source+checkpoint copies, while a
-    // LIVE sibling's tree is never touched.
-    val prefix = s"ckpt_restart_${graft.Scratch.sanitize(d)}_pid"
-    Option(new java.io.File("target").listFiles()).foreach(_.foreach { f =>
-      if (f.getName.startsWith(prefix)) {
-        val alive = f.getName.stripPrefix(prefix).toLongOption
-          .exists(p => java.lang.ProcessHandle.of(p)
-            .map[Boolean](_.isAlive).orElse(false))
-        if (!alive) graft.Scratch.purge(f.getPath)
-      }
-    })
-    val root = new org.apache.hadoop.fs.Path(
-      s"target/$prefix${java.lang.ProcessHandle.current.pid}")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
+    // the row can't self-clean at the end (the returned frame lazily
+    // reads the sink), so its tree is wiped at row start instead
+    val root = graft.Scratch.freshPidDir(s, ckptName(d))
     val src = s"$root/src"
     val ckpt = s"$root/ckpt"
     val out = s"$root/out"
@@ -225,11 +223,8 @@ object Streaming {
     // the row 4.8 s → ~3.4 s; the remaining cost is two query startups
     // + two source appends + the commit-log read, i.e. the restart
     // drill itself, not a plan defect.
-    def runOnce(): Unit = {
-      // caller's session, not a child: see runToMemory
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", stateParts(s).toString)
-      try {
+    def runOnce(): Unit =
+      withConfs(s, "spark.sql.shuffle.partitions" -> stateParts(s).toString) {
         val agged = windowAgg(s.readStream
           .schema(s.read.parquet(src).schema).parquet(src)
           .withWatermark("ts", "10 minutes"))
@@ -240,8 +235,7 @@ object Streaming {
           .start()
         require(q.awaitTermination(300000),
           "ckpt_restart run did not self-terminate")
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    }
+      }
     // DEAD END (r19, do not retry): coalescing each half to the state
     // width (8 files instead of 32) to save file-commit/listing overhead
     // measured WORSE — a control-gated BENCH_ONLY run read 4.57 s vs the
@@ -721,18 +715,11 @@ object Streaming {
     val sessions = typed.groupByKey(_.user_id)
       .transformWithState(new SessionProcessor, TimeMode.EventTime(),
         OutputMode.Append())
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    // caller's session, not a child: see runToMemory
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val sink =
-      try runToMemory(s, "graft_exec_tws", sessions.toDF(), "append")
-      finally saved match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
-      }
-    sessionRows(sink, cutoffUs)
+    sessionRows(
+      runToMemory(s, "graft_exec_tws", sessions.toDF(), "append",
+        confs = Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")),
+      cutoffUs)
   }
 
   /** The batch `events_anomaly` verdict executed BY the streaming engine
@@ -941,9 +928,7 @@ object Streaming {
     // adapt.
     // `s` is already the per-query clone foreachBatch hands each batch,
     // so setting the conf here never reaches the caller's session.
-    val savedAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConfs(s, "spark.sql.adaptive.enabled" -> "false") {
     val batch = df
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), col("source"),
@@ -1041,7 +1026,7 @@ object Streaming {
         batch.unpersist(blocking = false)
       }
     }
-    } finally s.conf.set("spark.sql.adaptive.enabled", savedAqe)
+    }
   }
 
   /** The END-TO-END STREAMING INGEST pipeline — the composition a 100 TB
@@ -1058,7 +1043,7 @@ object Streaming {
     * whole run is deterministic, so the oracle replays the four-layer
     * accept chain in SQL. Returns the final accepted corpus.
     *
-    * Cost audit (sf0.1, 32 cores, r12, `graft.StreamAudit`): warm total
+    * Cost audit (sf0.1, 32 cores, r12, per-batch progress): warm total
     * ≈ 6.9 s = 4 micro-batches × 1.3–1.9 s triggerExecution, of which
     * ~95% is addBatch — the funnel work itself (extract + gate + guard
     * + probe + two writes over ~1,250 docs/drop); offsets/WAL commits
@@ -1069,32 +1054,17 @@ object Streaming {
     */
   /** Where the accepted corpus + band index of [[pipelineStreamingIngest]]
     * for dataset `d` live — exposed so the spec can re-fire a batch
-    * against the real output tree and prove replay idempotence.
-    * Pid-suffixed like [[streamExecCheckpointRestart]]'s tree: a
-    * concurrent Verify/Bench process on the same dataset gets its own
-    * root, so the purge-at-row-start can never race a sibling's
-    * in-flight run; dead siblings' trees are reaped at row start.
+    * against the real output tree and prove replay idempotence
+    * ([[graft.Scratch.pidDir]]: private to this process).
     */
   private[graft] def ingestRoot(s: SparkSession, d: String): String =
-    graft.Scratch.root(s) +
-      s"/stream_ingest_${graft.Scratch.sanitize(d)}" +
-      s"_pid${java.lang.ProcessHandle.current.pid}"
+    graft.Scratch.pidDir(s, ingestName(d))
+  private def ingestName(d: String) = s"stream_ingest_${graft.Scratch.sanitize(d)}"
 
   private def pipelineStreamingIngest(s: SparkSession, d: String)
       : DataFrame = {
     val src = ensureIngestSrc(s, d)
-    val prefix = s"stream_ingest_${graft.Scratch.sanitize(d)}_pid"
-    Option(new java.io.File(graft.Scratch.root(s)).listFiles())
-      .foreach(_.foreach { f =>
-        if (f.getName.startsWith(prefix)) {
-          val alive = f.getName.stripPrefix(prefix).toLongOption
-            .exists(p => java.lang.ProcessHandle.of(p)
-              .map[Boolean](_.isAlive).orElse(false))
-          if (!alive) graft.Scratch.purge(f.getPath)
-        }
-      })
-    val root = ingestRoot(s, d)
-    graft.Scratch.purge(root)
+    val root = graft.Scratch.freshPidDir(s, ingestName(d))
     val acceptedDir = s"$root/accepted"
     val bandsDir = s"$root/bands"
     val schema = s.read.parquet(src).schema

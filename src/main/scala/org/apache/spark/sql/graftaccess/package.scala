@@ -1,9 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.classic.ClassicConversions._
 
-/** The one Spark-internal accessor graft uses: `Dataset.ofRows` is
-  * `private[sql]`.
+/** The Spark-internal accessors graft uses: `Dataset.ofRows` is
+  * `private[sql]`, the listener bus `private[spark]`.
   */
 package object graftaccess {
 
@@ -12,4 +13,7 @@ package object graftaccess {
     */
   def rebind(session: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(session, df.logicalPlan)
+
+  /** Blocks until every listener has seen every event posted so far. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

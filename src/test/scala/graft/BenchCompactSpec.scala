@@ -52,11 +52,10 @@ class BenchCompactSpec extends AnyFunSuite {
         """"pre_quiesce_s":180"""
     val budget =
       s""""elapsed_s":9999.999,"deadline_skipped_n":999,""" +
-        s""""deadline_skipped":["$longName"],""" +
-        s""""sf1_rotation":2"""
+        s""""deadline_skipped":["$longName"]"""
     Bench.compactParts(headline, adaptive, "32", 282,
       "bench_out/bench.json", failed, requeried, acceptRecheck, 99, floor,
-      10, sf1, spill, load, budget, "/root/testdata/sf0.1")
+      sf1, spill, load, budget, "/data/testdata/sf0.1")
   }
 
   test("worst-case fixed core leaves >=600 chars for per-query entries") {

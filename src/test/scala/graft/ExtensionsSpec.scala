@@ -1156,17 +1156,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_exec_multi_batch: >=4 rate-limited batches accumulate to the batch answer") {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import StreamingQueryListener._
-    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == "graft_exec_multi")
-          batches.add((e.progress.batchId, e.progress.numInputRows)): Unit
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
+    val metrics = RowMetrics.attach(spark)
     try {
       val got = SparkEntry.queries("stream_exec_multi_batch")(spark, sfDir)
         .collect()
@@ -1177,15 +1167,12 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
         .toSet
       assert(got == want, s"incremental drain diverged: ${got.size} vs ${want.size}")
-      // listener events drain asynchronously off the bus
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (batches.size < 4 && System.nanoTime() < deadline) Thread.sleep(100)
-      import scala.jdk.CollectionConverters._
-      val bs = batches.asScala.toSeq
+      val bs = metrics.take().batches.filter(_.query == "graft_exec_multi")
+        .map(b => (b.id, b.inputRows))
       assert(bs.size >= 4, s"expected >=4 rate-limited batches, saw $bs")
       assert(bs.count(_._2 > 0) >= 2,
         s"rows must arrive incrementally across batches, saw $bs")
-    } finally spark.streams.removeListener(listener)
+    } finally metrics.close()
   }
 
   test("stateful exec rows return identical rows at state widths 1 and 8") {
@@ -1209,48 +1196,25 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("dedup and inner join run one micro-batch; the outer join's eviction batch shrinks state") {
-    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
-    import StreamingQueryListener._
-    import scala.jdk.CollectionConverters._
-    val names = Set("graft_exec_dedup", "graft_exec_ssj", "graft_exec_ssj_outer")
-    val started = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
-    val ended = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
-    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit =
-        if (names(e.name)) started.put(e.id, e.name): Unit
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (names(e.progress.name)) progress.add(e.progress): Unit
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (started.containsKey(e.id)) ended.add(e.id): Unit
-    }
-    spark.streams.addListener(listener)
-    try {
+    val metrics = RowMetrics.attach(spark)
+    val byName = try {
       for (row <- Seq("stream_exec_dedup", "stream_exec_interval_join",
                       "stream_exec_interval_join_outer"))
         SparkEntry.queries(row)(spark, sfDir).collect()
-      // listener events drain asynchronously off the bus; a query's
-      // terminated event follows all of its progress events
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (ended.size < names.size && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      assert(ended.size == names.size, s"saw terminations of $started")
-      val byName = progress.asScala.toSeq.groupBy(_.name)
-        .map { case (n, ps) => n -> ps.sortBy(_.batchId) }
-      def batches(n: String) = byName.getOrElse(n, Nil)
-      assert(batches("graft_exec_dedup").size == 1,
-        s"dedup batches: ${batches("graft_exec_dedup").map(_.batchId)}")
-      assert(batches("graft_exec_ssj").size == 1,
-        s"inner join batches: ${batches("graft_exec_ssj").map(_.batchId)}")
-      // the outer row still runs the watermark-only batch, and it EVICTS:
-      // the watermark bounds the join state
-      val outer = batches("graft_exec_ssj_outer")
-      assert(outer.size >= 2, s"outer join batches: ${outer.map(_.batchId)}")
-      def stateRows(p: StreamingQueryProgress) =
-        p.stateOperators.map(_.numRowsTotal).sum
-      assert(stateRows(outer.last) < stateRows(outer.head),
-        s"state rows per batch: ${outer.map(stateRows)}")
-    } finally spark.streams.removeListener(listener)
+      metrics.take().batches.groupBy(_.query)
+        .map { case (n, bs) => n -> bs.sortBy(_.id) }
+    } finally metrics.close()
+    def batches(n: String) = byName.getOrElse(n, Nil)
+    assert(batches("graft_exec_dedup").size == 1,
+      s"dedup batches: ${batches("graft_exec_dedup").map(_.id)}")
+    assert(batches("graft_exec_ssj").size == 1,
+      s"inner join batches: ${batches("graft_exec_ssj").map(_.id)}")
+    // the outer row still runs the watermark-only batch, and it EVICTS:
+    // the watermark bounds the join state
+    val outer = batches("graft_exec_ssj_outer")
+    assert(outer.size >= 2, s"outer join batches: ${outer.map(_.id)}")
+    assert(outer.last.stateRows < outer.head.stateRows,
+      s"state rows per batch: ${outer.map(_.stateRows)}")
   }
 
   test("stream_exec_anomaly equals the batch verdicts on the emitted region") {
@@ -1297,8 +1261,7 @@ class StreamingSpec extends AnyFunSuite {
     // of starting over (starting over would also double-emit and fail
     // the equality above)
     val commits = new java.io.File(
-      s"target/ckpt_restart_${graft.Scratch.sanitize(sfDir)}" +
-        s"_pid${java.lang.ProcessHandle.current.pid}/ckpt/commits")
+      s"${streaming.Streaming.ckptRoot(spark, sfDir)}/ckpt/commits")
       .listFiles().count(f => f.getName.forall(_.isDigit))
     assert(commits >= 3, s"expected commits from both runs, saw $commits")
   }

@@ -145,6 +145,26 @@ class HygieneSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"conf set on a caller's session: ${bad.mkString("; ")}")
   }
+
+  test("source: RowMetrics is the only listener under src/main") {
+    val listener =
+      raw"(?:new|extends|with)\s+[\w.]*\b(?:SparkListener|StreamingQueryListener)\b".r
+    val hits = scalaSources("src/main").collect {
+      case (f, ls) if ls.exists(listener.findFirstIn(_).isDefined) => f
+    }
+    assert(hits == Seq(s"$mainSrc/RowMetrics.scala"), hits)
+  }
+
+  test("source: Verify, Bench, Demo and Audit are the only mains under src/") {
+    val needle = "def " + "main(" // not a hit in this file
+    val obj = raw"\s*object (\w+)\b.*".r
+    val mains = scalaSources("src").flatMap { case (_, ls) =>
+      ls.zipWithIndex.collect { case (l, i) if l.contains(needle) =>
+        ls.take(i).reverse.collectFirst { case obj(n) => n }.getOrElse("?")
+      }
+    }
+    assert(mains.sorted == Seq("Audit", "Bench", "Demo", "Verify"), mains)
+  }
 }
 
 /** The driver regenerates /root/testdata between rounds and has already
@@ -343,8 +363,8 @@ class OracleTypeConventionSpec extends AnyFunSuite {
 
 /** The bench suite's wall clock must FIT the driver's budget (r13: rc=124,
   * zero benchmark numbers for the round). Static assertion from the
-  * committed baseline: the adaptive single-pass suite, the worst-case sf1
-  * rotation group at full median-of-Iters rigor, and a generous fixed
+  * committed baseline: the adaptive single-pass suite, every sf1 point
+  * at full median-of-Iters rigor, and a generous fixed
   * overhead (sessions, warmups, capped load gates, sf1 build, spill) must
   * sit inside the self-deadline with margin — a new query or canary that
   * breaks the budget fails HERE, in a test, instead of failing the round.
@@ -371,27 +391,9 @@ class BenchBudgetSpec extends AnyFunSuite {
   // always pays full Iters AND can never take the 1-run fast path)
   private lazy val missing =
     SparkEntry.queries.keys.filterNot(k => root.path("queries").has(k)).toSeq
-  // worst rotation group (headline points always active), per-run cost
-  // scaled by the caller's iteration model
-  private def worstSf1(itersEach: Double): Double =
-    (0 until Bench.Sf1RotationGroups).map { r =>
-      Bench.Sf1Points.zipWithIndex.collect {
-        case ((k, _), i)
-          if Bench.Sf1Headline(k) || i % Bench.Sf1RotationGroups == r =>
-          sf1.getOrElse(k, 5.0)
-      }.sum
-    }.max * itersEach
-
-  test("stream-rotation rows name real queries and never headline points") {
-    val qs = SparkEntry.queries.keySet
-    val unknown = Bench.StreamRotationRows.filterNot(qs)
-    assert(unknown.isEmpty, s"rotation names unknown rows: $unknown")
-    // rotation is a suite-row concept; an sf1 headline key here would
-    // silently drop an acceptance number from the run
-    val clash = Bench.StreamRotationRows.toSet
-      .intersect(Bench.Sf1Points.map(_._1).toSet)
-    assert(clash.isEmpty, s"rotation rows clash with sf1 keys: $clash")
-  }
+  // every sf1 point, per-run cost scaled by the caller's iteration model
+  private def allSf1(itersEach: Double): Double =
+    Bench.Sf1Points.map { case (k, _) => sf1.getOrElse(k, 5.0) }.sum * itersEach
 
   test("estimated bench wall time fits the self-deadline with margin") {
     // quiet machine, full rigor: 1 adaptive run per suite row plus 50%
@@ -399,14 +401,14 @@ class BenchBudgetSpec extends AnyFunSuite {
     // iterations or a requery; sf1 points at full Iters plus one
     // warm-up-equivalent (the fresh-session first pass)
     val FixedOverheadS = 450.0 // sessions+warmups+3 bounded gates+build+spill
-    val est = suite * 1.5 + worstSf1(Bench.Iters + 1) + FixedOverheadS +
+    val est = suite * 1.5 + allSf1(Bench.Iters + 1) + FixedOverheadS +
       missing.size * 5.0 * Bench.Iters
     assert(est < Bench.DeadlineS * 0.9,
       f"estimated bench wall $est%.0f s exceeds 90%% of the " +
       f"${Bench.DeadlineS}%.0f s self-deadline (suite=$suite%.0f s, " +
       f"${missing.size} baseline-less " +
-      s"rows: ${missing.take(5).mkString(",")}) — trim Iters, rotate more " +
-      "canaries out, or raise the deadline after checking the driver budget")
+      s"rows: ${missing.take(5).mkString(",")}) — trim Iters, retire " +
+      "canaries, or raise the deadline after checking the run's time limit")
   }
 
   test("contended mode fits the self-deadline at a 3× slowdown") {
@@ -422,11 +424,11 @@ class BenchBudgetSpec extends AnyFunSuite {
     // sf1 fixture build, spill point, warmups, session churn (~90 s quiet)
     val ScaledOverheadQuietS = 90.0
     val est = ContentionMultiplier *
-      (suite + worstSf1(1.0) + missing.size * 5.0 + ScaledOverheadQuietS)
+      (suite + allSf1(1.0) + missing.size * 5.0 + ScaledOverheadQuietS)
     assert(est < Bench.DeadlineS * 0.9,
       f"contended-mode estimate $est%.0f s (at ${ContentionMultiplier}×) " +
       f"exceeds 90%% of the ${Bench.DeadlineS}%.0f s self-deadline " +
       f"(single-pass suite=$suite%.0f s) — retire redundant sub-second " +
-      "rows or widen the sf1 rotation before adding more")
+      "rows or sf1 canaries before adding more")
   }
 }

@@ -81,9 +81,7 @@ class OperatorsSpec extends AnyFunSuite {
         SparkEntry.queries("sink_parquet_codecs")(spark, sfDir).collect()
       }
       tagged("pb-after")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (idOf("pb-after").isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(100)
+      org.apache.spark.sql.graftaccess.drainListeners(sc)
       val (lo, hi) = (idOf("pb-before").get, idOf("pb-after").get)
       val window = jobs.asScala.toSeq.filter { case (id, _) => id > lo && id < hi }
       assert(window.nonEmpty, "the sink row started no job")

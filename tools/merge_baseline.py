@@ -3,14 +3,13 @@
 
 Usage: python3 tools/merge_baseline.py <artifact.json> [baseline.json]
 
-NEVER copy an artifact over bench_baseline.json verbatim: since r16 the
-streaming-exec rows rotate in thirds, so a raw artifact's "queries" map
-is missing the rotated-out rows — replacing the baseline with it would
-drop their entries and every rotated-in row would pay full iterations
-the next round (the adaptive gate and the requery outlier gate both key
-off the committed baseline). This tool keeps every existing key and
-takes the min where the artifact has a lower reading (a query cannot be
-faster than it is; host contention only ever inflates).
+Merge rather than copy an artifact over bench_baseline.json: a
+deadline-truncated or BENCH_ONLY-filtered run lacks rows, and replacing
+the baseline with it would drop their entries, so those rows would pay
+full iterations the next run (the adaptive gate and the requery outlier
+gate both key off the committed baseline). This tool keeps every
+existing key and takes the min where the artifact has a lower reading (a
+query cannot be faster than it is; host contention only ever inflates).
 
 Suite rows merge from "queries"; sf1 canaries merge from the artifact's
 top-level sf1_* numbers. The baseline's sf/cpus stamp must match the
@@ -39,6 +38,7 @@ def main(artifact_path, baseline_path="bench_baseline.json"):
             base["queries"][k] = v
             merged += 1
     for k, v in art.items():
+        # older artifacts also carry an integer "sf1_rotation" field
         if k.startswith("sf1_") and isinstance(v, (int, float)) \
                 and k != "sf1_rotation":
             old = base.get(k)
