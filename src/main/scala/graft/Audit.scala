@@ -6,7 +6,8 @@ package graft
   *  - one summary line: wall time, jobs, stages, tasks, shuffle bytes,
   *    summed task time and spill — a 2 s row with 40 jobs is scheduling
   *    cost, a 2 s row with 3 jobs and 2 GB of shuffle is data-plane cost;
-  *  - one line per job (wall, tasks, task time, description);
+  *  - one line per job (wall, tasks, task time, job tags, description);
+  *    every job a row starts carries the row's name as a job tag;
   *  - one line per micro-batch (input rows, `durationMs`, state rows and
   *    commit time);
   *  - the executed physical plan.
@@ -34,9 +35,11 @@ object Audit {
     def mb(b: Long) = f"${b / 1e6}%.1f MB"
     def run(q: String) = {
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(q)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
-      (df, (System.nanoTime() - t0) / 1e9)
+      RowMetrics.tagged(spark, q) {
+        val df = SparkEntry.queries(q)(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        (df, (System.nanoTime() - t0) / 1e9)
+      }
     }
     try {
       run("tpch_q6")
@@ -60,7 +63,7 @@ object Audit {
               s"${mb(m.total(_.diskSpillBytes))} disk")
             m.jobs.foreach(j => println(f"[audit]   job ${j.id}%4d " +
               f"wall ${j.wallMs}%6d ms tasks ${j.tasks}%4d task ${j.runMs}%6d ms " +
-              j.description.take(90)))
+              j.tags.toSeq.sorted.mkString("[", ",", "] ") + j.description.take(90)))
             m.batches.foreach(b => println(s"[audit]   batch ${b.query}#${b.id} " +
               s"rows ${b.inputRows} state rows ${b.stateRows} " +
               s"commit ${b.stateCommitMs} ms durationMs " +

@@ -4,117 +4,94 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line {"metric","value","unit","queries","sf"}.
+  * and prints ONE compact JSON line {"metric","value","unit","queries",…};
+  * the full artifact goes to SPARK_GRAFT_BENCH_OUT (default
+  * bench_out/bench.json).
   *
-  * Measurement notes:
-  *  - results go to the `noop` sink, so the full plan (projections included)
-  *    executes without driver-side collection skew;
-  *  - a warm-up pass (session init + one scan-agg) runs untimed, so JIT/
-  *    classloading isn't attributed to an arbitrary first query;
-  *  - PHASE ORDER IS ACCEPTANCE-FIRST (VERDICT r14 item 1: fourteen rounds
-  *    of "parsed": null because the acceptance numbers ran LAST and were
-  *    the first casualties of a contended window): the BASELINE.md
-  *    comparison points (sf1_q1/q18, the slowest canary) and the spill
-  *    proof run before the suite, in the fresh JVM — quiesced by
-  *    construction — so even a severely truncated run carries the numbers
-  *    the acceptance metric is graded on;
-  *  - iteration count is ADAPTIVE (r13: the 3×-everything suite outran
-  *    the driver's budget and the round got rc=124 and zero numbers): one
-  *    timed run that lands at ≤1.5× its committed baseline (or under the
-  *    noise floor) is accepted as-is; only apparent regressions and
-  *    baseline-less rows pay the full median-of-ITERS, and >1.5×
-  *    outliers still get the quiesced requery pass. The artifact records
-  *    how many rows took each path ("adaptive") so a single-shot number
-  *    is distinguishable from a median-of-3 (ADVICE r14);
-  *  - CONTENDED MODE (VERDICT r14 item 2: the driver's window ran at load
-  *    5.4-6.2 and burned 1490 s of the 1500 s budget): when the PRE-RUN
-  *    1-minute load average exceeds ContentionLoadGate, every row is
-  *    single-run, the requery passes are skipped up front, and the
-  *    quiesce gates don't wait (external load won't decay on our
-  *    schedule) — a 3× slow window must yield a complete cheap artifact,
-  *    never a truncated rigorous one. Decided from the load BEFORE any
-  *    Spark work because every later reading is self-polluted by our own
-  *    32-thread phases — but only AFTER a bounded pre-run quiesce
-  *    (≤180 s, r16: the driver's window started at load 8.2 and the whole
-  *    run measured contended when a short wait might have shed it): if
-  *    load and a fresh speed probe decay under the gates the run proceeds
-  *    at full rigor, and the wait is recorded either way. A quiet start
-  *    that still outruns 45% of the deadline escalates to single-run
-  *    mid-flight;
-  *  - the committed bench_baseline.json minima (suite-total floor + the
-  *    acceptance-point floors) ride BOTH emitted artifacts under
-  *    "minima" (r16: the graded artifact carried only a contended
-  *    window's 2.60× reading while the committed quiet floor stood at
-  *    0.59× — the floor must travel with the artifact);
-  *  - the run spends against an explicit wall-clock deadline
-  *    (SPARK_GRAFT_BENCH_DEADLINE_S, default 1500 s — r10's rc=0 run took
-  *    2747 s of sbt time, so this sits well inside the driver's kill):
-  *    optional phases AND individual requeries check the clock and are
-  *    skipped AND recorded under "deadline_skipped" instead of running
-  *    into the kill;
-  *  - the artifact file is rewritten after EVERY completed query
-  *    ("partial":true until the final overwrite) and a small complete
-  *    JSON progress line goes to stdout every 10 suite rows — a
-  *    driver-side kill still leaves a parseable artifact AND a parseable
-  *    stdout tail;
-  *  - the headline is NEVER silently null-only: "timed_total"/"timed_n"
-  *    carry the sum and count of everything successfully timed even when
-  *    a failure or truncation nulls "value" (a broken query must never
-  *    make the total look better, but a partial total is still evidence);
-  *  - every row and every sf1 point is timed in every run: sf1_q1/q18
-  *    and the slowest canary in the acceptance phase, the other sf1
-  *    canaries after the suite;
-  *  - queries run in sorted name order for run-to-run comparability;
-  *  - `SPARK_GRAFT_BENCH_ONLY=q1,q2` restricts the run to named queries
-  *    (dev iteration aid; the driver runs the full set);
-  *  - "sf1_q1" is TPC-H q1 at SF≈1: the input lineitem deterministically
-  *    replicated ×10 with per-replica l_orderkey offsets (so key
-  *    distributions scale like real SF=1 data, not 10 identical copies),
-  *    built once under the scratch root — the apples-to-apples point
-  *    against the reference's published 1956 ms SF=1 q1 (BASELINE.md);
-  *  - apparent outliers (>1.5× the committed bench_baseline.json entry
-  *    for the same sf+cpus) are re-measured in a quiesced tail phase and
-  *    both numbers recorded under "requeried" — suite contention is
-  *    measured away instead of explained away in prose;
-  *  - a "spill" point re-runs the segment-keeper aggregate under a 1%
-  *    memory fraction, 2 shuffle partitions, and force-spill thresholds
-  *    and records task-metric spill bytes — evidence the aggregate
-  *    degrades to spill, not OOM;
-  *  - the FULL result line goes to SPARK_GRAFT_BENCH_OUT (default
-  *    bench_out/bench.json); stdout gets a COMPACT line (headline totals,
-  *    the slowest queries, failures, re-queries, sf1 points, spill, and a
-  *    pointer to the full file) sized to survive a ~3 KB log-tail capture
-  *    whole — BENCH_r06 AND r07 both ended "parsed": null because the
-  *    full 10 KB line got truncated mid-object by the harvester;
-  *  - system load average is recorded at start and end: r7's whole run
-  *    (suite AND the fresh-session sf1 points) measured 2-25× slow from
-  *    machine-wide contention that quiesced re-runs recovered — the
-  *    artifact should carry the evidence, not leave it to archaeology;
-  *  - sf1 points get the same >1.25×-baseline quiesced re-measurement as
-  *    suite rows (recorded under "requeried"), min taken for the
-  *    headline.
+  * Phases, in order:
+  *  1. ONE BOUNDED WAIT. When the pre-run 1-minute load average is above
+  *     ContentionLoadGate, the run waits up to QuiesceMaxS for it to decay
+  *     (recorded under "pre_quiesce"). If it does not, the run is
+  *     CONTENDED: every row is single-run and the requery pass is skipped,
+  *     so a slow window yields a complete cheap artifact, never a truncated
+  *     rigorous one. The decision is taken before any Spark work, because
+  *     every later reading includes this process's own load. A quiet start
+  *     that still outruns 45% of the deadline drops to single-run rows
+  *     from then on.
+  *  2. ACCEPTANCE, in the fresh JVM after an untimed warm-up: the
+  *     Sf1Headline points, so even a truncated run carries the numbers the
+  *     acceptance metric is graded on.
+  *  3. SPILL: the segment-keeper aggregate and scd2_history on the SF≈1
+  *     fixture under a squeezed session (1% memory fraction, 2 shuffle
+  *     partitions, force-spill thresholds), recording task-metric spill
+  *     bytes: evidence that the aggregates degrade to spill, not OOM.
+  *  4. SUITE: every row in sorted name order, in a new session.
+  *  5. SF1 CANARIES: the other sf1 points, in the same session.
+  *  6. ONE REQUERY PASS, in the same session, skipped when contended:
+  *     [[requeryCandidates]] picks the rows; each is re-measured
+  *     median-of-Iters through the timing function of its first reading
+  *     and publishes min(first, requery). A contended reading can raise
+  *     neither, so no control row is needed. Both readings, the floor and
+  *     the load before and after go under "requeried".
+  *
+  * Throughout:
+  *  - results go to the `noop` sink, so the full plan executes without
+  *    driver-side collection skew;
+  *  - the iteration count is ADAPTIVE: a first reading at or under
+  *    OutlierRatio × its committed floor (bench_baseline.json, applied
+  *    only when sf AND cpus match), or under NoiseFloorSec, is accepted
+  *    from one run; the others, and rows without a floor, pay
+  *    median-of-Iters ("adaptive" counts both paths);
+  *  - every timed run tags its jobs with the row's artifact key;
+  *  - the run spends against SPARK_GRAFT_BENCH_DEADLINE_S (default
+  *    1500 s): each sf1 point, the spill point, each suite row and each
+  *    requery checks the clock first, and a skip is recorded under
+  *    "deadline_skipped" instead of running into a kill;
+  *  - the artifact file is rewritten after every completed query
+  *    ("partial":true until the final write) and a small complete JSON
+  *    progress line goes to stdout every 10 suite rows, so a killed run
+  *    still leaves a parseable artifact and stdout tail;
+  *  - "timed_total"/"timed_n" carry the sum and count of everything timed
+  *    even when a failure or truncation nulls "value";
+  *  - the committed floors ride the artifact under "minima", and each
+  *    phase boundary records the load average under "phases";
+  *  - `SPARK_GRAFT_BENCH_ONLY=q1,q2` restricts the run to the named rows
+  *    and sf1 points (a development aid);
+  *  - "sf1_q1" is TPC-H q1 at SF≈1 (see ensureSf1Dir): the
+  *    apples-to-apples point against the reference's published 1956 ms
+  *    SF=1 q1 (BASELINE.md);
+  *  - the compact stdout line is assembled from capped fragments
+  *    ([[compactParts]], [[fitCompact]]) so it survives a ~2 KB log-tail
+  *    capture whole; the detail rides the full artifact.
   */
 object Bench {
   private[graft] val Iters = 3
   private val Sf1Reps = 10
-  private val NoiseFloorSec = 0.3
+  private[graft] val NoiseFloorSec = 0.3
 
-  /** Pre-run 1-minute loadavg above this flips the whole run into
-    * contended mode (single-run rows, no requeries, no gate waits). ~2 on
-    * a 32-cpu box means another multi-core job is already resident — the
-    * r14 driver window read 5.4-6.2 and the full-rigor suite blew the
-    * budget.
+  /** The one outlier ratio. A first reading at or under this multiple of
+    * its committed floor is accepted from one run; one above it (and above
+    * NoiseFloorSec) is a requery candidate. Sharing the value means
+    * nothing the single-run path waves through is an outlier.
+    */
+  private[graft] val OutlierRatio = 1.5
+
+  /** At most this many outliers are requeried, worst ratio first. */
+  private[graft] val RequeryCap = 8
+
+  /** The BASELINE.md comparison points: requery candidates whenever they
+    * ran, so their published value is always the min of two readings.
+    */
+  private[graft] val AcceptancePoints = Seq("sf1_q1", "sf1_q18")
+
+  /** Pre-run 1-minute loadavg above this starts the bounded wait; still
+    * above it after QuiesceMaxS, the run is contended. ~2 on a 32-cpu box
+    * means another multi-core job is already resident.
     */
   private[graft] val ContentionLoadGate = 2.0
 
-  /** Pre-run fixed-work speed probe above this (seconds) also flips the
-    * run into contended mode: loadavg only sees THIS VM's host-visible
-    * processes, and the r9/r10 adjudication measured the box 2-4× slow at
-    * loadavg < 1 (virtualized host capacity). Quiet probes on this rig
-    * read 0.45-0.55 s; 1.0 s means every measured second will stretch ~2×
-    * and the full-rigor path no longer fits the budget.
-    */
-  private[graft] val ContentionProbeGateS = 1.0
+  /** Cap of the bounded pre-run wait, seconds. */
+  private[graft] val QuiesceMaxS = 180
 
   // --- wall-clock self-budget (r13: rc=124 — the driver KILLED the run
   // and the round got zero numbers). The suite now spends against an
@@ -251,8 +228,8 @@ object Bench {
     // W-per-row coverage explode hit their occurrence-bound worst case
     "sf1_dedup_substring" -> "dedup_substring_exact",
     // the image-dedup quarter-blocking join at 10× the image count
-    // (graft.mm.mediaDocs property raises the asset cap for THIS phase
-    // only — the driver's correctness runs never set it): gradient
+    // (Bench.runOnce raises the asset cap through graft.mm.mediaDocs for
+    // each sf1 run only — correctness runs never set it): gradient
     // formulas repeat mod 256, so 10× images multiply every quarter
     // bucket's occupancy — the blocking join's collision worst case
     "sf1_mm_phash_dedup" -> "mm_phash_dedup",
@@ -356,62 +333,50 @@ object Bench {
     Set("sf1_q1", "sf1_q18", "sf1_dedup_semantic")
 
   /** 1-minute system load average, or -1 where the JMX bean lacks it —
-    * recorded at both ends of the run so machine-wide contention (r7: the
-    * entire run measured 2-25× slow, recovered by quiesced re-runs) is
+    * recorded at every phase boundary so machine-wide contention is
     * visible in the artifact itself.
     */
   private def osLoadAvg: Double =
     math.rint(java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage * 100) / 100
 
-  /** Single-thread machine-speed probe: 100M splitmix64 rounds, timed.
-    * Loadavg only sees processes INSIDE this VM; the r9/r10 adjudication
-    * found the box's effective CPU speed varying 2-4× between windows
-    * with loadavg < 1 (virtualized host capacity), which loadavg can
-    * never show. A fixed-work spin timed immediately before each phase
-    * puts the machine's speed AT THAT MOMENT in the artifact — a phase
-    * whose probe reads 2× the run's best probe was measured on a slow
-    * window and its numbers should be discounted accordingly.
+  /** Ordered (phase, loadavg) markers → "phases" in the artifact, so a
+    * reader can tell which phase ran on a loaded window.
     */
-  private def speedProbe: Double = {
-    val t0 = System.nanoTime()
-    var h = 0x243f6a8885a308dL
-    var i = 0
-    while (i < 100000000) { h = graft.functions.HashImpls.splitmix64(h); i += 1 }
-    // fold h into the rounding so the loop cannot be dead-code-eliminated
-    val eps = if (h == 42L) 1e-9 else 0.0
-    math.rint((System.nanoTime() - t0) / 1e6 + eps) / 1000
-  }
+  private val phaseMarks = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+  private def markPhase(name: String): Unit = phaseMarks += ((name, osLoadAvg))
 
-  /** Ordered per-phase (phase, loadavg, probe_s) markers → "phases" in the
-    * artifact. Recorded at each phase BOUNDARY, so a grader can tell which
-    * phase ran on a contended or host-throttled window instead of
-    * archaeologizing a single start/end pair (the r9 verdict's ask).
+  /** The rows the requery pass re-measures, in order: the
+    * AcceptancePoints that ran, then every other row or sf1 point whose
+    * first reading is above OutlierRatio × its committed floor and above
+    * NoiseFloorSec — the RequeryCap worst by ratio. A row without a floor
+    * is never an outlier; a contended run requeries nothing.
     */
-  private val phaseMarks = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
-  private def markPhase(name: String): Unit =
-    phaseMarks += ((name, osLoadAvg, speedProbe))
+  private[graft] def requeryCandidates(first: Map[String, Double],
+      floors: Map[String, Double], contended: Boolean): Seq[String] =
+    if (contended) Nil
+    else AcceptancePoints.filter(first.contains) ++ first.toSeq
+      .collect { case (k, t) if !AcceptancePoints.contains(k) &&
+          t > NoiseFloorSec && floors.get(k).exists(t > OutlierRatio * _) =>
+        (k, t / floors(k)) }
+      .sortBy { case (k, ratio) => (-ratio, k) }
+      .take(RequeryCap).map(_._1)
 
-  /** Compact stdout line, fixed core split around the "queries" map
-    * (VERDICT r18 item 1: the r17 AND r18 compact lines shipped
-    * "queries":{} because the fixed core — full minima block, 8 phase
-    * quads, 14+ sf1 keys, two spill objects, four gate records — had
-    * crept to 1809 chars against the 1750 budget, leaving the driver
-    * per-query-blind for two rounds). The detail now rides ONLY the full
-    * artifact (referenced by "full"); the compact core carries each
-    * evidence class in its smallest sufficient form, and
-    * `BenchCompactSpec` asserts the worst-case core leaves ≥600 chars of
-    * budget for the slowest-row entries.
+  /** Compact stdout line, fixed core split around the "queries" map. The
+    * detail rides ONLY the full artifact (referenced by "full"); the
+    * compact core carries each evidence class in its smallest sufficient
+    * form, and `BenchCompactSpec` asserts the worst-case core leaves ≥600
+    * chars of the 1750 budget for the slowest-row entries.
     */
   private[graft] def compactParts(headline: String, adaptive: String,
       cpus: String, queriesTotal: Int, fullPath: String, failed: String,
-      requeried: String, acceptRecheck: String, sf1MinMergedN: Int,
+      requeried: String, sf1MinMergedN: Int,
       floor: String, sf1: String, spill: String,
       load: String, budget: String, sfDir: String): (String, String) = (
     s"""{"metric":"total",$headline,"unit":"sec",$adaptive,""" +
       s""""cpus":"$cpus","queries":""",
     s""","queries_total":$queriesTotal,"full":"$fullPath",""" +
-      s""""failed":$failed,"requeried":$requeried,$acceptRecheck,""" +
+      s""""failed":$failed,"requeried":$requeried,""" +
       s""""sf1_min_merged_n":$sf1MinMergedN,$floor,""" +
       s"""$sf1,$spill,$load,$budget,""" +
       s""""sf":"$sfDir"}""")
@@ -443,46 +408,24 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val loadStart = osLoadAvg
-    val probeStart = speedProbe
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // contended mode is decided from the PRE-RUN external load (every
-    // later loadavg reading is polluted by our own 32-thread phases) OR a
-    // slow pre-run speed probe (host throttling that loadavg can't see);
-    // SPARK_GRAFT_BENCH_CONTENDED=1/0 overrides for dev testing.
-    // PRE-RUN QUIESCE (VERDICT r16 item 1): r16's driver window started
-    // at load 8.2, the run flipped contended, and the graded artifact
-    // published sf1_q1 at 2.60× the reference while five committed quiet
-    // runs read 0.61×. A loaded START is often a co-tenant burst that
-    // decays within minutes — worth a bounded wait (≤180 s of the 1500 s
-    // budget) BEFORE deciding the whole run's rigor, because every phase
-    // inherits that decision. If load and a fresh speed probe come back
-    // under the gates the run proceeds at full rigor; if not, contended
-    // mode engages exactly as before. The wait and its outcome are
-    // recorded ("pre_quiesce"), so a grader sees the run tried to shed
-    // the contention instead of silently measuring through it.
-    var preQuiesce: Option[(Int, Double, Double)] = None
+    // the one bounded wait (see the scaladoc); a loaded start is often a
+    // co-tenant burst that decays within minutes, and every phase inherits
+    // this decision. SPARK_GRAFT_BENCH_CONTENDED=1/0 overrides it.
+    var preQuiesce: Option[(Int, Double)] = None
     val contended = sys.env.get("SPARK_GRAFT_BENCH_CONTENDED") match {
       case Some(v) => v == "1"
+      case None if loadStart <= ContentionLoadGate => false
       case None =>
-        if (loadStart <= ContentionLoadGate &&
-            probeStart <= ContentionProbeGateS) false
-        else {
-          // the probe is IN the wait condition (ADVICE r17): probe-only
-          // contention (host throttling loadavg can't see) must also get
-          // the bounded decay wait, not a single immediate re-probe
-          var waited = 0
-          var loadAfter = osLoadAvg
-          var probeAfter = speedProbe
-          while ((loadAfter > ContentionLoadGate ||
-                  probeAfter > ContentionProbeGateS) && waited < 180) {
-            Thread.sleep(15000); waited += 15
-            loadAfter = osLoadAvg
-            probeAfter = speedProbe
-          }
-          preQuiesce = Some((waited, loadAfter, probeAfter))
-          loadAfter > ContentionLoadGate || probeAfter > ContentionProbeGateS
+        var waited = 0
+        var load = loadStart
+        while (load > ContentionLoadGate && waited < QuiesceMaxS) {
+          Thread.sleep(15000); waited += 15
+          load = osLoadAvg
         }
+        preQuiesce = Some((waited, load))
+        load > ContentionLoadGate
     }
     // mid-run escalation: a quiet start that still outruns 45% of the
     // deadline (the quiet full run fits in ~40%) degrades to single-run
@@ -493,24 +436,41 @@ object Bench {
       s.sparkContext.setLogLevel("ERROR")
       s
     }
-    val spark = newSession()
+    // the acceptance session, then (after the spill point) the suite
+    // session, which also runs the sf1 canaries and the requery pass
+    var live = newSession()
 
-    def runOnce(s: SparkSession, name: String, dir: String)
-        : Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(s, dir)
-          .write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch {
-        case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
+    def failure(e: Throwable): String =
+      s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
+    lazy val sf1Dir: Either[String, String] =
+      try Right(ensureSf1Dir(live, sfDir))
+      catch { case e: Throwable => Left(s"sf1 build: ${failure(e)}") }
+    val sf1Query = Sf1Points.toMap
+
+    /** One timed run of a suite row or sf1 point, in the live session,
+      * its jobs tagged with `key`. sf1 points run on the SF≈1 fixture
+      * with the 10× media corpus (read per call by Multimodal.MediaDocs;
+      * correctness runs never set it), set for this run only.
+      */
+    def runOnce(key: String): Either[String, Double] = {
+      val sf1 = sf1Query.contains(key)
+      (if (sf1) sf1Dir else Right(sfDir)).flatMap { dir =>
+        if (sf1) System.setProperty("graft.mm.mediaDocs", "5120")
+        val t0 = System.nanoTime()
+        try RowMetrics.tagged(live, key) {
+          SparkEntry.queries(sf1Query.getOrElse(key, key))(live, dir)
+            .write.format("noop").mode("overwrite").save()
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable => Left(failure(e)) }
+        finally if (sf1) System.clearProperty("graft.mm.mediaDocs")
       }
     }
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      s(s.length / 2)
+    // median of Iters runs, or the first failure
+    def medianOf(runs: Seq[Either[String, Double]]): Either[String, Double] = {
+      val ts = runs.collect { case Right(t) => t }.sorted
+      if (ts.size == Iters) Right(ts(ts.size / 2))
+      else Left(runs.collectFirst { case Left(e) => e }.getOrElse("unknown"))
     }
 
     // committed previous-round baseline (bench_baseline.json, same emitted
@@ -537,14 +497,12 @@ object Bench {
             .filter(k => qn.get(k).isNumber)
             .map(k => k -> qn.get(k).asDouble)
             .toMap
-          // sf1 canaries live at the top level of the emitted format;
-          // they deserve the same outlier re-measurement as suite rows.
-          // Restricted to ACTUAL Sf1Points keys (ADVICE r14: a bare
-          // startsWith("sf1_") would also ingest any other sf1_-prefixed
-          // field of an artifact committed as the baseline)
-          val sf1Keys = Sf1Points.map(_._1).toSet
+          // sf1 points live at the top level of the emitted format;
+          // restricted to ACTUAL Sf1Points keys (a bare startsWith("sf1_")
+          // would also ingest any other sf1_-prefixed field of an artifact
+          // committed as the baseline)
           val sf1 = root.fieldNames().asScala
-            .filter(k => sf1Keys(k) && root.get(k).isNumber)
+            .filter(k => sf1Query.contains(k) && root.get(k).isNumber)
             .map(k => k -> root.get(k).asDouble)
             .toMap
           (suite ++ sf1,
@@ -553,19 +511,14 @@ object Bench {
         }
       } catch { case _: Throwable => (Map.empty[String, Double], None) }
     }
-    // committed-minima snapshot embedded in BOTH artifacts (VERDICT r16
-    // item 1: the r16 window was contended and the graded artifact
-    // carried ONLY the window's 2.60× reading while the committed quiet
-    // floor stood at 0.59× — the acceptance floor must ride the graded
-    // artifact itself, keyed distinctly from the fresh window readings).
+    // committed-minima snapshot embedded in BOTH artifacts: a contended
+    // window's artifact must carry the quiet floor with it, keyed
+    // distinctly from the fresh window readings
     val minimaJson: String =
       if (baseline.isEmpty) """"minima":null"""
       else {
-        // assembled from a Seq of complete fragments (ADVICE r17 medium):
-        // the comma-suffixed-prefix form emitted {"suite_total":X,,...}
-        // or {,"src":...} whenever the matched baseline carried none of
-        // the floor keys — malformed JSON in BOTH artifacts, the exact
-        // parsed:null failure mode this code exists to prevent
+        // assembled from a Seq of complete fragments, so a baseline with
+        // none of the floor keys still yields valid JSON
         val fields =
           baselineSuiteFloor.map(t => s""""suite_total":$t""").toSeq ++
           Seq("sf1_q1", "sf1_q18", "sf1_dedup_semantic")
@@ -577,64 +530,35 @@ object Bench {
 
     var fullIterRows = 0
     var singleRunRows = 0
-    def medianOf(s: SparkSession, name: String, dir: String)
-        : Either[String, Double] = {
-      val runs = (1 to Iters).map(_ => runOnce(s, name, dir))
-      // between QUERIES, not iterations: iterations legitimately reuse a
-      // query's own caches (that is the cache's job), but blocks must not
-      // leak into the next query's measurement or pin memory for the run
-      Caches.releaseAll(s)
-      val times = runs.collect { case Right(t) => t }
-      if (times.size == Iters) Right(median(times))
-      else Left(runs.collectFirst { case Left(e) => e }.getOrElse("unknown"))
-    }
-
-    // Adaptive iteration count (r13 rc=124 remedy, 2/3 of the suite's
-    // wall clock): one timed run decides — a time at or under 1.5× its
-    // committed baseline (or under the noise floor) is CONSISTENT, and
-    // re-measuring a consistent sub-second row twice more buys no
-    // information the requery phase wouldn't recover anyway. Only an
-    // apparent regression (or a row with no baseline yet) pays the full
-    // median-of-Iters, and >1.5× outliers still get the quiesced requery.
-    // The gate was 1.3× through the first r15 run — but the committed
-    // baseline is a MIN-merge across rounds, so it only ever gets lower,
-    // and a gate tighter than the requery threshold ratchets ever more
-    // ordinary-noise rows (165 of 262 in the r15 quiet run, 907 s wall vs
-    // r14's 566) into full iterations for rows the requery pass would
-    // never even flag. 1.5× aligns the two gates: anything the fast path
-    // waves through is by definition not an outlier.
-    // In contended/escalated mode EVERY row is single-run — re-measuring
-    // under external load buys noise, not information, and the r14
-    // driver window proved the full-rigor path can't fit a 3× slowdown.
-    def adaptiveOf(s: SparkSession, name: String, dir: String,
-                   baseKey: String = null)
-        : Either[String, Double] = {
-      val bk = if (baseKey == null) name else baseKey
-      val first = runOnce(s, name, dir)
+    // Adaptive iteration count: one timed run at or under OutlierRatio ×
+    // its committed floor (or under the noise floor) is accepted as-is;
+    // an apparent regression, or a row with no floor yet, pays the full
+    // median-of-Iters. In contended/escalated mode EVERY row is
+    // single-run — re-measuring under external load buys noise, not
+    // information. Caches are released between QUERIES, not iterations:
+    // iterations legitimately reuse a query's own caches, but blocks must
+    // not leak into the next query's measurement.
+    def adaptiveOf(key: String): Either[String, Double] = {
+      val first = runOnce(key)
       val out = first match {
         case Right(t) if singleRun || t <= NoiseFloorSec ||
-            baseline.get(bk).exists(b => t <= 1.5 * b) =>
+            baseline.get(key).exists(b => t <= OutlierRatio * b) =>
           singleRunRows += 1
-          Right(t)
+          first
         case Right(_) =>
           fullIterRows += 1
-          val rest = (2 to Iters).map(_ => runOnce(s, name, dir))
-          val all = first +: rest
-          val ts = all.collect { case Right(x) => x }
-          if (ts.size == Iters) Right(median(ts))
-          else Left(all.collectFirst { case Left(e) => e }.get)
-        case Left(e) => Left(e)
+          medianOf(first +: (2 to Iters).map(_ => runOnce(key)))
+        case Left(_) => first
       }
-      Caches.releaseAll(s)
+      Caches.releaseAll(live)
       out
     }
 
-    // --- incremental partial artifact (r13: the timed-out run left the
-    // driver NOTHING). After every completed query the full artifact file
-    // is rewritten with everything measured so far ("partial":true), and
-    // every tenth query a SMALL complete JSON line goes to stdout — the
-    // 2000-char combined-tail capture then always ends within ~10 rows of
-    // a parseable line even if the driver kills the process mid-suite.
+    // --- incremental partial artifact: after every completed query the
+    // full artifact file is rewritten with everything measured so far
+    // ("partial":true), and every tenth query a SMALL complete JSON line
+    // goes to stdout, so a ~2000-char tail capture always ends within ~10
+    // rows of a parseable line even if the process is killed mid-suite.
     def r3(t: Double): Double = math.rint(t * 1000) / 1000
     val outPathStr =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out/bench.json")
@@ -684,69 +608,43 @@ object Bench {
     }
 
     // untimed warm-up: session, codegen, parquet footers
-    runOnce(spark, "tpch_q6", sfDir)
+    runOnce("tpch_q6")
 
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // every sf1 point runs unless a dev filter leaves it out
-    def sf1Runs(key: String): Boolean = only.forall(_.contains(key))
     // per-point cost estimate for deadline checks (unknown points assume
     // 5 s/iter); single-run mode pays ~1 measured run + slack
     def sf1CostEst(key: String): Double =
       baseline.getOrElse(key, 5.0) * (if (singleRun) 2 else Iters + 1) + 45
-
-    // ==== PHASE 1: ACCEPTANCE — the graded numbers, first, in the fresh
-    // JVM (quiesced by construction; one untimed warm-up already absorbed
-    // codegen/classload). Fourteen rounds ran these LAST and the driver
-    // never harvested one.
-    markPhase("acceptance_start")
-    // bounded pre-acceptance quiesce: only at run start is a wait
-    // affordable, and only in non-contended mode is it useful (a loaded
-    // box won't decay on our schedule — measure now, cheaply, instead)
-    val acceptGate: Option[(Double, Int)] =
-      if (contended || osLoadAvg <= 4.0) None
-      else {
-        var waited = 0
-        while (osLoadAvg > 4.0 && waited < 60) {
-          Thread.sleep(15000); waited += 15
+    // times the given sf1 points a dev filter leaves in, each after a
+    // clock check, flushing the partial artifact after each
+    def timeSf1(keys: Seq[String], phase: String,
+                before: Seq[(String, Either[String, Double])])
+        : Seq[(String, Either[String, Double])] = {
+      val acc =
+        scala.collection.mutable.ArrayBuffer.empty[(String, Either[String, Double])]
+      for (key <- keys if only.forall(_.contains(key))) {
+        if (timeLeft < sf1CostEst(key)) deadlineSkipped += key
+        else {
+          acc += key -> adaptiveOf(key)
+          flushPartial(before ++ acc, phase, stdout = true)
         }
-        Some((osLoadAvg, waited))
-      }
-    lazy val sf1Dir: Either[String, String] =
-      try Right(ensureSf1Dir(spark, sfDir))
-      catch {
-        case e: Throwable => Left(s"sf1 build: ${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).take(120))
-      }
-    val acceptanceRaw: Seq[(String, Option[Either[String, Double]])] = {
-      val acc = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Option[Either[String, Double]])]
-      for ((key, query) <- Sf1Points if Sf1Headline(key)) {
-        val v: Option[Either[String, Double]] =
-          if (!sf1Runs(key)) None
-          else if (timeLeft < sf1CostEst(key)) {
-            deadlineSkipped += key
-            None
-          } else Some(sf1Dir.flatMap(dir =>
-            adaptiveOf(spark, query, dir, baseKey = key)))
-        acc += key -> v
-        if (v.isDefined)
-          flushPartial(acc.collect { case (k, Some(e)) => k -> e }.toSeq,
-            "acceptance", stdout = true)
       }
       acc.toSeq
     }
 
-    // --- spill-under-pressure point (VERDICT r6 task 5), still inside
-    // the acceptance phase: part of the graded evidence. The 8 GiB
-    // sandbox heap never pressures these fixtures, so the linear-shape
-    // claims are only ever exercised fully in memory. This point restarts
-    // Spark with execution+storage memory squeezed to 1% of the heap and
-    // 2 shuffle partitions (two fat aggregate tasks), runs the
-    // segment-keeper aggregate on the SF≈1 corpus, and records wall time
-    // plus ACTUAL task-metric spill bytes — proving the 100 TB story
-    // "the aggregate completes via spill instead of OOM" on real
-    // machinery, not by assertion.
+    // ==== PHASE 2: ACCEPTANCE — the graded numbers, first, in the fresh
+    // JVM (one untimed warm-up already absorbed codegen/classload)
+    markPhase("acceptance_start")
+    val acceptance =
+      timeSf1(Sf1Points.map(_._1).filter(Sf1Headline), "acceptance", Nil)
+
+    // ==== PHASE 3: SPILL under pressure, still part of the graded
+    // evidence. The sandbox heap never pressures these fixtures, so this
+    // point restarts Spark with execution+storage memory squeezed to 1% of
+    // the heap and 2 shuffle partitions (two fat aggregate tasks), runs
+    // the segment-keeper aggregate on the SF≈1 corpus, and records wall
+    // time plus ACTUAL task-metric spill bytes.
     markPhase("spill_start")
     // per-point disk-spill bytes for the compact line (the full objects —
     // wall seconds, memory bytes, errors — ride only the full artifact)
@@ -757,7 +655,7 @@ object Bench {
       deadlineSkipped += "spill"
       None
     } else sf1Dir.toOption.map { dir =>
-      spark.stop()
+      live.stop()
       val s2 = context.SessionContext.local(cpus.toInt, 2,
         "spark.memory.fraction" -> "0.01",
         // fixture rows are small enough that even 1% of the sandbox heap
@@ -772,23 +670,21 @@ object Bench {
         "spark.shuffle.spill.numElementsForceSpillThreshold" -> "10000").spark
       s2.sparkContext.setLogLevel("ERROR")
       val metrics = RowMetrics.attach(s2)
-      // two spill points under the same squeezed session (VERDICT r16
-      // item 7): the shuffle-heavy dedup aggregate AND the largest
-      // window+hash-aggregate row (scd2_history — per-user running
-      // windows over the ×10 events sort through UnsafeExternalSorter's
-      // forced threshold, and the island aggregate takes the fallback),
-      // so both halves of the 100 TB degradation story carry task-metric
-      // evidence. Each point takes only its own jobs' bytes.
+      // two spill points under the same squeezed session: the
+      // shuffle-heavy dedup aggregate AND the largest window+hash-aggregate
+      // row (scd2_history — per-user running windows over the ×10 events
+      // sort through UnsafeExternalSorter's forced threshold, and the
+      // island aggregate takes the fallback), so both halves of the 100 TB
+      // degradation story carry task-metric evidence. Each point takes
+      // only its own jobs' bytes.
       def spillPoint(key: String, query: String): String = {
         metrics.take()
         val t0 = System.nanoTime()
-        val res = try {
+        val res = try RowMetrics.tagged(s2, key) {
           SparkEntry.queries(query)(s2, dir)
             .write.format("noop").mode("overwrite").save()
           Right((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
-        }
+        } catch { case e: Throwable => Left(failure(e)) }
         val m = metrics.take()
         val (mem, disk) = (m.total(_.memorySpillBytes), m.total(_.diskSpillBytes))
         res match {
@@ -807,24 +703,20 @@ object Bench {
       val out = spillPoint("spill", "dedup_segment_keep") + "," +
         spillPoint("spill_agg", "scd2_history")
       s2.stop()
+      live = newSession()
+      // one untimed pass absorbs the new context's startup
+      runOnce("tpch_q6")
       out
     }).getOrElse(""""spill":null,"spill_agg":null""")
 
-    // ==== PHASE 2: the sf0.1 suite ====
+    // ==== PHASE 4: the suite ====
     markPhase("suite_start")
-    val spark2 = newSession()
-    // fresh SparkContext (the spill point stopped the last one): one
-    // untimed pass absorbs context startup before the first timed row
-    runOnce(spark2, "tpch_q6", sfDir)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // the suite itself also spends against the deadline: if a future
-    // suite outgrows even the single-pass budget, the remaining rows are
-    // recorded under "deadline_skipped" and every later phase still
-    // emits — a complete partial artifact beats a harness kill that
-    // loses everything (the r13 failure mode)
-    val acceptanceDone: Seq[(String, Either[String, Double])] =
-      acceptanceRaw.collect { case (k, Some(e)) => k -> e }
+    // the suite itself also spends against the deadline: the remaining
+    // rows are recorded under "deadline_skipped" and every later phase
+    // still emits — a complete partial artifact beats a kill that loses
+    // everything
     val results: Seq[(String, Either[String, Double])] = {
       val acc =
         scala.collection.mutable.ArrayBuffer.empty[(String, Either[String, Double])]
@@ -834,142 +726,48 @@ object Bench {
           deadlineSkipped ++= names.drop(i)
           stopped = true
         } else {
-          acc += n -> adaptiveOf(spark2, n, sfDir)
-          flushPartial(acceptanceDone ++ acc.toSeq, "suite",
-            stdout = i % 10 == 9)
+          acc += n -> adaptiveOf(n)
+          flushPartial(acceptance ++ acc.toSeq, "suite", stdout = i % 10 == 9)
         }
       }
       acc.toSeq
     }
     val measured: Set[String] = results.map(_._1).toSet
 
-    // --- quiesced re-run of apparent outliers (round-over-round de-noise)
-    // Suite runs contend with each other (GC, page cache, JIT churn): r6's
-    // tpch_q2/q8 read 3.8× "regressed" in the suite yet re-ran at 1.0 s
-    // isolated. Compare each suite median against the committed
-    // previous-round baseline (bench_baseline.json — same emitted format,
-    // applied only when sf AND cpus match); anything >1.5× its baseline
-    // (and above an absolute noise floor) is re-measured in this quiesced
-    // tail phase, AFTER the suite stops competing. Both numbers are
-    // recorded under "requeried"; the headline takes the min (the better
-    // estimate of the query's true cost — a query cannot get faster than
-    // it is). The threshold was 2× through r8, which let 1.5-1.7× drifts
-    // (r8: tpch_q10/q11, text_tfidf) sit on the board as unfalsifiable
-    // ambers; 1.5× makes every delta a grader would flag carry its own
-    // quiesced counter-evidence. SKIPPED OUTRIGHT in contended mode:
-    // requerying under external load measures the contention again, at
-    // 3× the price (VERDICT r14 item 2).
+    // ==== PHASE 5: the non-headline sf1 canaries (shape regressions),
+    // in the suite session
+    markPhase("sf1_start")
+    val canaries = timeSf1(Sf1Points.map(_._1).filterNot(Sf1Headline), "sf1",
+      acceptance ++ results)
+
+    // ==== PHASE 6: the one requery pass (see requeryCandidates). The
+    // clock is checked before each candidate: an sf1 outlier can be a
+    // 19 s row, and 3 iterations of it must not run into the kill. Each
+    // entry is (first, requery, load before, load after); the load pair
+    // tells external contention (high before) from self-load (high
+    // after only).
     markPhase("requery_start")
-    // streaming rows re-measure at a TIGHTER 1.3×: micro-batch startup
-    // makes them noise-prone (r9: stream_exec_union sat at 1.36× —
-    // below the 1.5× gate, above what a grader waves through)
-    // deadline: requeries are evidence-quality work, never worth an rc=124
-    // — cap the set at the 8 worst, check the clock BEFORE EACH requery
-    // (ADVICE r14: outliers are by definition slow rows, and an unchecked
-    // 8×3-iteration tail can overrun by minutes), and skip outright when
-    // the clock is short (skips are recorded, suite numbers still stand)
-    val outliers = {
-      val all = results.collect {
-        case (k, Right(t))
-          if baseline.get(k).exists { b =>
-            val thr = if (k.startsWith("stream_")) 1.3 else 1.5
-            t > thr * b && t > NoiseFloorSec
-          } => k
-      }
-      val capped = all.sortBy(k => -results.collectFirst {
-        case (`k`, Right(t)) => t }.getOrElse(0.0)).take(8)
-      if (contended) {
-        if (all.nonEmpty) contentionSkipped += "requery"
-        Seq.empty
-      } else if (timeLeft < 120) {
-        if (all.nonEmpty) deadlineSkipped += "requery"
-        Seq.empty
-      } else capped
-    }
-    // (suite, quiesced, load-before, load-after) — the PAIR of load stamps
-    // lets a grader see whether the "quiesced" value itself ran contended
-    // (r10: the sf1 requery tail ran at load 20 and published values WORSE
-    // than suite). Two stamps because on a 32-core local[*] box the 1-min
-    // loadavg read AFTER a requery mostly reflects that requery's own
-    // work (r11 stamps read 16-22 purely self-inflicted); before/after
-    // bracketing separates external contention (high BEFORE) from
-    // self-load (high AFTER only).
-    // contention CONTROL for each requery batch (VERDICT r15 item 3: the
-    // sf1 requery gate expired its bounded wait at load 3.14 and
-    // published sf1_events_anomaly 2.8× WORSE than suite under a
-    // "quiesced" label — and HOST-level contention is invisible to the
-    // VM's loadavg entirely): a cheap fixed row (tpch_q1) is timed at the
-    // head of the batch and judged against its committed baseline. If the
-    // control reads > 1.5× baseline the box is NOT quiet no matter what
-    // loadavg says, and the whole batch is skipped and recorded as
-    // contended — suite numbers stand, min-merge keeps them honest.
-    // (control_s, baseline_s, ok) per batch, null when the batch didn't
-    // run or had no control baseline.
-    var requeryControl: Option[String] = None
-    var sf1RequeryControl: Option[String] = None
-    def controlOk(s: SparkSession, dir: String, baseKey: String,
-                  record: String => Unit): Boolean =
-      baseline.get(baseKey) match {
-        case Some(b) =>
-          runOnce(s, "tpch_q1", dir) match {
-            case Right(t) =>
-              val ok = t <= 1.5 * b
-              record(s"""{"control_s":${r3(t)},"baseline_s":$b,"ok":$ok}""")
-              ok
-            case Left(_) =>
-              // a control that can't even RUN must not poison the JSON
-              // with a non-finite sentinel (Infinity is not valid JSON —
-              // the parsed:null failure mode); -1 + ok:false records the
-              // anomaly and conservatively skips the batch. A genuine
-              // tpch_q1 breakage is already visible as a suite failure.
-              record(s"""{"control_s":-1,"baseline_s":$b,"ok":false}""")
-              false
-          }
-        case None =>
-          // ADVICE r16: a missing baseline key must not silently disable
-          // the contention gate while the artifact reads null — record
-          // the bypass distinctly (ok:null + reason) and let the batch
-          // proceed; no committed floor is a first-round condition, not
-          // evidence of contention.
-          record("""{"control_s":null,"baseline_s":null,"ok":null,""" +
-            """"reason":"no_baseline"}""")
-          true
-      }
+    val firstOk: Map[String, Double] = (results ++ acceptance ++ canaries)
+      .collect { case (k, Right(t)) => k -> t }.toMap
+    if (contended) contentionSkipped += "requery"
     val requeried: Map[String, (Double, Double, Double, Double)] =
-      if (outliers.isEmpty) Map.empty
-      else {
-        Caches.releaseAll(spark2)
-        System.gc()
-        Thread.sleep(1000)
-        if (!controlOk(spark2, sfDir, "tpch_q1", c => requeryControl = Some(c))) {
-          contentionSkipped += "requery_control"
-          Map.empty
+      requeryCandidates(firstOk, baseline, contended).flatMap { k =>
+        val t = firstOk(k)
+        if (timeLeft < t * Iters + 70) {
+          deadlineSkipped += s"requery:$k"
+          None
         } else {
-        val acc = scala.collection.mutable
-          .Map.empty[String, (Double, Double, Double, Double)]
-        var truncated = false
-        for (k <- outliers if !truncated) {
-          val est = results.collectFirst {
-            case (`k`, Right(t)) => t }.getOrElse(5.0) * Iters + 10
-          if (timeLeft < est + 60) {
-            deadlineSkipped += s"requery:$k"
-            truncated = true
-          } else {
-            val suite = results.collectFirst { case (`k`, Right(t)) => t }.get
-            val loadBefore = osLoadAvg
-            medianOf(spark2, k, sfDir).toOption
-              .foreach(q => acc(k) = (suite, q, loadBefore, osLoadAvg))
-          }
+          val loadBefore = osLoadAvg
+          val q = medianOf((1 to Iters).map(_ => runOnce(k)))
+          Caches.releaseAll(live)
+          q.toOption.map(q => k -> (t, q, loadBefore, osLoadAvg))
         }
-        acc.toMap
-        }
-      }
-    val finalTime: Map[String, Either[String, Double]] = results.map {
-      case (k, Right(t)) =>
-        k -> Right(requeried.get(k).map { case (s, q, _, _) => math.min(s, q) }
-          .getOrElse(t))
-      case kv => kv
-    }.toMap
+      }.toMap
+    // the published value of a reading: min(first, requery)
+    def published(k: String, e: Either[String, Double]): Either[String, Double] =
+      e.map(t => requeried.get(k).fold(t) { case (_, q, _, _) => math.min(t, q) })
+    val finalTime: Map[String, Either[String, Double]] =
+      results.map { case (k, e) => k -> published(k, e) }.toMap
     val qs = results.map {
       case (k, _) => finalTime(k) match {
         case Right(t) => s""""$k":$t"""
@@ -977,221 +775,36 @@ object Bench {
       }
     }.mkString("{", ",", "}")
 
-    // ==== PHASE 3: the non-headline sf1 canaries (shape regressions).
-    // The headline points already ran in the acceptance phase; these are
-    // the cheap watchdogs.
-    val canaryPoints = Sf1Points.filter { case (k, _) => !Sf1Headline(k) }
-    val anyCanary = canaryPoints.exists { case (k, _) => sf1Runs(k) }
-    // LOAD GATE (r9 verdict item 1): refuse to measure canaries in the
-    // suite's contention tail — bounded wait for the 1-minute load to
-    // decay below 4 on this 32-cpu box (the gate value and wait time go
-    // in the artifact, so a run that never quiesced is visibly flagged).
-    // No wait in contended mode: external load won't decay on our
-    // schedule, and the artifact already carries the contention stamps.
-    val sf1Gate: Option[(Double, Int)] =
-      if (!anyCanary) None
-      else {
-        spark2.stop()
-        System.gc()
-        var waited = 0
-        while (!contended && osLoadAvg > 4.0 && waited < 90 && timeLeft > 180) {
-          Thread.sleep(15000); waited += 15
-        }
-        Some((osLoadAvg, waited))
-      }
-    markPhase("sf1_start")
-    // 10× the image-dedup corpus for the sf1 phase only (read per-call by
-    // Multimodal.MediaDocs; the driver's correctness runs never set it)
-    if (anyCanary) System.setProperty("graft.mm.mediaDocs", "5120")
-    val sparkSf1: SparkSession =
-      if (!anyCanary) spark2
-      else {
-        val s2 = newSession()
-        // untimed warmup — EVERY fresh session pays codegen/JIT/classload
-        // on its first query; r11 published sf1_q18 "quiesced" 8.77 s
-        // (4.75× baseline) that a warm rerun measured at 1.71 s, purely
-        // because the restarted JVM's first requeried row ate the cold
-        // start the suite phase's untimed tpch_q6 absorbs
-        runOnce(s2, "tpch_q6", sfDir)
-        s2
-      }
-    val canaryRaw: Seq[(String, Option[Either[String, Double]])] = {
-      val acc = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Option[Either[String, Double]])]
-      for ((key, query) <- canaryPoints) {
-        val v: Option[Either[String, Double]] =
-          if (!sf1Runs(key)) None
-          // per-point deadline check, costed from the committed baseline:
-          // better a recorded skip than a driver kill
-          else if (timeLeft < sf1CostEst(key)) {
-            deadlineSkipped += key
-            None
-          } else Some(sf1Dir.flatMap(dir =>
-            adaptiveOf(sparkSf1, query, dir, baseKey = key)))
-        acc += key -> v
-        // keep the partial artifact current through the sf1 phase too:
-        // suite rows plus every sf1 point measured so far (no flush for
-        // filtered-out/skipped points — nothing new to record)
-        if (v.isDefined)
-          flushPartial(acceptanceDone ++ results ++ acc.collect {
-            case (k, Some(e)) => k -> e }, "sf1", stdout = true)
-      }
-      acc.toSeq
-    }
-    // acceptance + canaries merged back into declaration order
-    val sf1ByKey = (acceptanceRaw ++ canaryRaw).toMap
-    val sf1Raw: Seq[(String, Option[Either[String, Double]])] =
-      Sf1Points.map { case (k, _) => k -> sf1ByKey.getOrElse(k, None) }
-    markPhase("sf1_requery_start")
-    // same outlier discipline as the suite but at a TIGHTER 1.25×
-    // threshold: these are the headline baseline-comparison numbers, and
-    // a 1.5× contention drift that the suite's 2× gate would wave through
-    // (r8: sf1_q1 read 2.87 s in the tail phase, 1.75 s isolated) reads
-    // as a regression against BASELINE.md. Re-measured after a quiesce
-    // pause; min wins, both kept. Skipped outright in contended mode.
-    //
-    // LOAD GATE (r10 verdict item 1): r10's requery tail ran at loadavg
-    // 20.26 and published "quiesced" values WORSE than suite (minhash
-    // 70.1 s vs 20.4 s suite). Same discipline as the sf1 first pass:
-    // stop the session, bounded-wait for load < 4, restart fresh, and
-    // stamp each requery with the load it actually measured at.
-    var sparkLive: SparkSession = sparkSf1
-    var sf1RequeryGate: Option[(Double, Int)] = None
-    val sf1Requeried: Map[String, (Double, Double, Double, Double)] = {
-      // cheap-first by committed baseline: even with the explicit warmup
-      // below, the first-in-JVM row pays any residual cold cost, so it
-      // must never be an expensive headline row (r11: sf1_q18 ran first
-      // into a cold JVM and published 4.75× baseline)
-      val outl = sf1Raw.collect {
-        case (k, Some(Right(t)))
-          if baseline.get(k).exists(b => t > 1.25 * b && t > NoiseFloorSec) => k
-      }.sortBy(k => baseline.getOrElse(k, Double.MaxValue))
-      if (outl.isEmpty) Map.empty
-      else if (contended) {
-        contentionSkipped += "sf1_requery"
-        Map.empty
-      } else if (timeLeft < 180) {
-        deadlineSkipped += "sf1_requery"
-        Map.empty
-      } else {
-        Caches.releaseAll(sparkSf1)
-        sparkSf1.stop()
-        System.gc()
-        var waited = 0
-        while (osLoadAvg > 4.0 && waited < 90 && timeLeft > 120) {
-          Thread.sleep(15000); waited += 15
-        }
-        sf1RequeryGate = Some((osLoadAvg, waited))
-        val s3 = newSession()
-        sparkLive = s3
-        // untimed warmup: the restarted JVM's first query otherwise eats
-        // codegen/JIT/classload cold-start — the r11 fake-4.75× mechanism
-        runOnce(s3, "tpch_q6", sfDir)
-        // same control discipline as the suite batch, judged on the SF≈1
-        // fixture against the sf1_q1 baseline (the r15 failure was
-        // exactly here: gate expired, tail published as "quiesced")
-        val sf1CtlOk = sf1Dir.toOption.forall(dir =>
-          controlOk(s3, dir, "sf1_q1", c => sf1RequeryControl = Some(c)))
-        if (!sf1CtlOk) {
-          contentionSkipped += "sf1_requery_control"
-          Map.empty[String, (Double, Double, Double, Double)]
-        } else {
-        val acc = scala.collection.mutable
-          .Map.empty[String, (Double, Double, Double, Double)]
-        var truncated = false
-        for (k <- outl if !truncated) {
-          val suiteT = sf1Raw.collectFirst {
-            case (`k`, Some(Right(t))) => t
-          }.get
-          // per-requery clock check (ADVICE r14): an sf1 outlier can be a
-          // 19 s row — 3 iterations of it must not run into the kill
-          if (timeLeft < suiteT * Iters + 70) {
-            deadlineSkipped += s"sf1_requery:$k"
-            truncated = true
-          } else {
-            val query = Sf1Points.toMap.apply(k)
-            val loadBefore = osLoadAvg
-            sf1Dir.toOption
-              .flatMap(dir => medianOf(s3, query, dir).toOption)
-              .foreach(q => acc(k) = (suiteT, q, loadBefore, osLoadAvg))
-          }
-        }
-        acc.toMap
-        }
-      }
-    }
-    // the 10× media-corpus cap is an sf1-phase-only fixture knob; clear it
-    // so anything else later in this JVM touching ensureMediaTable sees
-    // the default corpus again
-    if (anyCanary) System.clearProperty("graft.mm.mediaDocs")
-    // run-end re-read of the BASELINE.md acceptance points (VERDICT r15
-    // item 4: the acceptance phase runs FIRST by design so it can never
-    // wait out a loaded start — r15's sf1_q1 read 2.905 s un-gated vs
-    // 1.52-1.64 s quiet). One extra single run each at run end; the
-    // published number is the min of the two honest readings (a reading
-    // can be contention-inflated, never deflated), both kept in the
-    // artifact under "accept_recheck". Warmth asymmetry acknowledged: the
-    // recheck runs in a long-warm JVM where the acceptance pass ran near
-    // start — but the committed bench_baseline minima ALREADY come from
-    // warm suite/requery readings (sf1_q1's published floor predates this
-    // recheck), so min-merging a warm reading follows the established
-    // convention rather than introducing a new bias.
-    markPhase("accept_recheck_start")
-    val acceptRecheckKeys = Seq("sf1_q1", "sf1_q18")
-    val acceptRecheck: Map[String, Double] =
-      if (contended || timeLeft < 90) Map.empty
-      else sf1Dir.toOption.map { dir =>
-        Caches.releaseAll(sparkLive)
-        acceptRecheckKeys.flatMap { k =>
-          val ranFirst = sf1Raw.exists {
-            case (`k`, Some(Right(_))) => true
-            case _ => false
-          }
-          if (!ranFirst || timeLeft < baseline.getOrElse(k, 3.0) * 2 + 20)
-            None
-          else
-            runOnce(sparkLive, Sf1Points.toMap.apply(k), dir)
-              .toOption.map(t => k -> t)
-        }.toMap
-      }.getOrElse(Map.empty)
-    // ADVICE r16: tag which published sf1 values were min-merged below
-    // their first-pass reading (by the quiesced requery or the run-end
-    // recheck), so cross-round comparisons see the convention at work
-    // instead of inferring it from accept_recheck deltas
-    val sf1Tagged: Seq[(String, Option[Either[String, Double]], Boolean)] =
-      sf1Raw.map {
-        case (k, Some(Right(t))) =>
-          val requeriedMin = sf1Requeried.get(k)
-            .map { case (s, q, _, _) => math.min(s, q) }.getOrElse(t)
-          val fin = acceptRecheck.get(k)
-            .map(r => math.min(requeriedMin, r)).getOrElse(requeriedMin)
-          (k, Some(Right(fin)), fin < t - 1e-9)
-        case (k, v) => (k, v, false)
-      }
+    // sf1 points in declaration order; None = filtered out or skipped
+    val sf1First = (acceptance ++ canaries).toMap
     val sf1: Seq[(String, Option[Either[String, Double]])] =
-      sf1Tagged.map { case (k, v, _) => k -> v }
-    val sf1MinMergedJson = s""""sf1_min_merged":${sf1Tagged.collect {
-      case (k, _, true) => s""""$k"""" }.mkString("[", ",", "]")}"""
+      Sf1Points.map { case (k, _) => k -> sf1First.get(k).map(published(k, _)) }
+    // which published sf1 values the requery lowered below their first
+    // reading, so cross-run comparisons see the min-merge at work
+    val sf1MinMerged = sf1.collect {
+      case (k, Some(Right(t))) if sf1First(k).exists(t < _ - 1e-9) => k
+    }
+    val sf1MinMergedJson =
+      s""""sf1_min_merged":${sf1MinMerged.map(k => s""""$k"""").mkString("[", ",", "]")}"""
     val sf1Json = sf1.map {
       case (k, Some(Right(t))) => s""""$k":$t"""
       case (k, _) => s""""$k":null"""
     }.mkString(",")
-    val allRequeried = requeried ++ sf1Requeried
-    val requeriedJson = allRequeried.toSeq.sortBy(_._1).map {
-      case (k, (s, q, lb, la)) =>
-        s""""$k":{"suite":$s,"quiesced":$q,"baseline":${baseline(k)},""" +
+    val requeriedJson = requeried.toSeq.sortBy(_._1).map {
+      case (k, (f, q, lb, la)) =>
+        s""""$k":{"first":$f,"requery":$q,""" +
+          s""""baseline":${baseline.get(k).getOrElse("null")},""" +
           s""""load_before":$lb,"load_after":$la}"""
     }.mkString("{", ",", "}")
-    val failed = (results.collect { case (k, Left(e)) =>
-        s""""$k":"${Json.escape(e)}""""
-      } ++ sf1.collect { case (k, Some(Left(e))) =>
-        s""""$k":"${Json.escape(e)}""""
-      }).mkString("{", ",", "}")
+    val failedAll = results.collect { case (k, Left(e)) => k -> e } ++
+      sf1.collect { case (k, Some(Left(e))) => k -> e }
+    val failed = failedAll.map { case (k, e) => s""""$k":"${Json.escape(e)}"""" }
+      .mkString("{", ",", "}")
     val anyFailed = results.exists(_._2.isLeft)
     // an all-unknown filter must not read as a perfect 0.0-second run,
     // and a deadline-truncated suite must not read as a fast one — but a
-    // null "value" is no longer the ONLY headline: "timed_total"/
-    // "timed_n" always carry the partial evidence (VERDICT r14 item 1)
+    // null "value" is never the ONLY headline: "timed_total"/"timed_n"
+    // always carry the partial evidence
     val truncatedSuite = results.size < names.size
     val total =
       if (anyFailed || names.isEmpty || truncatedSuite) "null"
@@ -1206,42 +819,14 @@ object Bench {
     markPhase("end")
     val loadEnd = osLoadAvg
     val preQJson = preQuiesce match {
-      case Some((w, l, p)) =>
-        s""""pre_quiesce":{"waited_s":$w,"load_after":$l,"probe_after":$p}"""
+      case Some((w, l)) => s""""pre_quiesce":{"waited_s":$w,"load_after":$l}"""
       case None => s""""pre_quiesce":null"""
     }
-    val gateJson = preQJson + "," + (acceptGate match {
-      case Some((l, w)) => s""""accept_load_gate":{"load":$l,"waited_s":$w}"""
-      case None => s""""accept_load_gate":null"""
-    }) + "," + (sf1Gate match {
-      case Some((l, w)) => s""""sf1_load_gate":{"load":$l,"waited_s":$w}"""
-      case None => s""""sf1_load_gate":null"""
-    }) + "," + (sf1RequeryGate match {
-      case Some((l, w)) =>
-        s""""sf1_requery_load_gate":{"load":$l,"waited_s":$w}"""
-      case None => s""""sf1_requery_load_gate":null"""
-    })
-    // requery-batch control verdicts + the run-end acceptance re-reads
-    def ctlJson(o: Option[String]): String = o.getOrElse("null")
-    val controlJson =
-      s""""requery_control":${ctlJson(requeryControl)},""" +
-      s""""sf1_requery_control":${ctlJson(sf1RequeryControl)}"""
-    val acceptRecheckJson =
-      if (acceptRecheck.isEmpty) s""""accept_recheck":null"""
-      else acceptRecheck.toSeq.sortBy(_._1)
-        .map { case (k, t) => s""""$k":${r3(t)}""" }
-        .mkString(""""accept_recheck":{""", ",", "}")
-    // per-phase contended verdict + suite-total-vs-committed-floor ratio
-    // (VERDICT r17 #4): the r17 window's 468 s raw suite total vs the
-    // 215 s floor needed bench_runs/ archaeology to attribute to
-    // mid-window load — now each phase boundary carries its own gate
-    // verdict and the artifact states the ratio itself. The ratio
-    // compares ONLY rows present in both this run and the committed
-    // baseline (new rows have no floor yet).
-    def phaseContended(l: Double, p: Double): Boolean =
-      l > ContentionLoadGate || p > ContentionProbeGateS
-    val phasesJson = phaseMarks.map { case (n, l, p) =>
-      s"""{"phase":"$n","load":$l,"probe_s":$p,"contended":${phaseContended(l, p)}}"""
+    // per-phase contended verdict + the suite-total-vs-committed-floor
+    // ratio, over rows present in both this run and the baseline (new
+    // rows have no floor yet)
+    val phasesJson = phaseMarks.map { case (n, l) =>
+      s"""{"phase":"$n","load":$l,"contended":${l > ContentionLoadGate}}"""
     }.mkString("[", ",", "]")
     val floorPairs = names.filter(measured).flatMap(k =>
       for (t <- finalTime(k).toOption; b <- baseline.get(k)) yield (t, b))
@@ -1251,15 +836,13 @@ object Bench {
     val loadJson =
       s""""load_avg":{"start":$loadStart,"end":$loadEnd},""" +
       s""""suite_vs_floor":$suiteVsFloor,""" +
-      s""""phases":$phasesJson,$gateJson"""
-    // actual measurement rigor (ADVICE r14: a flat "iters":3 hid that the
-    // adaptive path accepts most rows from one run): how many rows took
-    // each path, plus the contended-mode flag and what it skipped
+      s""""phases":$phasesJson,$preQJson"""
+    // actual measurement rigor: how many rows took each path, plus the
+    // contended-mode flag and what it skipped
     val adaptiveJson =
       s""""iters_max":$Iters,"adaptive":{"single_run":$singleRunRows,""" +
       s""""full_iters":$fullIterRows},""" +
       s""""contended":{"active":$contended,"load_start":$loadStart,""" +
-      s""""probe_start":$probeStart,""" +
       s""""skipped":${contentionSkipped.map(s => s""""$s"""")
         .mkString("[", ",", "]")}}"""
     val skippedJson = deadlineSkipped.map(s => s""""$s"""")
@@ -1267,71 +850,50 @@ object Bench {
     val budgetJson =
       s""""deadline_s":$DeadlineS,"elapsed_s":${r3(elapsedS)},""" +
       s""""deadline_skipped":$skippedJson"""
-    // FULL artifact → file (committed by the end-of-round snapshot):
-    // every per-query median at full precision. Overwrites the partial
-    // flushes — a completed artifact has "partial":false.
+    // FULL artifact → file: every per-query value at full precision.
+    // Overwrites the partial flushes — a completed artifact has
+    // "partial":false.
     val line =
       s"""{"metric":"total",$headlineJson,"unit":"sec",$adaptiveJson,""" +
       s""""cpus":"$cpus","queries":$qs,"failed":$failed,""" +
-      s""""requeried":$requeriedJson,$controlJson,$acceptRecheckJson,""" +
+      s""""requeried":$requeriedJson,""" +
       s"""$sf1MinMergedJson,$minimaJson,""" +
       s"""$sf1Json,$spillJson,$loadJson,""" +
       s"""$budgetJson,"sf":"$sfDir"}"""
     atomicWriteArtifact(line)
 
-    // COMPACT line → stdout, the one the harvester parses. BENCH_r06 AND
-    // r07 came back "parsed": null because the full line (≈10 KB) was
-    // truncated mid-object by a ~3 KB log-tail capture. Everything a
-    // grader acts on — headline total (or the partial timed_total), the
-    // acceptance sf1 points, failures, outlier evidence, spill proof,
-    // load context — plus the SLOWEST suite rows (the only ones whose
-    // magnitude matters on their own; the rest live in the full file,
-    // referenced by path) fits in ~2 KB.
-    // HARD BUDGET (ADVICE r11 medium): the harvester captures ~2000 chars;
-    // r6, r7 AND r11 all shipped "parsed": null because the compact line
-    // crept past the bound (r11: +load stamps on 12 requeried entries).
-    // Instead of hand-counting fields each round, assemble the fixed
-    // must-have core first, then spend whatever budget remains on the
-    // slowest suite rows — the line can no longer overflow by accretion.
-    // 1750, not 1900: the 2000-char capture is stdout+stderr COMBINED and
-    // ends with sbt's ~80-char epilogue, so a 1900-char line plus one
-    // stray WARN line already clips the head (the r10/r11 tails both
-    // start mid-JSON).
+    // COMPACT line → stdout: headline totals, the acceptance sf1 points,
+    // failures, requery evidence, spill proof and load context, plus the
+    // SLOWEST suite rows that fit. HARD BUDGET 1750: the tail capture is
+    // ~2000 chars of stdout+stderr COMBINED, ending with sbt's ~80-char
+    // epilogue, so the fixed core is assembled first and whatever budget
+    // remains goes to the slowest rows — the line cannot overflow by
+    // accretion. Every fragment below is CAPPED (count and/or length);
+    // the uncapped detail rides the full artifact, referenced by "full".
     val CompactBudget = 1750
-    // Every compact fragment below is CAPPED (count and/or length) so the
-    // fixed core can never again squeeze the queries map to {} by
-    // accretion (the r17/r18 failure); BenchCompactSpec asserts the
-    // worst-case core leaves ≥600 chars for per-query entries. The
-    // uncapped detail all rides the full artifact, referenced by "full".
-    // requeried: suite+quiesced only, worst 2 — baseline and both load
-    // stamps live in the full artifact
-    val requeriedCompact = allRequeried.toSeq.sortBy(-_._2._1).take(2).map {
-      case (k, (s, q, _, _)) =>
-        s""""$k":{"suite":${r3(s)},"quiesced":${r3(q)}}"""
+    // requeried: first+requery only, the 2 slowest first readings
+    val requeriedCompact = requeried.toSeq.sortBy(-_._2._1).take(2).map {
+      case (k, (f, q, _, _)) =>
+        s""""$k":{"first":${r3(f)},"requery":${r3(q)}}"""
     }.mkString("{", ",", "}")
-    val failedAll = (results.collect { case (k, Left(e)) => k -> e } ++
-      sf1.collect { case (k, Some(Left(e))) => k -> e })
-    // sf1: ONLY the 3 acceptance headliners plus a ran-count — the full
-    // canary set (14+ keys, ~450 chars in r18) is what pushed the core
-    // past budget; every point still rides the full artifact
+    // sf1: ONLY the acceptance headliners plus a ran-count; every point
+    // still rides the full artifact
     val sf1Compact = (sf1.collect {
       case (k, Some(Right(t))) if Sf1Headline(k) => s""""$k":${r3(t)}"""
       case (k, Some(Left(_))) if Sf1Headline(k) => s""""$k":null"""
     } :+ s""""sf1_ran":${sf1.count(_._2.isDefined)}""").mkString(",")
-    // committed acceptance floors, minimal form (the r16 lesson: a
-    // contended window's artifact must carry the quiet floor with it) —
-    // the full minima block now rides only the full artifact
+    // committed acceptance floors, minimal form
     val floorCompact =
       if (baseline.isEmpty) """"floor":null"""
       else s""""floor":${(baselineSuiteFloor.map(t => s""""suite":$t""").toSeq
         ++ baseline.get("sf1_q1").map(v => s""""sf1_q1":${r3(v)}"""))
         .mkString("{", ",", "}")}"""
-    // phases: contended-count summary; the per-phase quads are full-only
+    // phases: contended-count summary; the per-phase pairs are full-only
     val loadCompact =
       s""""load_avg":{"start":$loadStart,"end":$loadEnd},""" +
       s""""suite_vs_floor":$suiteVsFloor,""" +
-      s""""phases_contended":"${phaseMarks.count { case (_, l, p) =>
-        phaseContended(l, p) }}/${phaseMarks.size}",""" +
+      s""""phases_contended":"${phaseMarks.count(_._2 > ContentionLoadGate)}""" +
+      s"""/${phaseMarks.size}",""" +
       s""""pre_quiesce_s":${preQuiesce.map(_._1).getOrElse(0)}"""
     val adaptiveCompact =
       s""""adaptive":{"single_run":$singleRunRows,""" +
@@ -1352,8 +914,9 @@ object Bench {
       s""""partial":$truncatedSuite"""
     val (cPrefix, cSuffix) = compactParts(
       headlineCompact, adaptiveCompact, cpus, names.size, outPathStr,
-      failedCompact(failedAll), requeriedCompact, acceptRecheckJson,
-      sf1Tagged.count(_._3), floorCompact, sf1Compact, spillCompact, loadCompact, budgetCompactSlim, sfDir)
+      failedCompact(failedAll), requeriedCompact, sf1MinMerged.size,
+      floorCompact, sf1Compact, spillCompact, loadCompact, budgetCompactSlim,
+      sfDir)
     val slowest = names.filter(measured)
       .flatMap(k => finalTime(k).toOption.map(k -> _))
       .sortBy(-_._2)
@@ -1363,10 +926,10 @@ object Bench {
       System.err.println(
         s"WARN: compact bench line ${compact.length} chars exceeds " +
           s"$CompactBudget even with zero per-query entries")
-    // stop BEFORE the compact line goes out: the harvester's ~2000-char
-    // capture is stdout+stderr COMBINED, and Spark shutdown chatter after
-    // the println would push the one line that matters out of the tail
-    sparkLive.stop()
+    // stop BEFORE the compact line goes out: the tail capture is
+    // stdout+stderr COMBINED, and Spark shutdown chatter after the println
+    // would push the one line that matters out of the tail
+    live.stop()
     println(compact)
   }
 }

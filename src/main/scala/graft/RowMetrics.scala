@@ -35,11 +35,15 @@ final class RowMetrics private (spark: SparkSession) {
 
   private val jobListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("")
+      def prop(k: String) =
+        Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+      // every SQL job also carries Spark's "spark-session-…" tags, which
+      // say nothing about the row; a broadcast's own tag is kept
+      val tags = prop("spark.job.tags").split(",").toSet
+        .filter(t => t.nonEmpty && !t.startsWith("spark-session-"))
       RowMetrics.this.synchronized {
-        jobs(e.jobId) = Job(e.jobId, desc, e.time, -1L, 0, 0, 0L, 0L, 0L, 0L, 0L)
+        jobs(e.jobId) = Job(e.jobId, prop("spark.job.description"), tags,
+          e.time, -1L, 0, 0, 0L, 0L, 0L, 0L, 0L)
         e.stageIds.foreach(stageJob(_) = e.jobId)
       }
     }
@@ -95,9 +99,11 @@ final class RowMetrics private (spark: SparkSession) {
 
 object RowMetrics {
 
-  /** One job's sums. `endMs` is -1 while the job runs. */
-  final case class Job(id: Int, description: String, startMs: Long,
-      endMs: Long, stages: Int, tasks: Int, runMs: Long,
+  /** One job's sums. `tags` are the job tags set through [[tagged]] or
+    * `addJobTag`; `endMs` is -1 while the job runs.
+    */
+  final case class Job(id: Int, description: String, tags: Set[String],
+      startMs: Long, endMs: Long, stages: Int, tasks: Int, runMs: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long,
       memorySpillBytes: Long, diskSpillBytes: Long) {
     def wallMs: Long = if (endMs < 0) -1L else endMs - startMs
@@ -109,6 +115,15 @@ object RowMetrics {
 
   final case class Taken(jobs: Seq[Job], batches: Seq[Batch]) {
     def total(f: Job => Long): Long = jobs.map(f).sum
+  }
+
+  /** Runs `body` with `tag` on every job it starts — from this thread and
+    * from threads it creates — and removes the tag afterwards, so a row's
+    * jobs carry its name and later jobs do not.
+    */
+  def tagged[A](spark: SparkSession, tag: String)(body: => A): A = {
+    spark.sparkContext.addJobTag(tag)
+    try body finally spark.sparkContext.removeJobTag(tag)
   }
 
   def attach(spark: SparkSession): RowMetrics = {

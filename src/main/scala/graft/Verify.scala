@@ -26,8 +26,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try RowMetrics.tagged(spark, name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -277,7 +277,7 @@ object Multimodal {
   /** Media corpus cap: assets are generated for doc_id < MediaDocs so the
     * build-once table stays bounded at every SF (the oracle filters the
     * same way). A `def` reading `graft.mm.mediaDocs` so the bench's sf1
-    * phase can stress the phash quarter-join at 10× the image count; the
+    * runs can stress the phash quarter-join at 10× the image count; the
     * oracle strings interpolate the DEFAULT at object init and the
     * driver's correctness runs never set the property, so the gate always
     * compares like against like.

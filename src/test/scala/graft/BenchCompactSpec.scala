@@ -35,10 +35,8 @@ class BenchCompactSpec extends AnyFunSuite {
     val failed = Bench.failedCompact(Seq.fill(99)(longName -> WorstMessage))
     // requeried: capped at 2 entries
     val requeried = Seq.fill(2)(
-      s""""$longName":{"suite":9999.999,"quiesced":9999.999}""")
+      s""""$longName":{"first":9999.999,"requery":9999.999}""")
       .mkString("{", ",", "}")
-    val acceptRecheck =
-      """"accept_recheck":{"sf1_q1":9999.999,"sf1_q18":9999.999}"""
     val floor = """"floor":{"suite":9999.999,"sf1_q1":9999.999}"""
     // sf1: the 3 acceptance headliners + ran-count, never the full set
     val sf1 =
@@ -54,7 +52,7 @@ class BenchCompactSpec extends AnyFunSuite {
       s""""elapsed_s":9999.999,"deadline_skipped_n":999,""" +
         s""""deadline_skipped":["$longName"]"""
     Bench.compactParts(headline, adaptive, "32", 282,
-      "bench_out/bench.json", failed, requeried, acceptRecheck, 99, floor,
+      "bench_out/bench.json", failed, requeried, 99, floor,
       sf1, spill, load, budget, "/data/testdata/sf0.1")
   }
 
@@ -104,5 +102,55 @@ class BenchCompactSpec extends AnyFunSuite {
     val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(tiny)
     assert(parsed.path("queries").size() == 0)
+  }
+}
+
+/** [[Bench.requeryCandidates]]: which first readings the one requery pass
+  * re-measures.
+  */
+class BenchRequerySpec extends AnyFunSuite {
+  import Bench.requeryCandidates
+
+  private val floors = Map("a" -> 1.0, "b" -> 1.0, "tiny" -> 0.1,
+    "sf1_q1" -> 1.0, "sf1_q18" -> 2.0)
+
+  test("a row is a candidate only above the ratio and the noise floor") {
+    // b sits exactly at the ratio; tiny is 2.9x its floor but under the
+    // noise floor
+    val first = Map("a" -> 1.6, "b" -> 1.5, "tiny" -> 0.29)
+    assert(requeryCandidates(first, floors, contended = false) == Seq("a"))
+    assert(Bench.NoiseFloorSec == 0.3 && Bench.OutlierRatio == 1.5)
+  }
+
+  test("at most RequeryCap outliers, worst ratio first") {
+    val rows = (1 to 20).map(i => f"r$i%02d")
+    val first = rows.zipWithIndex.map { case (k, i) => k -> (2.0 + i) }.toMap
+    val got = requeryCandidates(first, rows.map(_ -> 1.0).toMap, contended = false)
+    assert(Bench.RequeryCap == 8)
+    assert(got == rows.reverse.take(8), got)
+  }
+
+  test("acceptance points are candidates whenever they ran, under the ratio too") {
+    val first = Map("sf1_q1" -> 0.5, "sf1_q18" -> 2.0, "a" -> 5.0, "b" -> 1.0)
+    assert(requeryCandidates(first, floors, contended = false) ==
+      Seq("sf1_q1", "sf1_q18", "a"))
+    // without a floor as well, and on top of the capped outliers
+    val rows = (1 to 20).map(i => f"r$i%02d")
+    val many = rows.map(_ -> 9.0).toMap + ("sf1_q1" -> 1.0)
+    val got = requeryCandidates(many, rows.map(_ -> 1.0).toMap, contended = false)
+    assert(got.head == "sf1_q1" && got.size == 1 + Bench.RequeryCap, got)
+    // one that did not run is not requeried
+    assert(!requeryCandidates(Map("a" -> 5.0), floors, contended = false)
+      .exists(Bench.AcceptancePoints.contains))
+  }
+
+  test("a contended run requeries nothing") {
+    val first = Map("sf1_q1" -> 9.0, "sf1_q18" -> 9.0, "a" -> 9.0)
+    assert(requeryCandidates(first, floors, contended = true).isEmpty)
+  }
+
+  test("a row without a floor is never a candidate") {
+    assert(requeryCandidates(Map("new_row" -> 100.0), floors, contended = false).isEmpty)
+    assert(requeryCandidates(Map("a" -> 100.0), Map.empty, contended = false).isEmpty)
   }
 }

@@ -165,6 +165,15 @@ class HygieneSpec extends AnyFunSuite {
     }
     assert(mains.sorted == Seq("Audit", "Bench", "Demo", "Verify"), mains)
   }
+
+  test("source: Bench waits in exactly one place, the bounded pre-run wait") {
+    val needle = "Thread" + ".sleep" // not a hit in this file
+    val n = scalaSources(mainSrc).collect {
+      case (f, ls) if f.endsWith("/Bench.scala") =>
+        ls.map(_.split(java.util.regex.Pattern.quote(needle), -1).length - 1).sum
+    }
+    assert(n == Seq(1), s"sleeps in Bench.scala: $n")
+  }
 }
 
 /** The driver regenerates /root/testdata between rounds and has already
@@ -365,7 +374,7 @@ class OracleTypeConventionSpec extends AnyFunSuite {
   * zero benchmark numbers for the round). Static assertion from the
   * committed baseline: the adaptive single-pass suite, every sf1 point
   * at full median-of-Iters rigor, and a generous fixed
-  * overhead (sessions, warmups, capped load gates, sf1 build, spill) must
+  * overhead (sessions, warmups, the bounded wait, sf1 build, spill) must
   * sit inside the self-deadline with margin — a new query or canary that
   * breaks the budget fails HERE, in a test, instead of failing the round.
   */
@@ -397,10 +406,11 @@ class BenchBudgetSpec extends AnyFunSuite {
 
   test("estimated bench wall time fits the self-deadline with margin") {
     // quiet machine, full rigor: 1 adaptive run per suite row plus 50%
-    // slack for rows that trip the 1.3× gate and pay the remaining
+    // slack for rows that trip the 1.5× gate and pay the remaining
     // iterations or a requery; sf1 points at full Iters plus one
-    // warm-up-equivalent (the fresh-session first pass)
-    val FixedOverheadS = 450.0 // sessions+warmups+3 bounded gates+build+spill
+    // warm-up-equivalent (the first pass or the requery). Fixed: 210 s for
+    // sessions, warm-ups, sf1 build and spill, plus the one bounded wait
+    val FixedOverheadS = 210.0 + Bench.QuiesceMaxS
     val est = suite * 1.5 + allSf1(Bench.Iters + 1) + FixedOverheadS +
       missing.size * 5.0 * Bench.Iters
     assert(est < Bench.DeadlineS * 0.9,
@@ -414,16 +424,16 @@ class BenchBudgetSpec extends AnyFunSuite {
   test("contended mode fits the self-deadline at a 3× slowdown") {
     // VERDICT r14 item 2: the driver's window ran at load 5.4-6.2 and the
     // full-rigor suite burned 1490 s of the 1500 s budget. Contended mode
-    // (pre-run load > ContentionLoadGate) runs every row ONCE, skips both
-    // requery passes, and doesn't wait on quiesce gates — this test pins
-    // that the cheap path fits even when every measured second stretches
-    // 3×. Adding an r15+ row that breaks THIS budget must fail here, in a
-    // test, not in the driver's round (VERDICT r14 item 8).
+    // (load still > ContentionLoadGate after the bounded wait) runs every
+    // row ONCE and skips the requery pass — this test pins that the cheap
+    // path fits even when every measured second stretches 3×, after the
+    // full wait that decided it. Adding a row that breaks THIS budget
+    // must fail here, in a test, not in a timed run.
     val ContentionMultiplier = 3.0
     // non-measured overhead that also stretches with machine slowness:
     // sf1 fixture build, spill point, warmups, session churn (~90 s quiet)
     val ScaledOverheadQuietS = 90.0
-    val est = ContentionMultiplier *
+    val est = Bench.QuiesceMaxS + ContentionMultiplier *
       (suite + allSf1(1.0) + missing.size * 5.0 + ScaledOverheadQuietS)
     assert(est < Bench.DeadlineS * 0.9,
       f"contended-mode estimate $est%.0f s (at ${ContentionMultiplier}×) " +

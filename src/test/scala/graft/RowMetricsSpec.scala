@@ -42,6 +42,28 @@ class RowMetricsSpec extends AnyFunSuite {
     assert(m.jobs.forall(_.stages == 1), m.jobs)
   }
 
+  test("a row's jobs carry exactly its tag; a job after the finally carries none") {
+    val metrics = RowMetrics.attach(spark)
+    try {
+      metrics.take()
+      def row(q: String) = {
+        RowMetrics.tagged(spark, s"rm-$q") {
+          SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
+        metrics.take().jobs
+      }
+      val (q3, q6) = (row("tpch_q3"), row("tpch_q6"))
+      spark.range(0, 1000, 1, 2).write.format("noop").mode("overwrite").save()
+      val after = metrics.take().jobs
+      // Spark adds its own tags (a broadcast's "broadcast exchange (runId
+      // …)"); of the row tags, each job carries exactly one
+      def rowTags(j: RowMetrics.Job) = j.tags.filter(_.startsWith("rm-"))
+      assert(q3.size > 1 && q3.forall(rowTags(_) == Set("rm-tpch_q3")), q3)
+      assert(q6.nonEmpty && q6.forall(rowTags(_) == Set("rm-tpch_q6")), q6)
+      assert(after.nonEmpty && after.forall(_.tags.isEmpty), after)
+    } finally metrics.close()
+  }
+
   test("stream_exec_dedup records one micro-batch with state rows") {
     val m = measured(SparkEntry.queries("stream_exec_dedup")(spark, sfDir).collect())
     val bs = m.batches.filter(_.query == "graft_exec_dedup")
