@@ -10,14 +10,16 @@ package graft
   *    every job a row starts carries the row's name as a job tag;
   *  - one line per micro-batch (input rows, `durationMs`, state rows and
   *    commit time);
-  *  - the executed physical plan.
+  *  - the executed physical plan of the row's last finished query (the
+  *    `noop` write): the plan that ran, AQE's final plan included, as
+  *    [[RowMetrics]] recorded it — the row is not planned a second time.
   *
   * Usage: `sbt "runMain graft.Audit <sfDir> <row> [<row>...]"`. An
   * untimed `tpch_q6` runs first; naming a row twice times a warm second
   * run. Cores come from `SPARK_GRAFT_CPUS` (default: the machine's).
-  * With `SPARK_GRAFT_PLAN_OUT=<dir>`, each row's full
-  * `explain("formatted")` also goes to `<dir>/<row>.txt` — write before
-  * and after plans to two directories. A state-width sweep passes
+  * With `SPARK_GRAFT_PLAN_OUT=<dir>`, that plan's full formatted explain
+  * also goes to `<dir>/<row>.txt` — write before and after plans to two
+  * directories. A state-width sweep passes
   * `-Dspark.graft.stream.statePartitions=N` to the forked JVM: Spark
   * copies `spark.*` system properties into every session's conf.
   */
@@ -36,9 +38,9 @@ object Audit {
     def run(q: String) = {
       val t0 = System.nanoTime()
       RowMetrics.tagged(spark, q) {
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        (df, (System.nanoTime() - t0) / 1e9)
+        SparkEntry.queries(q)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
       }
     }
     try {
@@ -53,11 +55,11 @@ object Audit {
         val m = metrics.take()
         ran match {
           case Left(e) => println(s"[audit] $q FAILED: ${e.getMessage}")
-          case Right((df, wall)) =>
+          case Right(wall) =>
             println(f"[audit] $q wall $wall%.3f s jobs ${m.jobs.size} " +
               s"stages ${m.total(_.stages)} tasks ${m.total(_.tasks)} " +
-              s"shuffle read ${mb(m.total(_.shuffleReadBytes))} " +
-              s"write ${mb(m.total(_.shuffleWriteBytes))} " +
+              s"shuffle read ${m.total(_.shuffleReadBytes)} B " +
+              s"write ${m.total(_.shuffleWriteBytes)} B " +
               f"task ${m.total(_.runMs) / 1e3}%.1f s " +
               s"spill ${mb(m.total(_.memorySpillBytes))} memory " +
               s"${mb(m.total(_.diskSpillBytes))} disk")
@@ -69,11 +71,13 @@ object Audit {
               s"commit ${b.stateCommitMs} ms durationMs " +
               b.durationMs.toSeq.sorted.map { case (k, v) => s"$k=$v" }
                 .mkString("{", ",", "}")))
-            println(df.queryExecution.executedPlan.toString.take(12000))
-            outDir.foreach(d => java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(d, s"$q.txt"),
-              df.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode)): Unit)
+            m.plans.lastOption.foreach { qe =>
+              println(qe.executedPlan.toString.take(12000))
+              outDir.foreach(d => java.nio.file.Files.writeString(
+                java.nio.file.Paths.get(d, s"$q.txt"),
+                qe.explainString(
+                  org.apache.spark.sql.execution.FormattedMode)): Unit)
+            }
         }
       }
     } finally spark.stop()

@@ -5,16 +5,21 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftaccess.drainListeners
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one metrics listener: what a session's jobs and micro-batches
   * cost, read back per row. [[RowMetrics.attach]] registers one
   * `SparkListener`, which sums each job's stages, tasks, executor run
   * time, shuffle bytes and spill through the stage -> job map from
   * `onJobStart` (jobs overlap — a streaming query lists its source while a
-  * batch runs — so one shared counter would misattribute), and one
-  * `StreamingQueryListener`, which records every micro-batch's progress.
+  * batch runs — so one shared counter would misattribute), one
+  * `StreamingQueryListener`, which records every micro-batch's progress,
+  * and one `QueryExecutionListener`, which keeps every finished
+  * `QueryExecution` — its executed plan is the plan that ran, AQE's final
+  * plan included.
   *
   * [[take]] drains the listener bus before it reads, so what it returns
   * is exact for every action that has returned: no grace sleep, no
@@ -24,10 +29,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 final class RowMetrics private (spark: SparkSession) {
   import RowMetrics._
 
-  // guarded by `this`: the two listeners run on different bus queues
+  // guarded by `this`: the listeners run on different bus queues
   private val jobs = mutable.LinkedHashMap.empty[Int, Job]
   private val stageJob = mutable.HashMap.empty[Int, Int]
   private val batches = mutable.ArrayBuffer.empty[Batch]
+  private val plans = mutable.ArrayBuffer.empty[QueryExecution]
 
   private def update(stageId: Int)(f: Job => Job): Unit = synchronized {
     stageJob.get(stageId).flatMap(jobs.get).foreach(j => jobs(j.id) = f(j))
@@ -80,20 +86,30 @@ final class RowMetrics private (spark: SparkSession) {
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
   }
 
+  private val planListener = new QueryExecutionListener {
+    private def record(qe: QueryExecution): Unit =
+      RowMetrics.this.synchronized { plans += qe }: Unit
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      record(qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+      record(qe)
+  }
+
   /** Everything recorded since the last call, in start order; clears it. */
   def take(): Taken = {
     drainListeners(spark.sparkContext)
     synchronized {
-      val out = Taken(jobs.values.toSeq, batches.toSeq)
-      jobs.clear(); stageJob.clear(); batches.clear()
+      val out = Taken(jobs.values.toSeq, batches.toSeq, plans.toSeq)
+      jobs.clear(); stageJob.clear(); batches.clear(); plans.clear()
       out
     }
   }
 
-  /** Unregisters both listeners. */
+  /** Unregisters the listeners. */
   def close(): Unit = {
     spark.sparkContext.removeSparkListener(jobListener)
     spark.streams.removeListener(batchListener)
+    spark.listenerManager.unregister(planListener)
   }
 }
 
@@ -113,7 +129,9 @@ object RowMetrics {
   final case class Batch(query: String, id: Long, inputRows: Long,
       durationMs: Map[String, Long], stateRows: Long, stateCommitMs: Long)
 
-  final case class Taken(jobs: Seq[Job], batches: Seq[Batch]) {
+  /** `plans`: the query executions that finished, in finish order. */
+  final case class Taken(jobs: Seq[Job], batches: Seq[Batch],
+      plans: Seq[QueryExecution]) {
     def total(f: Job => Long): Long = jobs.map(f).sum
   }
 
@@ -130,6 +148,7 @@ object RowMetrics {
     val m = new RowMetrics(spark)
     spark.sparkContext.addSparkListener(m.jobListener)
     spark.streams.addListener(m.batchListener)
+    spark.listenerManager.register(m.planListener)
     m
   }
 }

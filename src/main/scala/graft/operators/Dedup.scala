@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,7 +33,7 @@ import graft.functions.{GraftFunctions, TextFunctions => TF}
   */
 object Dedup {
 
-  private[graft] val JaccardThreshold = 0.8
+  private val JaccardThreshold = 0.8
   private[graft] val ShingleN = 3
 
   /** Target rows per reduce task for driver-orchestrated ITERATION loops
@@ -64,6 +64,148 @@ object Dedup {
     r.toInt
   }
 
+  /** The ppjoin prefix length |x| − ⌈t·|x|⌉ + 1 of a set whose size is
+    * column `sz`, in the exact integer form of [[prefixDivisor]]
+    * (`sz div 5 + 1` for t = 0.8).
+    */
+  private def prefixLen(sz: String, t: Double): Column =
+    expr(s"$sz div ${prefixDivisor(t)}") + 1
+
+  // -- the shared near-dup machinery --------------------------------------
+
+  /** Exact-duplicate collapse: groups `df` on its `key` column (within the
+    * `by` columns) and maps each group to its min-`id` representative.
+    * Returns `groups` = (by…, key, rep) and `members` = (by…, key, id,
+    * rep), one row per input row.
+    *
+    * The contract every near-dup tier relies on when it collapses before
+    * its candidate machinery (corpus pipelines run exact dedup before
+    * near-dup; here the operator does it internally):
+    *  - A representative stands for its group: each tier keys on an input
+    *    its score is a function of (normalized text → shingle set, MinHash
+    *    signature, edit distance; a fragment's shingle set → containment).
+    *    So a rep pair is found iff every member pair would be, at the same
+    *    score, and [[expandPairs]] re-expands it to exactly those member
+    *    pairs. Groups are disjoint, so no member pair is emitted twice.
+    *  - Two members of one group are identical inputs: Jaccard 1.0, edit
+    *    distance 0. Symmetric tiers emit those intra pairs for the members
+    *    that would have scored at all (Jaccard tiers: docs with ≥ 3 words);
+    *    asymmetric tiers (two relations) have no intra pairs.
+    *  - Why: replicas multiply every posting list, band bucket and
+    *    candidate set, so the uncollapsed index work is quadratic in the
+    *    replication factor (the ×10-replica SF≈1 canary's jaccard row
+    *    went 59.4 s → expansion-bound seconds). Collapsed, only the
+    *    re-expansion — exactly the output rows — scales with replication.
+    *  - Keys are md5 digests: 16 bytes keep the groupBy shuffle skinny,
+    *    and two different inputs merge only on a 2^-128 collision.
+    *  - A NULL key (md5 of NULL text is NULL) puts every NULL-keyed row in
+    *    one group, with one rep (a caller that keeps only `groups`, like
+    *    `pipeline_pretraining`, keeps that one doc). The members
+    *    equi-join then drops them all (NULL never equals NULL), so such
+    *    rows appear in no pair. A different NULL policy belongs here, for
+    *    every tier at once.
+    */
+  private def exactGroups(df: DataFrame, id: String, key: String,
+      by: String*): (DataFrame, DataFrame) = {
+    val groups = df.groupBy((by :+ key).map(col): _*)
+      .agg(min(col(id)).as("rep"))
+    (groups, df.join(groups, by :+ key))
+  }
+
+  /** [[exactGroups]] of a `documents`-shaped frame on `gk`, the md5 of its
+    * normalized text: (doc_id, by…, gk) in, `groups` and `members` out.
+    */
+  private[graft] def textGroups(df: DataFrame, by: String*)
+      : (DataFrame, DataFrame) =
+    exactGroups(df.select(col("doc_id") +: by.map(col) :+
+      md5(TF.normText(col("text"))).as("gk"): _*), "doc_id", "gk", by: _*)
+
+  /** Re-expands the verified representative pairs of a symmetric tier to
+    * member pairs. `repPairs` is (a, b, score) — rep ids first, whatever
+    * their names; `members` comes from [[textGroups]]. Each pair becomes
+    * its member pairs at the same score, canonicalized to doc_a < doc_b
+    * with least/greatest, plus every pair of two `intra` members of one
+    * group at `intraScore`. Output: (doc_a, doc_b, score), unsorted.
+    */
+  private def expandPairs(repPairs: DataFrame, members: DataFrame,
+      intra: DataFrame, intraScore: Column): DataFrame = {
+    val Array(a, b, score) = repPairs.columns
+    val cross = repPairs
+      .join(members.select(col("rep").as(a), col("doc_id").as("ida")), Seq(a))
+      .join(members.select(col("rep").as(b), col("doc_id").as("idb")), Seq(b))
+      .select(least(col("ida"), col("idb")).as("doc_a"),
+              greatest(col("ida"), col("idb")).as("doc_b"), col(score))
+    val within = intra.select(col("gk"), col("doc_id").as("ida"))
+      .join(intra.select(col("gk"), col("doc_id").as("idb")), Seq("gk"))
+      .filter(col("ida") < col("idb"))
+      .select(col("ida").as("doc_a"), col("idb").as("doc_b"),
+        intraScore.as(score))
+    cross.unionByName(within)
+  }
+
+  /** [[rarestPrefix]] of the shingle sets `sh` of `sets` (one row per
+    * document, the `by` columns) at [[JaccardThreshold]], carrying each
+    * set's size `sz`. Shingles travel as xxhash64 longs: the index
+    * shuffles move 8 bytes per entry instead of ~25-char strings. A
+    * cross-document collision only adds a candidate (the exact check on
+    * the string sets removes it); an in-document collision could shorten
+    * a prefix and lose a candidate, but needs two of one doc's shingles
+    * to share a 64-bit hash (~2^-64 per pair) — negligible against the
+    * banding miss probability the MinHash tier already accepts.
+    */
+  private def shinglePrefix(sets: DataFrame, by: String*): DataFrame = {
+    val inv = sets.select(by.map(col) :+ size(col("sh")).as("sz") :+
+        explode(col("sh")).as("s0"): _*)
+      .select(by.map(col) :+ col("sz") :+ xxhash64(col("s0")).as("s"): _*)
+    rarestPrefix(inv, inv, prefixLen("sz", JaccardThreshold), by: _*)
+  }
+
+  /** The exact Jaccard check of candidate pairs: `candidates` is two id
+    * columns (any names), `sh` is (doc_id, sh). Joins both sides' shingle
+    * sets on as sh_a and sh_b, checks them as the one-frame form, and
+    * returns the two id columns and `jaccard`.
+    */
+  private[graft] def verifyJaccard(candidates: DataFrame, sh: DataFrame)
+      : DataFrame = {
+    val Array(a, b) = candidates.columns
+    verifyJaccard(candidates
+      .join(sh.select(col("doc_id").as(a), col("sh").as("sh_a")), Seq(a))
+      .join(sh.select(col("doc_id").as(b), col("sh").as("sh_b")), Seq(b)))
+      .select(col(a), col(b), col("jaccard"))
+  }
+
+  /** Keeps the `pairs` (carrying shingle sets sh_a and sh_b) whose exact
+    * Jaccard |a∩b| / |a∪b| is at least [[JaccardThreshold]], adding it as
+    * `jaccard`.
+    */
+  private[graft] def verifyJaccard(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard", lit(1.0) * col("common") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("common")))
+      .filter(col("jaccard") >= JaccardThreshold)
+
+  /** The ppjoin prefix index (Chaudhuri et al., ICDE 2006): ranks each
+    * document's `postings` (one row per document and hashed token `s`;
+    * the document is the `by` columns) under one global rarest-first
+    * order — document frequency counted over `dfOver`, ties on `s` — and
+    * keeps its first `bound` tokens, adding `df` and `rk`. Under any such
+    * order a pair meeting the tier's overlap bound shares a prefix token,
+    * so only prefixes are indexed and joined; a plain inverted join would
+    * be Σ df(s)², quadratic on hot tokens. Recall needs only that both
+    * sides rank by the same deterministic order, so `dfOver` may be any
+    * superset of the postings.
+    */
+  private def rarestPrefix(postings: DataFrame, dfOver: DataFrame,
+      bound: Column, by: String*): DataFrame = {
+    val dfreq = dfOver.groupBy(col("s")).agg(count(lit(1)).as("df"))
+    val w = Window.partitionBy(by.map(col): _*)
+      .orderBy(col("df").asc, col("s"))
+    postings.join(dfreq, Seq("s"))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= bound)
+  }
+
   /** doc_id → distinct 3-word shingle set (native codegen'd expression;
     * the pure-built-in composition [[TF.wordShingles]] is the portable
     * fallback but evaluates higher-order lambdas interpreted).
@@ -89,49 +231,11 @@ object Dedup {
   // -- exact n-gram Jaccard via inverted index ---------------------------
 
   private def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    // Exact-duplicate pre-collapse: identical normalized text ⇒ identical
-    // shingle set ⇒ identical Jaccard against EVERYTHING (and exactly 1.0
-    // within the group), so the candidate/verify machinery only ever needs
-    // one representative per distinct text; member pairs are re-expanded
-    // afterwards from the group table. This is the standard corpus-
-    // pipeline ordering (exact dedup before near-dup) made internal to the
-    // operator: replica-heavy corpora multiply every posting list, so
-    // skipping the collapse turns the prefix index's Σdf² term quadratic
-    // in the replication factor (measured: the ×10-replica SF≈1 canary
-    // dropped 59.4 s → expansion-bound seconds with the collapse). The
-    // md5 group key keeps the groupBy shuffle skinny (16 bytes, not the
-    // document); a cross-text collision needs 2^-128.
-    val keyed = docs(s, d).select(col("doc_id"),
-      md5(TF.normText(col("text"))).as("gk"))
-    val groups = keyed.groupBy(col("gk")).agg(min(col("doc_id")).as("rep"))
-    val members = keyed.join(groups, Seq("gk"))
+    val (groups, members) = textGroups(docs(s, d))
     val sh = shingleSets(s, d)
       .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"))
       .cache()
-    // Prefix filtering (Chaudhuri et al., ICDE 2006 / ppjoin): under a
-    // global shingle order (rarest first), any pair with J ≥ t must share
-    // one of each member's first floor((1-t)·|sh|)+1 shingles. Indexing
-    // only those prefixes keeps the self-join linear-ish in corpus size
-    // even when common shingles have huge document frequency (a plain
-    // inverted-index join is Σ df(s)² — quadratic blowup on hot shingles).
-    // shingles travel as xxhash64 longs through the index machinery: the
-    // inverted-index shuffles move 8 bytes per entry instead of ~25-char
-    // strings. A cross-document collision only ADDs a candidate pair
-    // (removed by the exact string-set verification below); an IN-document
-    // collision could in principle shorten a doc's effective prefix and
-    // lose a candidate, but that needs two of one doc's shingles to share
-    // a 64-bit hash (~2^-64 per pair) — negligible against the banding
-    // miss probability already accepted in the MinHash tier.
-    val inv = sh.select(col("doc_id"), size(col("sh")).as("sz"),
-        explode(col("sh")).as("s0"))
-      .select(col("doc_id"), col("sz"), xxhash64(col("s0")).as("s"))
-    val dfreq = inv.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("s"))
-    val prefix = inv.join(dfreq, Seq("s"))
-      .withColumn("rk", row_number().over(w))
-      // |x| − ⌈t·|x|⌉ + 1 in EXACT integer form via [[prefixDivisor]]
-      // (sz div 5 for t = 0.8); see its scaladoc for the float trap
-      .filter(col("rk") <= expr(s"sz div ${prefixDivisor(JaccardThreshold)}") + 1)
+    val prefix = shinglePrefix(sh, "doc_id")
       .select(col("doc_id"), col("sz"), col("s"))
     // length-ratio companion prune (the joinFuzzy filter, r18 back-ported
     // to the self-join): J ≥ t ⟹ t·max(|a|,|b|) ≤ min(|a|,|b|), exact in
@@ -156,36 +260,13 @@ object Dedup {
     // explosion costs more than the verify join it saves, and inflating the
     // self-join's shuffle rows by an array payload is also the wrong trade
     // at 100 TB. Keeping the two skinny id-keyed joins is the faster shape.
-    val repPairs = candidates
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", lit(1.0) * col("common") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
+    val repPairs = verifyJaccard(candidates, sh)
       .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"), col("jaccard"))
-    // re-expand representative pairs to member pairs (groups are disjoint,
-    // so least/greatest canonicalization never double-counts), and emit
-    // the intra-group pairs — identical sets, Jaccard exactly 1.0 — for
-    // every ≥3-word duplicate group. Both stages are output-bound: they
-    // produce exactly the rows the exact pair set contains, no more.
-    val cross = repPairs
-      .join(members.select(col("rep").as("rep_a"), col("doc_id").as("ida")),
-        Seq("rep_a"))
-      .join(members.select(col("rep").as("rep_b"), col("doc_id").as("idb")),
-        Seq("rep_b"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"), col("jaccard"))
-    // only docs that shingle (≥3 words) participate, same as the oracle
+    // only docs that shingle (≥3 words) get intra pairs, same as the oracle
     val withSh = members
       .join(sh.filter(size(col("sh")) > 0).select(col("doc_id").as("rep")),
         Seq("rep"), "left_semi")
-    val intra = withSh.select(col("gk"), col("doc_id").as("ida"))
-      .join(withSh.select(col("gk"), col("doc_id").as("idb")), Seq("gk"))
-      .filter(col("ida") < col("idb"))
-      .select(col("ida").as("doc_a"), col("idb").as("doc_b"),
-        lit(1.0).as("jaccard"))
-    cross.unionByName(intra)
+    expandPairs(repPairs, members, withSh, lit(1.0))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -222,18 +303,9 @@ object Dedup {
   private def joinFuzzyCore(s: SparkSession, d: String): DataFrame = {
     val par = pmod(regexp_replace(col("source"), "^src", "")
       .cast("int"), lit(2))
-    // exact-duplicate pre-collapse PER SIDE (the [[jaccardPairs]]
-    // ordering made cross-relational): on a replica-heavy corpus every
-    // identical copy multiplies both sides' posting lists, so the
-    // candidate join's Σ df_L·df_R term grows replica² without it; with
-    // it the index machinery runs on distinct texts and only the final
-    // member re-expansion — the join's semantically required output —
-    // scales with replication
-    val keyed = docs(s, d).select(col("doc_id"), par.as("par"),
-      md5(TF.normText(col("text"))).as("gk"))
-    val groups = keyed.groupBy(col("par"), col("gk"))
-      .agg(min(col("doc_id")).as("rep"))
-    val members = keyed.join(groups, Seq("par", "gk"))
+    // collapsed PER SIDE: the candidate join's Σ df_L·df_R term would
+    // otherwise grow replica² (see [[exactGroups]])
+    val (groups, members) = textGroups(docs(s, d).withColumn("par", par), "par")
     val base = docs(s, d)
       .select(col("doc_id"), par.as("par"),
         GraftFunctions.word_shingles(TF.words(col("text")), ShingleN)
@@ -242,18 +314,7 @@ object Dedup {
       .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"),
         "left_semi")
       .cache()
-    val inv = base
-      .select(col("par"), col("doc_id"), size(col("sh")).as("sz"),
-        explode(col("sh")).as("s0"))
-      .select(col("par"), col("doc_id"), col("sz"),
-        xxhash64(col("s0")).as("s"))
-    val dfreq = inv.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("par"), col("doc_id"))
-      .orderBy(col("df").asc, col("s"))
-    val prefix = inv.join(dfreq, Seq("s"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <=
-        expr(s"sz div ${prefixDivisor(JaccardThreshold)}") + 1)
+    val prefix = shinglePrefix(base, "par", "doc_id")
     val candidates = prefix.filter(col("par") === 0)
         .select(col("doc_id").as("rep_a"), col("sz").as("sza"), col("s"))
       .join(prefix.filter(col("par") === 1)
@@ -262,19 +323,9 @@ object Dedup {
       .filter(col("sza") * 4 <= col("szb") * 5 &&
               col("szb") * 4 <= col("sza") * 5)
       .select(col("rep_a"), col("rep_b")).distinct()
-    val repPairs = candidates
-      .join(base.select(col("doc_id").as("rep_a"), col("sh").as("sh_a")),
-        Seq("rep_a"))
-      .join(base.select(col("doc_id").as("rep_b"), col("sh").as("sh_b")),
-        Seq("rep_b"))
-      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", lit(1.0) * col("common") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("rep_a"), col("rep_b"), col("jaccard"))
-    // re-expand representative pairs to member pairs on BOTH sides —
-    // output-bound: exactly the rows the exact cross-relation pair set
-    // contains
+    val repPairs = verifyJaccard(candidates, base)
+    // not [[expandPairs]]: a pair keeps its (even, odd) side order, so
+    // there is no least/greatest and no intra pair
     repPairs
       .join(members.filter(col("par") === 0)
         .select(col("rep").as("rep_a"), col("doc_id").as("doc_a")),
@@ -325,6 +376,18 @@ object Dedup {
       .select(col("doc_id"), col("bk.band"), col("bk.h1"), col("bk.h2"))
   }
 
+  /** (doc_a, doc_b), doc_a < doc_b: the distinct pairs of `sh`'s documents
+    * that share a band bucket — the MinHash self-join's candidates.
+    */
+  private def bandPairs(sh: DataFrame): DataFrame = {
+    val bands = bandKeys(sh)
+    bands.select(col("doc_id").as("doc_a"), col("band"), col("h1"), col("h2"))
+      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("h1"),
+        col("h2")), Seq("band", "h1", "h2"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+  }
+
   /** Verified near-dup pairs via MinHash banding + exact Jaccard check —
     * shared by [[minhashLsh]] (the pair query) and [[dedupClusters]].
     * Also returns a release thunk that (blocking-)unpersists the shared
@@ -334,58 +397,20 @@ object Dedup {
     */
   private def minhashVerifiedPairsReleasable(
       s: SparkSession, d: String): (DataFrame, () => Unit) = {
-    // Exact-duplicate pre-collapse, same contract as [[jaccardPairs]]:
-    // identical normalized text ⇒ identical shingle set ⇒ identical
-    // MinHash signature, so banding is deterministic across a duplicate
-    // group — the rep pair is band-found iff every member pair would be,
-    // and intra-group pairs always collide (every band) at Jaccard
-    // exactly 1.0. On a replica-heavy corpus the collapse divides every
-    // band bucket by the replication factor r, shrinking the self-join's
-    // Σ|bucket|² candidates and the array-payload verify joins r²-fold;
-    // the member re-expansion afterwards is output-bound (exactly the
-    // pair rows the uncollapsed tier emits, no more).
-    val keyed = docs(s, d).select(col("doc_id"),
-      md5(TF.normText(col("text"))).as("gk"))
-    val groups = keyed.groupBy(col("gk")).agg(min(col("doc_id")).as("rep"))
-    val members = keyed.join(groups, Seq("gk"))
+    // collapsed first (see [[exactGroups]]): identical texts have identical
+    // MinHash signatures, so banding finds a rep pair iff it finds every
+    // member pair, and intra-group pairs collide in every band
+    val (groups, members) = textGroups(docs(s, d))
     val sh = shingleSets(s, d).filter(size(col("sh")) > 0)
       .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
       .cache()
-    val bands = bandKeys(sh)
-    val candidates = bands.select(col("doc_id").as("doc_a"), col("band"),
-        col("h1"), col("h2"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("h1"),
-        col("h2")), Seq("band", "h1", "h2"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    // exact verification of candidates (array_intersect on shingle sets)
-    val repPairs = candidates
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", lit(1.0) * col("common") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
+    val repPairs = verifyJaccard(bandPairs(sh), sh)
       .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"), col("jaccard"))
-    // re-expand representative pairs to member pairs; groups are disjoint
-    // so least/greatest canonicalization never double-counts
-    val cross = repPairs
-      .join(members.select(col("rep").as("rep_a"), col("doc_id").as("ida")),
-        Seq("rep_a"))
-      .join(members.select(col("rep").as("rep_b"), col("doc_id").as("idb")),
-        Seq("rep_b"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"), col("jaccard"))
-    // intra-group pairs: only docs that shingle (≥3 words) participate,
-    // same as the uncollapsed tier's size(sh) > 0 screen
+    // intra pairs: only docs that shingle (≥3 words) participate, same as
+    // the uncollapsed tier's size(sh) > 0 screen
     val withSh = members
       .join(sh.select(col("doc_id").as("rep")), Seq("rep"), "left_semi")
-    val intra = withSh.select(col("gk"), col("doc_id").as("ida"))
-      .join(withSh.select(col("gk"), col("doc_id").as("idb")), Seq("gk"))
-      .filter(col("ida") < col("idb"))
-      .select(col("ida").as("doc_a"), col("idb").as("doc_b"),
-        lit(1.0).as("jaccard"))
-    (cross.unionByName(intra),
+    (expandPairs(repPairs, members, withSh, lit(1.0)),
       () => { sh.unpersist(blocking = true); () })
   }
 
@@ -430,39 +455,12 @@ object Dedup {
     */
   private def dedupEditDistance(s: SparkSession, d: String): DataFrame = {
     val K = 10
-    // Exact-duplicate pre-collapse (the jaccard/minhash tier contract,
-    // completed here by the r16 review): lev is a function of the
-    // NORMALIZED text, so identical-norm docs form an equivalence class —
-    // one rep per class rides the banding/short/tiny machinery below,
-    // cross-class member pairs inherit their rep pair's distance, and
-    // intra-class pairs are lev = 0 ≤ K by definition. On an r-replica
-    // corpus this divides every band bucket and both exact strata's
-    // broadcast sides by r and the verify work by r².
-    val keyed = docs(s, d).select(col("doc_id"),
-      md5(TF.normText(col("text"))).as("gk"))
-    // shared subtrees are cached like every sibling tier's (the lazy-
-    // builder contract — released by the session owner via
-    // Caches.releaseAll): groups feeds the semi-joins AND both expansion
-    // joins, members is read 4×, shAll drives three strata, and n backs
-    // every verify side — uncached, each reference re-runs the corpus
-    // scan + normText/md5/shingle kernels (r16 review)
-    val groups = keyed.groupBy(col("gk")).agg(min(col("doc_id")).as("rep"))
-      .cache()
-    val members = keyed.join(groups, Seq("gk")).cache()
-    val repIds = groups.select(col("rep").as("doc_id"))
+    val (members, repIds, n) = editReps(s, d)
+    // cached like the collapse frames: shAll drives three strata
     val shAll = shingleSets(s, d).join(repIds, Seq("doc_id"), "left_semi")
       .cache()
     val sh = shAll.filter(size(col("sh")) > EditShortMaxSh)
-    val bands = bandKeys(sh)
-    val candidates = bands.select(col("doc_id").as("doc_a"), col("band"),
-        col("h1"), col("h2"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("h1"),
-        col("h2")), Seq("band", "h1", "h2"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val n = docs(s, d).select(col("doc_id"), TF.normText(col("text")).as("norm"))
-      .join(repIds, Seq("doc_id"), "left_semi")
-      .cache()
+    val candidates = bandPairs(sh)
     val banded = candidates
       .join(n.select(col("doc_id").as("doc_a"), col("norm").as("na")), Seq("doc_a"))
       .join(n.select(col("doc_id").as("doc_b"), col("norm").as("nb")), Seq("doc_b"))
@@ -495,23 +493,28 @@ object Dedup {
       .select(col("doc_id")).join(n, Seq("doc_id"))
     val shortPairs = lenBlockedPairs(short, shingledN, K)
     val repPairs = banded.unionByName(tinyPairs).unionByName(shortPairs)
-    // re-expand representative pairs to member pairs (disjoint groups, so
-    // least/greatest never double-counts) and add the intra-class pairs
-    val cross = repPairs
-      .join(members.select(col("rep").as("doc_a"), col("doc_id").as("ida")),
-        Seq("doc_a"))
-      .join(members.select(col("rep").as("doc_b"), col("doc_id").as("idb")),
-        Seq("doc_b"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"),
-              col("edit_dist"))
-    val intra = members.select(col("gk"), col("doc_id").as("ida"))
-      .join(members.select(col("gk"), col("doc_id").as("idb")), Seq("gk"))
-      .filter(col("ida") < col("idb"))
-      .select(col("ida").as("doc_a"), col("idb").as("doc_b"),
-        lit(0).as("edit_dist"))
-    cross.unionByName(intra)
+    expandPairs(repPairs, members, members, lit(0))
       .orderBy(col("doc_a"), col("doc_b"))
+  }
+
+  /** The collapse both edit tiers run first (see [[exactGroups]]; lev is
+    * a function of the normalized text, so intra-group pairs are lev = 0):
+    * (`members`, `repIds` = (doc_id) of the representatives, `n` =
+    * (doc_id, norm) of the representatives). Cached — released by the
+    * session owner via Caches.releaseAll: groups feeds the semi-joins and
+    * both expansion joins, members is read 4×, and n backs every verify
+    * side; uncached, each reference re-runs the corpus scan +
+    * normText/md5 kernels (r16 review).
+    */
+  private def editReps(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (groups, members) = textGroups(docs(s, d))
+    groups.cache()
+    val repIds = groups.select(col("rep").as("doc_id"))
+    val n = docs(s, d)
+      .select(col("doc_id"), TF.normText(col("text")).as("norm"))
+      .join(repIds, Seq("doc_id"), "left_semi")
+    (members.cache(), repIds, n.cache())
   }
 
   /** Exact-stratum pairing, LENGTH-BUCKET BLOCKED — never a plain
@@ -608,23 +611,14 @@ object Dedup {
     * the levenshtein DP, and grams ride the index as xxhash64 longs
     * (8-byte shuffle entries; a cross-doc collision only ADDs a
     * candidate, an in-doc collision only LENGTHENS a prefix — recall is
-    * never lost, same argument as the jaccard tier's). Exact-duplicate
-    * pre-collapse and member re-expansion as in every sibling tier. At
+    * never lost, same argument as the jaccard tier's). Collapse and
+    * re-expansion: [[exactGroups]], [[expandPairs]]. At
     * 100 TB: Σ(prefix df²) candidates instead of pairs², with the
     * rarest-first order keeping hot grams out of the index.
     */
   private def dedupEditQgram(s: SparkSession, d: String): DataFrame = {
     val K = 10
-    val keyed = docs(s, d).select(col("doc_id"),
-      md5(TF.normText(col("text"))).as("gk"))
-    val groups = keyed.groupBy(col("gk")).agg(min(col("doc_id")).as("rep"))
-      .cache()
-    val members = keyed.join(groups, Seq("gk")).cache()
-    val repIds = groups.select(col("rep").as("doc_id"))
-    val n = docs(s, d)
-      .select(col("doc_id"), TF.normText(col("text")).as("norm"))
-      .join(repIds, Seq("doc_id"), "left_semi")
-      .cache()
+    val (members, _, n) = editReps(s, d)
     val pb = K * EditQ // count bound floor AND prefix length − 1
     // one char_grams kernel pass total: the exploded hashed index is
     // cached and BOTH strata memberships and the df order derive from it
@@ -653,11 +647,7 @@ object Dedup {
     // (broadcast-converted at runtime) prunes them before the heavy
     // exchanges; keeping it is the cheaper shape.
     val inv = invAll.join(bigIds, Seq("doc_id"), "left_semi")
-    val dfreq = invAll.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("s"))
-    val prefix = inv.join(dfreq, Seq("s"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= pb + 1)
+    val prefix = rarestPrefix(inv, invAll, lit(pb + 1), "doc_id")
       .select(col("doc_id"), col("s"))
     // Candidate join keyed on (gram, LENGTH BUCKET), not gram alone, with
     // the verify screens INSIDE the join ahead of the distinct. Two
@@ -726,21 +716,7 @@ object Dedup {
     // small×any and big×big partition the rep-pair space (a pair with a
     // small side is emitted only by the length-blocked stratum; both-big
     // pairs only by the prefix tier), so the union never double-counts
-    val repPairs = bigPairs.unionByName(smallPairs)
-    val cross = repPairs
-      .join(members.select(col("rep").as("doc_a"), col("doc_id").as("ida")),
-        Seq("doc_a"))
-      .join(members.select(col("rep").as("doc_b"), col("doc_id").as("idb")),
-        Seq("doc_b"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"),
-              col("edit_dist"))
-    val intra = members.select(col("gk"), col("doc_id").as("ida"))
-      .join(members.select(col("gk"), col("doc_id").as("idb")), Seq("gk"))
-      .filter(col("ida") < col("idb"))
-      .select(col("ida").as("doc_a"), col("idb").as("doc_b"),
-        lit(0).as("edit_dist"))
-    cross.unionByName(intra)
+    expandPairs(bigPairs.unionByName(smallPairs), members, members, lit(0))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -944,14 +920,7 @@ object Dedup {
         .select(col("doc_id").as("dup_of"), col("band"), col("h1"), col("h2")),
         Seq("band", "h1", "h2"))
       .select(col("new_doc"), col("dup_of")).distinct()
-    candidates
-      .join(sh.select(col("doc_id").as("new_doc"), col("sh").as("sh_a")), Seq("new_doc"))
-      .join(sh.select(col("doc_id").as("dup_of"), col("sh").as("sh_b")), Seq("dup_of"))
-      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", lit(1.0) * col("common") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("new_doc"), col("dup_of"), col("jaccard"))
+    verifyJaccard(candidates, sh)
       .orderBy(col("new_doc"), col("dup_of"))
   }
 
@@ -1440,16 +1409,9 @@ object Dedup {
     */
   private def dedupContainment(s: SparkSession, d: String): DataFrame = {
     val t = 0.9
-    // Exact-duplicate pre-collapse on BOTH sides, same contract as the
-    // jaccard/minhash tiers. Corpus side: identical normalized text ⇒
-    // identical shingle postings, so replicas multiply every df and the
-    // Σ_prefix df probe cost r-fold for nothing. Probe side: identical
-    // fragment spans ⇒ identical containment against everything. Each
-    // side collapses to min-id representatives (the fragment key is the
+    // Collapsed on BOTH sides ([[exactGroups]]): the fragment key is the
     // fragment SHINGLE SET itself, since the %29 carve does not respect
-    // text groups); verified rep pairs re-expand member×member at the
-    // same containment — output-bound, exactly the rows the uncollapsed
-    // tier emits. Recall is unaffected: the prefix-filter guarantee
+    // text groups. Recall is unaffected: the prefix-filter guarantee
     // holds under ANY consistent (df, s) order, so the df shift from
     // collapsing cannot lose a verified pair. Measured trade (SF≈1
     // 10×-replica canary, quiet windows): 3.9 → 4.5 s — the group keying
@@ -1464,25 +1426,20 @@ object Dedup {
           slice(col("ws"), lit(1), (size(col("ws")) / 2).cast("int")),
           ShingleN).as("shf"))
       .filter(size(col("shf")) > 0)
-    val fKeyed = fragsAll.select(col("frag_id"),
-      md5(col("shf").cast("string")).as("fgk"))
-    val fGroups = fKeyed.groupBy(col("fgk")).agg(min(col("frag_id")).as("frep"))
-    val fMembers = fKeyed.join(fGroups, Seq("fgk"))
+    val (fGroups, fMembers) = exactGroups(fragsAll.select(col("frag_id"),
+      md5(col("shf").cast("string")).as("fgk")), "frag_id", "fgk")
     // cached like the symmetric corpus side below: frags feeds both the
     // prefix index and the verify join, and without the cache each use
     // re-splits and re-shingles the fragment slice (r16 review); released
     // by the session owner via Caches.releaseAll
     val frags = fragsAll
-      .join(fGroups.select(col("frep").as("frag_id")), Seq("frag_id"), "left_semi")
+      .join(fGroups.select(col("rep").as("frag_id")), Seq("frag_id"), "left_semi")
       .cache()
-    val cKeyed = docs(s, d).select(col("doc_id"),
-      md5(TF.normText(col("text"))).as("cgk"))
-    val cGroups = cKeyed.groupBy(col("cgk")).agg(min(col("doc_id")).as("crep"))
-    val cMembers = cKeyed.join(cGroups, Seq("cgk"))
+    val (cGroups, cMembers) = textGroups(docs(s, d))
     // cache released by the session owner via Caches.releaseAll (the
     // lazy-builder contract documented on graft.Caches)
     val corpus = shingleSets(s, d).filter(size(col("sh")) > 0)
-      .join(cGroups.select(col("crep").as("doc_id")), Seq("doc_id"), "left_semi")
+      .join(cGroups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
       .cache()
     val inv = corpus.select(col("doc_id"), explode(col("sh")).as("s0"))
       .select(col("doc_id"), xxhash64(col("s0")).as("s"))
@@ -1491,15 +1448,14 @@ object Dedup {
       .select(col("frag_id"), size(col("shf")).as("szf"),
         explode(col("shf")).as("s0"))
       .select(col("frag_id"), col("szf"), xxhash64(col("s0")).as("s"))
+    // not [[rarestPrefix]]: fragment shingles absent from the corpus keep
+    // their prefix slots at df = 0, so the df join is a left join
     val w = Window.partitionBy(col("frag_id"))
       .orderBy(col("df").asc, col("s"))
     val prefix = finv.join(dfreq, Seq("s"), "left")
       .na.fill(0L, Seq("df"))
       .withColumn("rk", row_number().over(w))
-      // prefix length |A| − ⌈t·|A|⌉ + 1 in EXACT integer form via
-      // [[prefixDivisor]] (szf div 10 for t = 0.9); see its scaladoc for
-      // the float trap this replaces
-      .filter(col("rk") <= expr(s"szf div ${prefixDivisor(t)}") + 1)
+      .filter(col("rk") <= prefixLen("szf", t))
       .select(col("frag_id"), col("s"))
     // Measured alternative (r10, SF≈1 canary, quiet windows, matched JVM
     // flags): adding PPJoin's POSITIONAL filter (Xiao et al., WWW 2008
@@ -1521,11 +1477,11 @@ object Dedup {
       .filter(col("containment") >= t)
       .select(col("frag_id").as("frep"), col("doc_id").as("crep"),
         col("containment"))
-    // member×member re-expansion of the verified rep pairs (groups on
-    // each side are disjoint, so no pair is emitted twice)
+    // not [[expandPairs]]: the pair is (fragment, corpus doc), two
+    // relations, so no least/greatest and no intra pair
     repPairs
-      .join(fMembers.select(col("frep"), col("frag_id")), Seq("frep"))
-      .join(cMembers.select(col("crep"), col("doc_id")), Seq("crep"))
+      .join(fMembers.select(col("rep").as("frep"), col("frag_id")), Seq("frep"))
+      .join(cMembers.select(col("rep").as("crep"), col("doc_id")), Seq("crep"))
       .select(col("frag_id"), col("doc_id"), col("containment"))
       .orderBy(col("frag_id"), col("doc_id"))
   }

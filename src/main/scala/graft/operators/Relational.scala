@@ -31,10 +31,11 @@ object Relational {
     * hard-coded path): Verify pins a process-private root, so its sink
     * round-trips can no longer clobber — or be clobbered by — a
     * concurrent Bench writing the same fixed dirs (the r13 cross-talk).
-    * Default root resolves to `target/scratch` as before.
+    * Default root resolves to `target/scratch` as before. The root is
+    * the row's session's, not the thread's active one.
     */
-  private def scratch(sub: String) =
-    s"${graft.Scratch.root(org.apache.spark.sql.SparkSession.active)}/$sub"
+  private def scratch(s: SparkSession, sub: String) =
+    s"${graft.Scratch.root(s)}/$sub"
 
   // ---------------------------------------------------------------------
   // §2.1 scans / sources / sinks
@@ -61,7 +62,7 @@ object Relational {
   private def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ctx = new SessionContext(s)
     val src = li(s, d)
-    val path = scratch("lineitem_csv")
+    val path = scratch(s, "lineitem_csv")
     ctx.writeCsv(src, path, header = false, delimiter = "|")
     ctx.readCsv(path, CsvOptions(schema = Some(src.schema), hasHeader = false,
                                  delimiter = "|"))
@@ -93,7 +94,7 @@ object Relational {
     val src = Tables.load(s, d, "documents")
       .select(col("doc_id"), col("lang"),
         translate(col("text"), " ", "\n").as("text_ml"))
-    val path = scratch("documents_multiline_csv")
+    val path = scratch(s, "documents_multiline_csv")
     ctx.writeCsv(src, path, header = true, delimiter = ",")
     // emptyValue="" keeps a round-tripped empty string an empty string
     // (the reader's default maps it to null — byte-exactness, not fixture
@@ -134,7 +135,7 @@ object Relational {
   private def scanCsvMalformed(s: SparkSession, d: String): DataFrame = {
     val ctx = new SessionContext(s)
     val src = li(s, d)
-    val path = scratch("lineitem_malformed_csv")
+    val path = scratch(s, "lineitem_malformed_csv")
     ctx.writeCsv(src, path, header = false, delimiter = "|")
     val junk = new java.io.File(path, "part-junk.csv")
     val w = new java.io.PrintWriter(junk, "UTF-8")
@@ -175,7 +176,7 @@ object Relational {
   private def scanJsonMalformed(s: SparkSession, d: String): DataFrame = {
     val src = Tables.load(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val path = scratch("documents_malformed_json")
+    val path = scratch(s, "documents_malformed_json")
     src.write.mode("overwrite").json(path)
     val junk = new java.io.File(path, "part-junk.json")
     val w = new java.io.PrintWriter(junk, "UTF-8")
@@ -222,7 +223,7 @@ object Relational {
     val readBack = Seq(Compression.Snappy, Compression.Gzip, Compression.Lz4,
                        Compression.Zstd)
     val jobs = (Compression.None_ +: readBack).map { c =>
-      val path = scratch(s"orders_${Compression.option(c)}") // caller's thread
+      val path = scratch(s, s"orders_${Compression.option(c)}")
       () => {
         ctx.writeParquet(src, path, c)
         Option.when(readBack.contains(c))(ctx.readParquet(path))
@@ -273,7 +274,7 @@ object Relational {
     */
   private def scanNdjson(s: SparkSession, d: String): DataFrame = {
     val ctx = new SessionContext(s)
-    val path = scratch("documents_ndjson")
+    val path = scratch(s, "documents_ndjson")
     Tables.load(s, d, "documents")
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
       .write.mode("overwrite").json(path)
@@ -291,7 +292,7 @@ object Relational {
     */
   private def csvHeaderRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ctx = new SessionContext(s)
-    val path = scratch("orders_csv_hdr")
+    val path = scratch(s, "orders_csv_hdr")
     ctx.writeCsv(ord(s, d).select(col("o_orderkey"), col("o_custkey"),
       col("o_orderstatus"), col("o_totalprice")), path, header = true)
     ctx.readCsv(path) // no explicit schema: header + inferSchema
@@ -2697,7 +2698,7 @@ object Relational {
     * the gate checks.
     */
   private def aggIncrementalRollup(s: SparkSession, d: String): DataFrame = {
-    val partialDir = scratch("agg_partials")
+    val partialDir = scratch(s, "agg_partials")
     graft.streaming.Streaming.events(s, d)
       .withColumn("day", to_date(col("ts")))
       .groupBy(col("day"), col("event_type"))
@@ -2775,8 +2776,8 @@ object Relational {
   }
 
   private def layoutCompact(s: SparkSession, d: String): DataFrame = {
-    val smallDir = scratch("compact_small")
-    val outDir = scratch("compact_out")
+    val smallDir = scratch(s, "compact_small")
+    val outDir = scratch(s, "compact_out")
     li(s, d).repartition(64).write.mode("overwrite").parquet(smallDir)
     val nOut = layoutCompactTarget(smallDir, 8L * 1024 * 1024)
     s.read.parquet(smallDir).coalesce(nOut)

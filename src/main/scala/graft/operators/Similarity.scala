@@ -639,7 +639,9 @@ object Similarity {
   /** The exact-duplicate collapse frames over a (vec_id, v) corpus:
     * `keyed` = (vec_id, gk) under [[vecCollapseKey]], `groups` =
     * (gk, rep = min vec_id, gn). Callers cache `groups` themselves (the
-    * two call sites scope the cache differently).
+    * two call sites scope the cache differently). Not
+    * [[Dedup.exactGroups]]: these groups also count their members (gn),
+    * so the member joins read only the duplicate groups.
     */
   private def collapseGroups(corpus: DataFrame): (DataFrame, DataFrame) = {
     val keyed = corpus

@@ -2117,9 +2117,8 @@ object TextAnalysis {
     val cleanIds = keptIds.join(contaminated, Seq("doc_id"), "left_anti")
       .cache()
     val clean = raw.join(cleanIds, Seq("doc_id"))
-    val uniqIds = clean
-      .select(col("doc_id"), md5(TF.normText(col("text"))).as("gk"))
-      .groupBy(col("gk")).agg(min(col("doc_id")).as("doc_id"))
+    val uniqIds = Dedup.textGroups(clean)._1
+      .withColumnRenamed("rep", "doc_id")
       .cache()
     val toks = raw.select(col("doc_id"),
       GraftFunctions.greedy_token_count(TF.normText(col("text"))).as("tok"))

@@ -994,15 +994,10 @@ object Streaming {
                 Seq("band", "h1", "h2"))
               .select(col("new_doc"), col("dup_of")).distinct()
             label("near-dup probe")
-            broadcast(cands
+            Dedup.verifyJaccard(broadcast(cands
               .join(batch.select(col("doc_id").as("new_doc"),
                 col("sh").as("sh_a")), Seq("new_doc")))
-              .join(corpusSh, Seq("dup_of"))
-              .withColumn("common",
-                size(array_intersect(col("sh_a"), col("sh_b"))))
-              .filter(lit(1.0) * col("common") /
-                (size(col("sh_a")) + size(col("sh_b")) - col("common"))
-                >= Dedup.JaccardThreshold)
+              .join(corpusSh, Seq("dup_of")))
               .select(col("new_doc").as("doc_id")).distinct()
               .collect().map(_.getLong(0))
           }

@@ -488,63 +488,51 @@ class DedupSpec extends AnyFunSuite {
       r.getAs[Long]("n_unique") + r.getAs[Long]("n_dupes"))
   }
 
-  test("jaccard exact-duplicate pre-collapse expands to the full pair set") {
-    // replicate the corpus once (exact copies at doc_id+offset) and check
-    // the operator's collapse→index→expand path produces EXACTLY the
-    // brute expansion of the base answer: every base pair (a,b,j) becomes
-    // the 4 member pairs at the same j, and every ≥3-word doc gains its
-    // (d, d+off, 1.0) replica pair. This pins the property that made the
-    // ×10-replica SF≈1 canary linear instead of quadratic in the
-    // replication factor.
-    val off = 1000000L
-    val base = Tables.load(spark, sfDir, "documents")
-    val dir = SparkTestSession.tempDir("graft_jacrep")
-    base.unionByName(base.withColumn("doc_id", col("doc_id") + off))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def key(j: Double) = BigDecimal(j).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-    val basePairs = operators.Dedup.queries("dedup_ngram_jaccard")(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), key(r.getDouble(2))))
-    val eligible = base.select(col("doc_id"),
-        graft.functions.TextFunctions.normText(col("text")).as("nm"))
-      .filter(size(split(col("nm"), " ")) >= 3)
-      .collect().map(_.getLong(0))
-    val want = (basePairs.flatMap { case (a, b, j) =>
-      for (x <- Seq(a, a + off); y <- Seq(b, b + off))
-        yield (math.min(x, y), math.max(x, y), j)
-    } ++ eligible.map(d => (d, d + off, key(1.0)))).toSet
-    val got = operators.Dedup.queries("dedup_ngram_jaccard")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), key(r.getDouble(2)))).toSet
-    assert(got == want, s"got=${got.size} want=${want.size} " +
-      s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
-  }
+  // Replicate the corpus once (exact copies at doc_id + off) and check
+  // that a tier's collapse → index → expand path produces EXACTLY the
+  // brute expansion of its base answer: every base pair (a, b, score)
+  // becomes its 4 member pairs at the same score — canonicalized a < b
+  // for the self-join tiers, (even, odd) side order kept for join_fuzzy —
+  // and a self-join tier adds (d, d + off, intra) for every eligible doc
+  // (≥ 3 normalized words for the Jaccard tiers, which only pair docs
+  // that shingle; every doc for edit distance). This pins the property
+  // that made the ×10-replica SF≈1 canary linear instead of quadratic in
+  // the replication factor. MinHash recall on the new intra pairs is 1 by
+  // construction: identical signatures collide in every band.
+  private val replicated = Seq(
+    // (label, row, intra score, min words for an intra pair)
+    ("jaccard", "dedup_ngram_jaccard", Some(1.0), 3),
+    ("minhash", "dedup_minhash_lsh", Some(1.0), 3),
+    ("edit_distance", "dedup_edit_distance", Some(0.0), 0),
+    ("join_fuzzy", "join_fuzzy", None, 0))
 
-  test("minhash exact-duplicate pre-collapse expands to the full pair set") {
-    // same contract as the jaccard expansion spec above, for the MinHash
-    // tier's collapse: base pair (a,b,j) → 4 member pairs at the same j,
-    // plus the (d, d+off, 1.0) replica pair for every shingling doc
-    // (identical signatures collide in every band, so banding recall on
-    // the new intra pairs is 1 by construction, not probabilistic)
-    val off = 1000000L
-    val base = Tables.load(spark, sfDir, "documents")
-    val dir = SparkTestSession.tempDir("graft_mhrep")
-    base.unionByName(base.withColumn("doc_id", col("doc_id") + off))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def key(j: Double) = BigDecimal(j).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-    val basePairs = operators.Dedup.queries("dedup_minhash_lsh")(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), key(r.getDouble(2))))
-    val eligible = base.select(col("doc_id"),
-        graft.functions.TextFunctions.normText(col("text")).as("nm"))
-      .filter(size(split(col("nm"), " ")) >= 3)
-      .collect().map(_.getLong(0))
-    val want = (basePairs.flatMap { case (a, b, j) =>
-      for (x <- Seq(a, a + off); y <- Seq(b, b + off))
-        yield (math.min(x, y), math.max(x, y), j)
-    } ++ eligible.map(d => (d, d + off, key(1.0)))).toSet
-    val got = operators.Dedup.queries("dedup_minhash_lsh")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), key(r.getDouble(2)))).toSet
-    assert(got == want, s"got=${got.size} want=${want.size} " +
-      s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
-  }
+  for ((label, row, intra, minWords) <- replicated)
+    test(s"$label exact-duplicate pre-collapse expands to the full pair set") {
+      val off = 1000000L
+      val base = Tables.load(spark, sfDir, "documents")
+      val dir = SparkTestSession.tempDir(s"graft_rep_$label")
+      base.unionByName(base.withColumn("doc_id", col("doc_id") + off))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def key(v: Double) = BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+      def pairs(d: String) = operators.Dedup.queries(row)(spark, d).collect()
+        .map(r => (r.getLong(0), r.getLong(1), key(r.getAs[Number](2).doubleValue)))
+      val basePairs = pairs(sfDir)
+      assert(basePairs.nonEmpty, s"$row found no base pairs")
+      val cross = basePairs.flatMap { case (a, b, v) =>
+        for (x <- Seq(a, a + off); y <- Seq(b, b + off))
+          yield if (intra.isEmpty) (x, y, v) else (math.min(x, y), math.max(x, y), v)
+      }
+      val within = intra.toSeq.flatMap { v =>
+        base.select(col("doc_id"),
+            graft.functions.TextFunctions.normText(col("text")).as("nm"))
+          .filter(size(split(col("nm"), " ")) >= minWords)
+          .collect().map(r => (r.getLong(0), r.getLong(0) + off, key(v)))
+      }
+      val want = (cross ++ within).toSet
+      val got = pairs(dir).toSet
+      assert(got == want, s"got=${got.size} want=${want.size} " +
+        s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+    }
 
   test("containment exact-duplicate pre-collapse expands to the full pair set") {
     // both sides collapse here (probe fragments AND corpus), so the

@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Storage hygiene: the dedup/similarity operators cache shared
@@ -147,12 +148,34 @@ class HygieneSpec extends AnyFunSuite {
   }
 
   test("source: RowMetrics is the only listener under src/main") {
-    val listener =
-      raw"(?:new|extends|with)\s+[\w.]*\b(?:SparkListener|StreamingQueryListener)\b".r
+    val listener = ("(?:new|extends|with)\\s+[\\w.]*\\b" +
+      "(?:SparkListener|StreamingQueryListener|QueryExecutionListener)\\b").r
     val hits = scalaSources("src/main").collect {
       case (f, ls) if ls.exists(listener.findFirstIn(_).isDefined) => f
     }
     assert(hits == Seq(s"$mainSrc/RowMetrics.scala"), hits)
+  }
+
+  test("source: the near-dup tiers share one text key and one Jaccard check") {
+    // each decision lives once, in Dedup's helpers; a second copy here
+    // means a tier hand-rolled it again
+    for (needle <- Seq("md5(TF.normText(col(\"text\"))).as(",
+                       "array_intersect(col(\"sh_a\")")) {
+      val hits = scalaSources("src/main").flatMap { case (f, ls) =>
+        ls.zipWithIndex.collect { case (l, i) if l.contains(needle) => s"$f:${i + 1}" }
+      }
+      assert(hits.size == 1, s"$needle: $hits")
+    }
+  }
+
+  test("scratch paths follow the row's session, not the thread's active one") {
+    val root = SparkTestSession.tempDir("graft_scratch_child")
+    val child = spark.newSession()
+    child.conf.set("spark.graft.scratch", root)
+    SparkSession.setActiveSession(spark)
+    SparkEntry.queries("scan_csv_roundtrip")(child, sfDir).collect()
+    assert(new java.io.File(s"$root/lineitem_csv").isDirectory,
+      s"lineitem_csv not under the child's root $root")
   }
 
   test("source: Verify, Bench, Demo and Audit are the only mains under src/") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[RowMetrics]] is exact without waiting: `take()` drains the listener
@@ -62,6 +63,16 @@ class RowMetricsSpec extends AnyFunSuite {
       assert(q6.nonEmpty && q6.forall(rowTags(_) == Set("rm-tpch_q6")), q6)
       assert(after.nonEmpty && after.forall(_.tags.isEmpty), after)
     } finally metrics.close()
+  }
+
+  test("a noop write of a shuffle aggregate records AQE's final plan") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val m = measured {
+      spark.range(0, 10000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+        .write.format("noop").mode("overwrite").save()
+    }
+    val plan = m.plans.lastOption.map(_.executedPlan.toString)
+    assert(plan.exists(_.contains("isFinalPlan=true")), plan)
   }
 
   test("stream_exec_dedup records one micro-batch with state rows") {
