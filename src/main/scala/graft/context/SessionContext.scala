@@ -156,8 +156,14 @@ object SessionContext {
     * child), AQE on (runtime shuffle-partition coalescing + skew-join
     * handling — the adaptive re-planning the reference lacks, SURVEY.md
     * §4.2), UTC session time, nanosecond parquet timestamps read as
-    * longs, UI off. `confs` are applied last, for the few entry points
-    * that really differ (a scratch root, a memory squeeze).
+    * longs, UI off, and `file:` I/O through [[NioLocalFileSystem]] and
+    * [[NioLocalFs]] (no `chmod`/`readlink` child process per file). Only
+    * these sessions get that filesystem, and Hadoop's `FileSystem` cache
+    * is JVM-wide: the first `file:` filesystem created in the JVM serves
+    * every later `FileSystem.get`, so a stock one created before the
+    * first `local` session stays in use (`FileContext` is not cached and
+    * follows each session's conf). `confs` are applied last, for the few
+    * entry points that really differ (a scratch root, a memory squeeze).
     */
   def local(cores: Int, shufflePartitions: Int,
             confs: (String, String)*): SessionContext = {
@@ -172,6 +178,8 @@ object SessionContext {
       // carry) surface as LongType instead of an illegal-type error
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
     val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

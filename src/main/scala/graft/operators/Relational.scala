@@ -207,8 +207,11 @@ object Relational {
     * zstd); brotli and lzo need native codec jars absent from this
     * environment, so they stay API-only ([[Compression]]).
     *
-    * The five writes are independent small jobs whose wall time is file
-    * commit and schema-inference round-trips, so each codec's write and
+    * The five writes are independent small jobs whose wall time is
+    * driver round-trips: job scheduling, the committer's renames and
+    * schema inference. (Their ~90 forked `chmod`s per row are gone since
+    * [[graft.context.NioLocalFileSystem]]; `graft.Audit` at sf0.1 on 4
+    * cores read 1.59 → 1.50 s, median of 3.) So each codec's write and
     * its own inferring read-back run on a fresh thread, overlapped. Fresh
     * threads, not a pool: Spark's local properties (job tags, job
     * description) and the active session are inheritable thread-locals
