@@ -10,27 +10,25 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, F
   FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's `RawLocalFileSystem` without child processes. Without
   * libhadoop (`NativeIO.isAvailable` false, as in a stock Spark
   * distribution) the stock class forks a `chmod` for every file and
   * directory it creates, and `FileUtil.readLink` forks a `readlink` for
   * every `getFileLinkStatus` — each `FileContext` rename of a streaming
-  * offset, commit or state file asks twice. Here both are JDK calls with
-  * the stock results: the mode bits from the `FsAction` triples, and the
-  * link read from the same file stock hands to `readlink` (a
-  * `file:`-qualified `Path` names a relative file there, so neither sees
-  * a link through one). `setPermission` keeps stock's path where that is
-  * already fork-free (libhadoop's `chmod`) or where the JDK cannot say the
-  * mode (the sticky bit, a non-POSIX default filesystem); `readlink` forks
-  * with or without libhadoop, so only non-POSIX keeps stock's link path.
+  * offset, commit or state file asks twice. Here both are JDK calls,
+  * with or without libhadoop, giving the stock results: the mode bits
+  * from the `FsAction` triples, and the link read from the same file
+  * stock hands to `readlink` (a `file:`-qualified `Path` names a relative
+  * file there, so neither sees a link through one). Stock's path stays
+  * only where the JDK cannot say the result: the sticky bit in
+  * `setPermission`, and a non-POSIX default filesystem.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   import NioRawLocalFileSystem.Posix
 
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    if (NativeIO.isAvailable || !Posix || permission.getStickyBit)
+    if (!Posix || permission.getStickyBit)
       super.setPermission(p, permission)
     else Files.setPosixFilePermissions(pathToFile(p).toPath,
       PosixFilePermissions.fromString(Seq(permission.getUserAction,

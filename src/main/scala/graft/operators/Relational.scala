@@ -209,14 +209,12 @@ object Relational {
     *
     * The five writes are independent small jobs whose wall time is
     * driver round-trips: job scheduling, the committer's renames and
-    * schema inference. (Their ~90 forked `chmod`s per row are gone since
-    * [[graft.context.NioLocalFileSystem]]; `graft.Audit` at sf0.1 on 4
-    * cores read 1.59 → 1.50 s, median of 3.) So each codec's write and
-    * its own inferring read-back run on a fresh thread, overlapped. Fresh
-    * threads, not a pool: Spark's local properties (job tags, job
-    * description) and the active session are inheritable thread-locals
-    * copied at thread creation, so a per-call thread carries the caller's
-    * labels while a reused pool thread would carry stale ones. Each codec
+    * schema inference. So each codec's write and its own inferring
+    * read-back run on a fresh thread, overlapped. Fresh threads, not a
+    * pool: Spark's local properties (job tags, job description) and the
+    * active session are inheritable thread-locals copied at thread
+    * creation, so a per-call thread carries the caller's labels while a
+    * reused pool thread would carry stale ones. Each codec
     * keeps its own inferring read, so a codec that wrote a different
     * schema still fails `unionByName`.
     */

@@ -93,14 +93,12 @@ object Streaming {
     * holds state. A commit is fixed checkpoint I/O: the state delta and
     * its checksum file (Spark's checkpoint checksums stay on), each
     * written on its own pool thread and awaited, plus a per-store
-    * maintenance thread and directory creation. Those files once cost a
-    * forked `chmod` and `readlink` each; since `SessionContext.local`
-    * writes them through [[graft.context.NioLocalFileSystem]] the width
-    * moves these small-state rows (every one holds <10 MB) far less. On
+    * maintenance thread and directory creation. For these small-state
+    * rows (every one holds <10 MB) the width moves wall time little. On
     * 4 cores at sf0.01 (`graft.Audit`, warm second run, widths
-    * 8/4/2/1) the inner interval join reads 1.62/1.62/1.46/1.56 s (with
-    * forks it read 2.16/1.93/1.52/1.38 s), its cumulative state commit
-    * 314 ms at 8 stores and 24 ms at 1; window_agg 1.13/1.17/0.94/0.94 s;
+    * 8/4/2/1) the inner interval join reads 1.62/1.62/1.46/1.56 s, its
+    * cumulative state commit 314 ms at 8 stores and 24 ms at 1;
+    * window_agg 1.13/1.17/0.94/0.94 s;
     * dedup 0.58/0.56/0.52/0.51 s. Half the cores keeps the stateful
     * stage parallel and sits at the low end of that sweep. At
     * scale the override is RAISED for state CAPACITY: target
