@@ -1,16 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static kernels called from both interpreted eval and generated code.
-  * Top-level object → the compiler emits static forwarders, so Janino-
-  * generated Java can call `graft.functions.HashImpls.xxx(...)` directly,
-  * keeping these expressions inside whole-stage codegen spans.
+/** Static kernels behind graft's native functions. Each public method
+  * is named twice in one [[Kernel]] row of [[GraftFunctions.kernels]]:
+  * as the Java name [[KernelCall]]'s generated code calls and as the
+  * Scala function its interpreted eval calls. Top-level object → the
+  * compiler emits static forwarders, so Janino-generated Java can call
+  * `graft.functions.HashImpls.xxx(...)` directly, keeping every kernel
+  * inside whole-stage codegen spans.
   *
   * All hashes are self-contained public algorithms (FNV-1a 64-bit;
   * splitmix64 finalizer from Steele et al., "Fast Splittable Pseudorandom
@@ -41,7 +46,8 @@ object HashImpls {
   }
 
   /** Polynomial (Rabin-Karp) rolling hash over UTF-8 bytes, wrapping mod
-    * 2^64. Suitable for document fingerprinting.
+    * 2^64: the document fingerprint the reference's scalar-function
+    * surface lacks (it ships only sha224-512/md5, ballista.proto:80-114).
     */
   def rollingHash(s: UTF8String): Long = {
     val bytes = s.getBytes
@@ -134,7 +140,8 @@ object HashImpls {
 
   /** Cosine similarity of two double vectors, strict left-to-right
     * accumulation (deterministic across partitionings). Returns 0.0 for
-    * zero-norm inputs.
+    * zero-norm inputs. One fused pass: a zip_with+aggregate composition
+    * evaluates its lambdas outside whole-stage codegen.
     */
   def cosine(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
@@ -148,8 +155,10 @@ object HashImpls {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-
-  /** Distinct n-gram shingles ("w1 w2 w3") over a word array, one pass. */
+  /** Distinct n-gram shingles ("w1 w2 w3") over a word array, one pass
+    * (a transform/slice/concat_ws composition evaluates its lambda
+    * interpreted per element, which dominates dedup at scale).
+    */
   def wordShingles(words: ArrayData, n: Int): ArrayData = {
     val m = words.numElements()
     if (m < n) return new GenericArrayData(new Array[Any](0))
@@ -176,7 +185,8 @@ object HashImpls {
     * lev(a,b) <= K implies |Q(a) ∩ Q(b)| >= max(|Q(a)|,|Q(b)|) − K·q —
     * the count bound the prefix filter needs). Substring positions are
     * code-point-based (UTF8String.substring), so multi-byte text never
-    * splits a character.
+    * splits a character. A transform(sequence(...)) composition would
+    * evaluate an interpreted lambda per position.
     */
   def charGrams(s: UTF8String, q: Int): ArrayData = {
     val m = s.numChars()
@@ -209,7 +219,7 @@ object HashImpls {
   }
 
   /** Content-defined-chunking cut positions of a string (backs
-    * [[CdcCuts]] and graft.operators.Dedup's CDC tier): the 1-based
+    * `cdc_cuts` and graft.operators.Dedup's CDC tier): the 1-based
     * code-point index `p + w - 1` for every window start `p` in
     * `[1, numChars - w + 1]` whose w-code-point window's md5 hex digest
     * starts with '0'. Bit-identical to the declarative form
@@ -374,7 +384,7 @@ object HashImpls {
     val m = new java.util.HashMap[String, Integer]()
     var i = 0
     while (i < BpeMerges.length) {
-      m.put(BpeMerges(i)._1 + " " + BpeMerges(i)._2, i)
+      m.put(BpeMerges(i)._1 + "\u0000" + BpeMerges(i)._2, i)
       i += 1
     }
     m
@@ -402,7 +412,7 @@ object HashImpls {
       var bp = -1
       var j = 0
       while (j < toks.size - 1) {
-        val r = bpeRank.get(toks.get(j) + " " + toks.get(j + 1))
+        val r = bpeRank.get(toks.get(j) + "\u0000" + toks.get(j + 1))
         if (r != null && r < best) { best = r; bp = j }
         j += 1
       }
@@ -501,107 +511,6 @@ object HashImpls {
     }
     new GenericArrayData(out)
   }
-}
-
-/** Rabin-Karp rolling-hash fingerprint of a string → LONG.
-  * Fills the document-fingerprinting gap in the reference's scalar-function
-  * surface (reference ships only sha224-512/md5 hashing —
-  * ballista.proto:80-114); native Expression with codegen, per the
-  * "functions, not UDFs" rule.
-  */
-case class RollingHash(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_hash"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.rollingHash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.rollingHash($c)")
-  override protected def withNewChildInternal(c: Expression): RollingHash = copy(child = c)
-}
-
-/** 64-bit SimHash of an ARRAY<STRING> of tokens → LONG. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.simhash64(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.simhash64($c)")
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
-}
-
-/** k-permutation MinHash signature of an ARRAY<STRING> → ARRAY<LONG>[k]. */
-case class MinHash64(child: Expression, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(k > 0 && k <= 1024, s"minhash k out of range: $k")
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash64"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.minhash64(v.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.minhash64($c, $k)")
-  override protected def withNewChildInternal(c: Expression): MinHash64 = copy(child = c)
-}
-
-/** Cosine similarity of two ARRAY<DOUBLE> vectors → DOUBLE. One fused pass,
-  * no per-element lambda overhead (contrast: zip_with+aggregate evaluates
-  * higher-order functions outside whole-stage codegen).
-  */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashImpls.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpls.cosine($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-}
-
-/** Dot product of two ARRAY<DOUBLE> vectors → DOUBLE. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashImpls.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpls.dot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
-/** Banded random-hyperplane sign-bit LSH signature of an ARRAY<DOUBLE>
-  * vector → ARRAY<LONG>[bands] (element j = band j's packed sign bits).
-  * The hyperplane matrix is derived from the seed per executor (see
-  * [[HashImpls.hyperplaneBands]]) — no literals in the plan, no broadcast.
-  */
-case class HyperplaneBands(child: Expression, bands: Int, rowsPerBand: Int,
-                           seed: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(bands > 0 && bands <= 256, s"band count out of range: $bands")
-  require(rowsPerBand > 0 && rowsPerBand <= 63,
-    s"rows per band out of range: $rowsPerBand")
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hyperplane_bands"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.hyperplaneBands(v.asInstanceOf[ArrayData], bands, rowsPerBand, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashImpls.hyperplaneBands($c, $bands, $rowsPerBand, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): HyperplaneBands =
-    copy(child = c)
 }
 
 /** Static kernel for the broadcast-bloom membership probe. Spark's
@@ -717,74 +626,167 @@ object HtmlImpls {
   }
 }
 
-/** HTML boilerplate extraction of a STRING page → STRUCT(n_lines_raw,
-  * n_lines_kept, n_links, n_words_kept, text_clean). See
-  * [[HtmlImpls.htmlExtract]] for why this is a native kernel and not a
-  * higher-order-function composition.
+/** One native function, named once: its SQL name, its arguments, its
+  * result type and its static kernel. The kernel appears twice — as the
+  * Java name generated code calls (`method`, relative to
+  * `graft.functions`) and as the Scala function interpreted eval calls
+  * (`eval`, over the argument values, none of them NULL). The rows live
+  * in [[GraftFunctions.kernels]]; [[KernelCall]] evaluates any of them.
   */
-case class HtmlExtract(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = HtmlImpls.schema
-  override def prettyName: String = "html_extract"
-  override protected def nullSafeEval(v: Any): Any =
-    HtmlImpls.htmlExtract(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlImpls.htmlExtract($c)")
-  override protected def withNewChildInternal(c: Expression): HtmlExtract =
-    copy(child = c)
+final case class Kernel(name: String, args: Seq[Kernel.Arg], dataType: DataType,
+                        method: String, eval: Array[Any] => Any)
+
+object Kernel {
+  /** A column argument of `dataType`, or — with `range` — an integral
+    * literal (`dataType` IntegerType or LongType) within the inclusive
+    * range, `default` standing in when a call omits it. A NULL literal
+    * makes the call NULL, as a NULL column value does.
+    */
+  final case class Arg(dataType: DataType, range: Option[(Long, Long)] = None,
+                       default: Option[Long] = None)
+
+  def lit(dataType: DataType, lo: Long, hi: Long, default: Option[Long] = None): Arg =
+    Arg(dataType, Some((lo, hi)), default)
+}
+
+/** The one Catalyst expression behind every [[Kernel]]: `kernel` applied
+  * to `children`, its column arguments and its literal arguments (as
+  * [[Literal]] children) in the row's order. NULL in any argument gives
+  * NULL out; it is foldable exactly when its children are; plans show
+  * the row's SQL name (`minhash64(sh#12, 64)`); generated code calls
+  * `graft.functions.<method>(args…)` inline, so every kernel stays inside
+  * whole-stage codegen. Spark's `StaticInvoke` would do the call too, but
+  * it renames the plan node to `staticinvoke(...)` and its interpreted
+  * path reflects on every row.
+  */
+case class KernelCall(kernel: Kernel, children: Seq[Expression])
+    extends Expression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = kernel.args.map(_.dataType)
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def prettyName: String = kernel.name
+  override protected def stringArgs: Iterator[Any] = children.iterator
+
+  override def eval(input: InternalRow): Any = {
+    val vs = new Array[Any](children.length)
+    var i = 0
+    while (i < vs.length) {
+      vs(i) = children(i).eval(input)
+      if (vs(i) == null) return null
+      i += 1
+    }
+    kernel.eval(vs)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val call = s"${ev.isNull} = false;\n${ev.value} = graft.functions." +
+      s"${kernel.method}(${gens.map(_.value).mkString(", ")});"
+    val body = children.zip(gens).foldRight(call) { case ((c, g), inner) =>
+      s"${g.code}\n${ctx.nullSafeExec(c.nullable, g.isNull)(inner)}"
+    }
+    ev.copy(code = code"""
+      boolean ${ev.isNull} = true;
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      $body""")
+  }
+
+  override protected def withNewChildrenInternal(
+      cs: IndexedSeq[Expression]): KernelCall = copy(children = cs)
 }
 
 /** SQL registration + Column-level wrappers (via the function registry, so
-  * the same names work from SQL and the DataFrame API). The install path
-  * is [[injectInto]], the `SparkSessionExtensions` hook behind
+  * the same names work from SQL and the DataFrame API). Every native
+  * function is one [[Kernel]] row of [[kernels]]; [[names]], [[register]]
+  * and [[injectInto]] all read that table. The install path is
+  * [[injectInto]], the `SparkSessionExtensions` hook behind
   * [[GraftExtensions]]: `graft.context.SessionContext.local` sets
   * `spark.sql.extensions=graft.functions.GraftExtensions`, so every
   * session it builds — and every `newSession()` child of one — resolves
   * these names. Precondition for the operators: a session from
   * `SessionContext.local`, or one with that extension set.
   * `graft.SparkEntry.queries` adapts any other session through
-  * [[register]], the imperative per-session form of the same builder
-  * table (it does not carry into `newSession()` children).
+  * [[register]], the imperative per-session form of the same table (it
+  * does not carry into `newSession()` children).
   */
 object GraftFunctions {
   import org.apache.spark.sql.functions.call_function
   import org.apache.spark.sql.SparkSessionExtensions
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+  import Kernel.{Arg, lit}
 
-  private def intArg(e: Expression, name: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$name expects an integer literal, got $other")
+  private val Strings = ArrayType(StringType)
+  private val Doubles = ArrayType(DoubleType)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private def str(v: Any) = v.asInstanceOf[UTF8String]
+  private def arr(v: Any) = v.asInstanceOf[ArrayData]
+  private def int(v: Any) = v.asInstanceOf[Int]
+
+  /** graft's native functions, one row each (see [[HashImpls]] and
+    * [[HtmlImpls]] for what each kernel computes and why it is native).
+    */
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("rolling_hash", Seq(Arg(StringType)), LongType,
+      "HashImpls.rollingHash", a => HashImpls.rollingHash(str(a(0)))),
+    Kernel("simhash64", Seq(Arg(Strings)), LongType,
+      "HashImpls.simhash64", a => HashImpls.simhash64(arr(a(0)))),
+    Kernel("minhash64", Seq(Arg(Strings), lit(IntegerType, 1, 1024, Some(64))),
+      Longs, "HashImpls.minhash64", a => HashImpls.minhash64(arr(a(0)), int(a(1)))),
+    Kernel("word_shingles", Seq(Arg(Strings), lit(IntegerType, 1, 16, Some(3))),
+      ArrayType(StringType, containsNull = false),
+      "HashImpls.wordShingles", a => HashImpls.wordShingles(arr(a(0)), int(a(1)))),
+    Kernel("char_grams", Seq(Arg(StringType), lit(IntegerType, 1, 16, Some(3))),
+      ArrayType(StringType, containsNull = false),
+      "HashImpls.charGrams", a => HashImpls.charGrams(str(a(0)), int(a(1)))),
+    Kernel("cdc_cuts", Seq(Arg(StringType), lit(IntegerType, 1, 64, Some(8))),
+      ArrayType(IntegerType, containsNull = false),
+      "HashImpls.cdcCuts", a => HashImpls.cdcCuts(str(a(0)), int(a(1)))),
+    Kernel("max_run_count", Seq(Arg(Strings)), LongType,
+      "HashImpls.maxRunCount", a => HashImpls.maxRunCount(arr(a(0)))),
+    Kernel("greedy_token_count", Seq(Arg(StringType)), LongType,
+      "HashImpls.greedyTokenCount", a => HashImpls.greedyTokenCount(str(a(0)))),
+    Kernel("bpe_token_count", Seq(Arg(StringType)), LongType,
+      "HashImpls.bpeTokenCount", a => HashImpls.bpeTokenCount(str(a(0)))),
+    Kernel("html_extract", Seq(Arg(StringType)), HtmlImpls.schema,
+      "HtmlImpls.htmlExtract", a => HtmlImpls.htmlExtract(str(a(0)))),
+    Kernel("cosine_sim", Seq(Arg(Doubles), Arg(Doubles)), DoubleType,
+      "HashImpls.cosine", a => HashImpls.cosine(arr(a(0)), arr(a(1)))),
+    Kernel("dot_product", Seq(Arg(Doubles), Arg(Doubles)), DoubleType,
+      "HashImpls.dot", a => HashImpls.dot(arr(a(0)), arr(a(1)))),
+    Kernel("hyperplane_bands", Seq(Arg(Doubles), lit(IntegerType, 1, 256),
+        lit(IntegerType, 1, 63), lit(LongType, Long.MinValue, Long.MaxValue)),
+      Longs, "HashImpls.hyperplaneBands", a => HashImpls.hyperplaneBands(
+        arr(a(0)), int(a(1)), int(a(2)), a(3).asInstanceOf[Long])))
+
+  /** The registry builder of one row: column arguments pass through
+    * (ImplicitCastInputTypes casts or rejects them at analysis); each
+    * literal argument must be an integer literal in its range, takes its
+    * default when omitted, and becomes a [[Literal]] of its declared type.
+    */
+  private def builder(k: Kernel)(es: Seq[Expression]): Expression = {
+    val min = k.args.count(_.default.isEmpty)
+    require(es.length >= min && es.length <= k.args.length,
+      s"${k.name} takes $min to ${k.args.length} arguments, got ${es.length}")
+    KernelCall(k, k.args.zipWithIndex.map {
+      case (Arg(_, None, _), i) => es(i)
+      case (Arg(t, Some((lo, hi)), default), i) =>
+        val v: java.lang.Long = es.lift(i).fold(default.map(Long.box).orNull) {
+          case Literal(null, _) => null
+          case Literal(v: Int, IntegerType) => v.toLong
+          case Literal(v: Long, LongType) => v
+          case other => throw new IllegalArgumentException(
+            s"${k.name} expects an integer literal, got $other")
+        }
+        require(v == null || (v >= lo && v <= hi),
+          s"${k.name} argument ${i + 1} out of range [$lo, $hi]: $v")
+        Literal(if (v == null || t == LongType) v else Int.box(v.intValue), t)
+    })
   }
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "rolling_hash" -> (es => RollingHash(es.head)),
-    "simhash64" -> (es => SimHash64(es.head)),
-    "minhash64" -> (es => MinHash64(es.head,
-      if (es.length > 1) intArg(es(1), "minhash64") else 64)),
-    "word_shingles" -> (es => WordShingles(es(0),
-      if (es.length > 1) intArg(es(1), "word_shingles") else 3)),
-    "char_grams" -> (es => CharGrams(es(0),
-      if (es.length > 1) intArg(es(1), "char_grams") else 3)),
-    "cdc_cuts" -> (es => CdcCuts(es(0),
-      if (es.length > 1) intArg(es(1), "cdc_cuts") else 8)),
-    "max_run_count" -> (es => MaxRunCount(es.head)),
-    "greedy_token_count" -> (es => GreedyTokenCount(es.head)),
-    "bpe_token_count" -> (es => BpeTokenCount(es.head)),
-    "html_extract" -> (es => HtmlExtract(es.head)),
-    "cosine_sim" -> (es => CosineSim(es(0), es(1))),
-    "dot_product" -> (es => DotProduct(es(0), es(1))),
-    "hyperplane_bands" -> (es =>
-      HyperplaneBands(es(0), intArg(es(1), "hyperplane_bands"),
-        intArg(es(2), "hyperplane_bands"), es(3) match {
-          case Literal(v: Long, LongType) => v
-          case Literal(v: Int, IntegerType) => v.toLong
-          case other => throw new IllegalArgumentException(
-            s"hyperplane_bands expects a literal seed, got $other")
-        }))
-  )
+  /** Registered function names (for the built-in-collision spec). */
+  def names: Seq[String] = kernels.map(_.name)
 
   /** The idempotent-register skip below backs off whenever a name is
     * already bound — and a session registry holds Spark's built-ins too,
@@ -794,13 +796,10 @@ object GraftFunctions {
     * graft registers into sessions): a colliding name fails loudly at
     * first use instead of resolving to the wrong function forever.
     */
-  /** Registered function names (for the built-in-collision spec). */
-  def names: Seq[String] = builders.map(_._1)
-
   private lazy val assertNoBuiltinCollision: Unit = {
     val builtin =
       org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
-    val clashes = builders.map(_._1)
+    val clashes = names
       .filter(n => builtin.functionExists(FunctionIdentifier(n)))
     require(clashes.isEmpty,
       s"graft function names shadow Spark built-ins: ${clashes.mkString(",")}" +
@@ -820,20 +819,20 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     assertNoBuiltinCollision
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
+    kernels.foreach { k =>
+      if (!reg.functionExists(FunctionIdentifier(k.name)))
+        reg.createOrReplaceTempFunction(k.name, builder(k), "built-in")
     }
   }
 
-  /** The `SparkSessionExtensions` path: same builders, catalog-injected at
+  /** The `SparkSessionExtensions` path: same table, catalog-injected at
     * session construction.
     */
   def injectInto(ext: SparkSessionExtensions): Unit = {
     assertNoBuiltinCollision
-    builders.foreach { case (name, b) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name), b))
+    kernels.foreach { k =>
+      ext.injectFunction((FunctionIdentifier(k.name),
+        new ExpressionInfo("graft.functions", k.name), builder(k)))
     }
   }
 
@@ -862,8 +861,8 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(rowsPerBand),
       org.apache.spark.sql.functions.lit(seed))
 
-  /** Codegen bloom probe over a driver-built broadcast filter. The shared
-    * [[builders]] path can't carry a runtime object through literal
+  /** Codegen bloom probe over a driver-built broadcast filter. The
+    * [[kernels]] table can't carry a runtime object through literal
     * arguments, so each broadcast registers its own builder closure under
     * a broadcast-id-unique name — two filters alive in one session never
     * clobber each other's unresolved plans.
@@ -897,61 +896,6 @@ object GraftFunctions {
   }
 }
 
-/** Maximum element multiplicity of an ARRAY<STRING> → LONG (0 for empty).
-  * Native one-pass kernel for repetition scoring; see
-  * [[HashImpls.maxRunCount]] for why this beats the higher-order
-  * `aggregate` form.
-  */
-case class MaxRunCount(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "max_run_count"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.maxRunCount(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.maxRunCount($c)")
-  override protected def withNewChildInternal(c: Expression): MaxRunCount =
-    copy(child = c)
-}
-
-/** Greedy longest-match subword token count of a STRING → LONG (see
-  * [[HashImpls.greedyTokenCount]] / [[HashImpls.TokenVocab]]). Native
-  * one-pass kernel that stays inside whole-stage codegen — tokenizing
-  * 100 TB through an interpreted UDF would dominate the packing stage.
-  */
-case class GreedyTokenCount(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "greedy_token_count"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.greedyTokenCount(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.greedyTokenCount($c)")
-  override protected def withNewChildInternal(c: Expression): GreedyTokenCount =
-    copy(child = c)
-}
-
-/** BPE pair-merge subword token count of a STRING → LONG (see
-  * [[HashImpls.bpeTokenCount]] / [[HashImpls.BpeMerges]]). Native
-  * one-pass kernel beside [[GreedyTokenCount]]: ranked merge-loop BPE is
-  * what production tokenizers actually run; both stay inside whole-stage
-  * codegen so the 100 TB packing stage never leaves the scan.
-  */
-case class BpeTokenCount(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bpe_token_count"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.bpeTokenCount(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.bpeTokenCount($c)")
-  override protected def withNewChildInternal(c: Expression): BpeTokenCount =
-    copy(child = c)
-}
-
 /** Session-extensions installer (SURVEY §7.2's `SparkSessionExtensions`
   * path): `--conf spark.sql.extensions=graft.functions.GraftExtensions`
   * makes every graft function available in ANY session of the
@@ -967,61 +911,3 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   }
 }
 
-/** Distinct space-joined n-gram shingles of an ARRAY<STRING> of words →
-  * ARRAY<STRING>. Native one-pass kernel: the equivalent
-  * transform/slice/concat_ws composition evaluates higher-order lambdas
-  * interpreted per element, which dominates dedup runtime at scale.
-  */
-case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(n > 0 && n <= 16, s"shingle width out of range: $n")
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.wordShingles(v.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.wordShingles($c, $n)")
-  override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
-}
-
-/** Distinct character q-grams of a STRING → ARRAY<STRING>. Native
-  * one-pass kernel (see [[HashImpls.charGrams]] for the edit-distance
-  * count bound it backs); the transform(sequence(...)) composition
-  * evaluates an interpreted lambda per position, which dominates at
-  * corpus scale.
-  */
-case class CharGrams(child: Expression, q: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(q > 0 && q <= 16, s"q-gram width out of range: $q")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "char_grams"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.charGrams(v.asInstanceOf[UTF8String], q)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.charGrams($c, $q)")
-  override protected def withNewChildInternal(c: Expression): CharGrams = copy(child = c)
-}
-
-/** Content-defined-chunking cut positions of a STRING → ARRAY<INT> (see
-  * [[HashImpls.cdcCuts]] for the cut rule and its bit-identity to the
-  * declarative md5-window form). Native one-pass kernel: the
-  * transform/filter composition it replaces evaluated an interpreted
-  * lambda — with a fresh MessageDigest and full hex encode inside — per
-  * character position, the repo's one interpreted hot loop (r17 verdict);
-  * a CDC pass at 100 TB is ~one md5 per corpus byte, so the probe IS the
-  * job's constant factor.
-  */
-case class CdcCuts(child: Expression, w: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(w > 0 && w <= 64, s"cdc window width out of range: $w")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "cdc_cuts"
-  override protected def nullSafeEval(v: Any): Any =
-    HashImpls.cdcCuts(v.asInstanceOf[UTF8String], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpls.cdcCuts($c, $w)")
-  override protected def withNewChildInternal(c: Expression): CdcCuts = copy(child = c)
-}

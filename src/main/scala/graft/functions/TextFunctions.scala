@@ -18,18 +18,6 @@ object TextFunctions {
   /** Whitespace tokens of the normalized text. */
   def words(c: Column): Column = split(normText(c), " ")
 
-  /** Distinct n-word shingles ("w1 w2 w3") of the normalized text.
-    * Empty array when the document has fewer than n words.
-    */
-  def wordShingles(c: Column, n: Int): Column = {
-    val w = words(c)
-    when(size(w) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(w) - n),
-        i => concat_ws(" ", slice(w, i + lit(1), lit(n))))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Whitespace token count. */
   def tokenCountWs(c: Column): Column = size(split(trim(c), "\\s+"))
 

@@ -206,9 +206,8 @@ object Dedup {
       .filter(col("rk") <= bound)
   }
 
-  /** doc_id → distinct 3-word shingle set (native codegen'd expression;
-    * the pure-built-in composition [[TF.wordShingles]] is the portable
-    * fallback but evaluates higher-order lambdas interpreted).
+  /** doc_id → distinct 3-word shingle set (the native codegen'd
+    * `word_shingles` kernel over [[TF.words]]).
     */
   private def shingleSets(s: SparkSession, d: String): DataFrame = {
     docs(s, d).select(col("doc_id"),
@@ -1163,9 +1162,10 @@ object Dedup {
     * distinct chunk is the skew-immune two-phase min-struct aggregate
     * (never a per-group window sort); the doc rollup joins two
     * doc-keyed aggregates. The md5 window probe is the native codegen'd
-    * [[graft.functions.CdcCuts]] kernel (r18; was an interpreted
-    * transform lambda dispatching a fresh MessageDigest + hex encode per
-    * character position — the r17 verdict's one interpreted hot loop):
+    * `cdc_cuts` kernel ([[graft.functions.HashImpls.cdcCuts]]; r18,
+    * was an interpreted transform lambda dispatching a fresh
+    * MessageDigest + hex encode per character position — the r17
+    * verdict's one interpreted hot loop):
     * one no-allocation pass per document, cut rule bit-identical (see
     * the kernel's scaladoc for the identity), so the DuckDB oracle's
     * replay is untouched. The downstream starts/ends lambdas stay

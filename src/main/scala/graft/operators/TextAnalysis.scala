@@ -2699,22 +2699,34 @@ object TextAnalysis {
     * sub-shingle docs trivially pass.
     */
   def stageDecontam(rebuilt: DataFrame): DataFrame = {
-    val train = rebuilt.filter(col("carve") =!= "0")
-    val contaminated = decontaminate(
-      train.select(col("doc_id"), col("kept_text").as("text")),
-      rebuilt.filter(col("carve") === "0")
-        .select(col("kept_text").as("text")))
-      .select(col("doc_id"))
+    val (train, contaminated) = trainAndContaminated(rebuilt)
     train.join(contaminated, Seq("doc_id"), "left_anti")
   }
 
+  /** Stage 3's rule: the training side of a rebuilt corpus (carve ≠ '0')
+    * and the `doc_id`s in it that the carve-'0' slice contaminates.
+    */
+  private def trainAndContaminated(rebuilt: DataFrame): (DataFrame, DataFrame) = {
+    val train = rebuilt.filter(col("carve") =!= "0")
+    (train, decontaminate(
+      train.select(col("doc_id"), col("kept_text").as("text")),
+      rebuilt.filter(col("carve") === "0")
+        .select(col("kept_text").as("text")))
+      .select(col("doc_id")))
+  }
+
   /** Stage 4: tiered domain-mixture resampling on the surviving corpus. */
-  def stageMixture(decontam: DataFrame): DataFrame = {
+  def stageMixture(decontam: DataFrame): DataFrame = decontam.filter(mixturePred)
+
+  /** Stage 4's rule: source group 0 stays whole; groups 1, 2 and 3+ keep
+    * the docs whose `kept_text` md5 falls under 0x80, 0x40 and 0x20.
+    */
+  private def mixturePred: Column = {
     val grp = expr("cast(substring(source, 4) as int) div 5")
-    decontam.filter(grp === 0 ||
+    grp === 0 ||
       substring(md5(col("kept_text")), 1, 2) <
         when(grp === 1, lit("80")).when(grp === 2, lit("40"))
-          .otherwise(lit("20")))
+          .otherwise(lit("20"))
   }
 
   /** The funnel summary over already-built stages (stage 0/1 count raw
@@ -2751,19 +2763,10 @@ object TextAnalysis {
       count(when(qualityPred, 1)).as("n1"),
       sum(when(qualityPred, nw)).as("t1"))
     val rebuilt = stageRebuild(stageQuality(raw)).cache()
-    val train = rebuilt.filter(col("carve") =!= "0")
-    val contaminated = decontaminate(
-      train.select(col("doc_id"), col("kept_text").as("text")),
-      rebuilt.filter(col("carve") === "0")
-        .select(col("kept_text").as("text")))
-      .select(col("doc_id"))
+    val (train, contaminated) = trainAndContaminated(rebuilt)
     val decontamIds = train.select(col("doc_id"))
       .join(contaminated, Seq("doc_id"), "left_anti").cache()
-    val grp = expr("cast(substring(source, 4) as int) div 5")
-    val mix = grp === 0 ||
-      substring(md5(col("kept_text")), 1, 2) <
-        when(grp === 1, lit("80")).when(grp === 2, lit("40"))
-          .otherwise(lit("20"))
+    val mix = mixturePred
     val tail = rebuilt
       .join(decontamIds.withColumn("dc", lit(1)), Seq("doc_id"), "left")
       .agg(count(lit(1)).as("n2"), sum(col("n_tok")).as("t2"),

@@ -156,6 +156,23 @@ class HygieneSpec extends AnyFunSuite {
     assert(hits == Seq(s"$mainSrc/RowMetrics.scala"), hits)
   }
 
+  test("source: KernelCall and BloomMightContain are the only Catalyst expressions") {
+    // a native function is one row of GraftFunctions.kernels, evaluated by
+    // the generic KernelCall; only the bloom probe, which carries a
+    // Broadcast into generated code, keeps a class of its own
+    val decl = (raw"\b(?:class|object)\s+(\w+)" +
+      raw"(?:(?!\b(?:extends|class|object|trait)\b)[^{])*" +
+      raw"\bextends\s+([\w.]+(?:\s+with\s+[\w.]+)*)").r
+    val catalyst = raw"(?:Expression|Predicate|Generator|AggregateFunction|Aggregate)$$".r
+    val hits = scalaSources("src/main").flatMap { case (_, ls) =>
+      decl.findAllMatchIn(ls.mkString("\n")).collect {
+        case m if m.group(2).split("\\s+with\\s+").exists(t =>
+          catalyst.findFirstIn(t).isDefined) => m.group(1)
+      }
+    }
+    assert(hits.sorted == Seq("BloomMightContain", "KernelCall"), hits)
+  }
+
   test("source: the near-dup tiers share one text key and one Jaccard check") {
     // each decision lives once, in Dedup's helpers; a second copy here
     // means a tier hand-rolled it again
