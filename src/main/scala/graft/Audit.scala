@@ -1,11 +1,21 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildSide}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+
 /** By-hand per-row audit (not part of the gate): runs named
   * `SparkEntry.queries` rows end to end, each from construction through a
   * `noop` write (the Bench.runOnce convention), and prints for each:
   *  - one summary line: wall time, jobs, stages, tasks, shuffle bytes,
   *    summed task time and spill — a 2 s row with 40 jobs is scheduling
-  *    cost, a 2 s row with 3 jobs and 2 GB of shuffle is data-plane cost;
+  *    cost, a 2 s row with 3 jobs and 2 GB of shuffle is data-plane cost —
+  *    then, from the plans of the row's finished queries, the range
+  *    exchanges that ran and the side each broadcast join built, with
+  *    its build keys (`builds [left(o_orderkey)]`);
   *  - one line per job (wall, tasks, task time, job tags, description);
   *    every job a row starts carries the row's name as a job tag;
   *  - one line per micro-batch (input rows, `durationMs`, state rows and
@@ -23,7 +33,24 @@ package graft
   * `-Dspark.graft.stream.statePartitions=N` to the forked JVM: Spark
   * copies `spark.*` system properties into every session's conf.
   */
-object Audit {
+object Audit extends AdaptiveSparkPlanHelper {
+  /** `range exchanges <n> builds [<side>(<build keys>) …]` over `plans`,
+    * query stages and subqueries included.
+    */
+  def shape(plans: Seq[SparkPlan]): String = {
+    def name(b: BuildSide) = if (b == BuildLeft) "left" else "right"
+    val ranges = plans.flatMap(collectWithSubqueries(_) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    })
+    val builds = plans.flatMap(collectWithSubqueries(_) {
+      case j: BroadcastHashJoinExec =>
+        val keys = if (j.buildSide == BuildLeft) j.leftKeys else j.rightKeys
+        s"${name(j.buildSide)}(${keys.flatMap(_.references.map(_.name)).mkString(",")})"
+      case j: BroadcastNestedLoopJoinExec => s"${name(j.buildSide)}()"
+    })
+    s"range exchanges ${ranges.size} builds ${builds.mkString("[", " ", "]")}"
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Audit <sfDir> <row> [<row>...]")
     val sfDir = args(0)
@@ -62,7 +89,8 @@ object Audit {
               s"write ${m.total(_.shuffleWriteBytes)} B " +
               f"task ${m.total(_.runMs) / 1e3}%.1f s " +
               s"spill ${mb(m.total(_.memorySpillBytes))} memory " +
-              s"${mb(m.total(_.diskSpillBytes))} disk")
+              s"${mb(m.total(_.diskSpillBytes))} disk " +
+              shape(m.plans.map(_.executedPlan)))
             m.jobs.foreach(j => println(f"[audit]   job ${j.id}%4d " +
               f"wall ${j.wallMs}%6d ms tasks ${j.tasks}%4d task ${j.runMs}%6d ms " +
               j.tags.toSeq.sorted.mkString("[", ",", "] ") + j.description.take(90)))

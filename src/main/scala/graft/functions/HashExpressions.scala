@@ -25,6 +25,15 @@ object HashImpls {
   final val FnvOffset = 0xcbf29ce484222325L
   final val FnvPrime = 0x100000001b3L
 
+  /** Whether any element of `a` is NULL (the check behind
+    * [[Kernel.nullOnNullElement]]).
+    */
+  def anyNull(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
+    false
+  }
+
   /** FNV-1a over UTF-8 bytes. */
   def fnv1a(s: UTF8String): Long = {
     val bytes = s.getBytes
@@ -630,11 +639,15 @@ object HtmlImpls {
   * result type and its static kernel. The kernel appears twice — as the
   * Java name generated code calls (`method`, relative to
   * `graft.functions`) and as the Scala function interpreted eval calls
-  * (`eval`, over the argument values, none of them NULL). The rows live
-  * in [[GraftFunctions.kernels]]; [[KernelCall]] evaluates any of them.
+  * (`eval`, over the argument values, none of them NULL). With
+  * `nullOnNullElement`, a NULL element of an array argument makes the call
+  * NULL too: the vector kernels have no value for a missing component, and
+  * a shingle over a missing word is not a shingle. The rows live in
+  * [[GraftFunctions.kernels]]; [[KernelCall]] evaluates any of them.
   */
 final case class Kernel(name: String, args: Seq[Kernel.Arg], dataType: DataType,
-                        method: String, eval: Array[Any] => Any)
+                        method: String, eval: Array[Any] => Any,
+                        nullOnNullElement: Boolean = false)
 
 object Kernel {
   /** A column argument of `dataType`, or — with `range` — an integral
@@ -652,7 +665,8 @@ object Kernel {
 /** The one Catalyst expression behind every [[Kernel]]: `kernel` applied
   * to `children`, its column arguments and its literal arguments (as
   * [[Literal]] children) in the row's order. NULL in any argument gives
-  * NULL out; it is foldable exactly when its children are; plans show
+  * NULL out (and a NULL array element, for a `nullOnNullElement` row); it
+  * is foldable exactly when its children are; plans show
   * the row's SQL name (`minhash64(sh#12, 64)`); generated code calls
   * `graft.functions.<method>(args…)` inline, so every kernel stays inside
   * whole-stage codegen. Spark's `StaticInvoke` would do the call too, but
@@ -663,7 +677,14 @@ case class KernelCall(kernel: Kernel, children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = kernel.args.map(_.dataType)
   override def dataType: DataType = kernel.dataType
-  override def nullable: Boolean = children.exists(_.nullable)
+  /** Per child: an array whose NULL elements make the call NULL. */
+  @transient private lazy val elementChecked = children.map(c =>
+    kernel.nullOnNullElement && (c.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => false
+    }))
+  override def nullable: Boolean =
+    children.zip(elementChecked).exists { case (c, e) => c.nullable || e }
   override def foldable: Boolean = children.forall(_.foldable)
   override def prettyName: String = kernel.name
   override protected def stringArgs: Iterator[Any] = children.iterator
@@ -673,7 +694,9 @@ case class KernelCall(kernel: Kernel, children: Seq[Expression])
     var i = 0
     while (i < vs.length) {
       vs(i) = children(i).eval(input)
-      if (vs(i) == null) return null
+      if (vs(i) == null ||
+          elementChecked(i) && HashImpls.anyNull(vs(i).asInstanceOf[ArrayData]))
+        return null
       i += 1
     }
     kernel.eval(vs)
@@ -683,8 +706,11 @@ case class KernelCall(kernel: Kernel, children: Seq[Expression])
     val gens = children.map(_.genCode(ctx))
     val call = s"${ev.isNull} = false;\n${ev.value} = graft.functions." +
       s"${kernel.method}(${gens.map(_.value).mkString(", ")});"
-    val body = children.zip(gens).foldRight(call) { case ((c, g), inner) =>
-      s"${g.code}\n${ctx.nullSafeExec(c.nullable, g.isNull)(inner)}"
+    val body = children.zip(gens).zip(elementChecked).foldRight(call) {
+      case (((c, g), e), inner) =>
+        val checked = if (!e) inner
+          else s"if (!graft.functions.HashImpls.anyNull(${g.value})) {\n$inner\n}"
+        s"${g.code}\n${ctx.nullSafeExec(c.nullable, g.isNull)(checked)}"
     }
     ev.copy(code = code"""
       boolean ${ev.isNull} = true;
@@ -736,7 +762,8 @@ object GraftFunctions {
       Longs, "HashImpls.minhash64", a => HashImpls.minhash64(arr(a(0)), int(a(1)))),
     Kernel("word_shingles", Seq(Arg(Strings), lit(IntegerType, 1, 16, Some(3))),
       ArrayType(StringType, containsNull = false),
-      "HashImpls.wordShingles", a => HashImpls.wordShingles(arr(a(0)), int(a(1)))),
+      "HashImpls.wordShingles", a => HashImpls.wordShingles(arr(a(0)), int(a(1))),
+      nullOnNullElement = true),
     Kernel("char_grams", Seq(Arg(StringType), lit(IntegerType, 1, 16, Some(3))),
       ArrayType(StringType, containsNull = false),
       "HashImpls.charGrams", a => HashImpls.charGrams(str(a(0)), int(a(1)))),
@@ -752,13 +779,16 @@ object GraftFunctions {
     Kernel("html_extract", Seq(Arg(StringType)), HtmlImpls.schema,
       "HtmlImpls.htmlExtract", a => HtmlImpls.htmlExtract(str(a(0)))),
     Kernel("cosine_sim", Seq(Arg(Doubles), Arg(Doubles)), DoubleType,
-      "HashImpls.cosine", a => HashImpls.cosine(arr(a(0)), arr(a(1)))),
+      "HashImpls.cosine", a => HashImpls.cosine(arr(a(0)), arr(a(1))),
+      nullOnNullElement = true),
     Kernel("dot_product", Seq(Arg(Doubles), Arg(Doubles)), DoubleType,
-      "HashImpls.dot", a => HashImpls.dot(arr(a(0)), arr(a(1)))),
+      "HashImpls.dot", a => HashImpls.dot(arr(a(0)), arr(a(1))),
+      nullOnNullElement = true),
     Kernel("hyperplane_bands", Seq(Arg(Doubles), lit(IntegerType, 1, 256),
         lit(IntegerType, 1, 63), lit(LongType, Long.MinValue, Long.MaxValue)),
       Longs, "HashImpls.hyperplaneBands", a => HashImpls.hyperplaneBands(
-        arr(a(0)), int(a(1)), int(a(2)), a(3).asInstanceOf[Long])))
+        arr(a(0)), int(a(1)), int(a(2)), a(3).asInstanceOf[Long]),
+      nullOnNullElement = true))
 
   /** The registry builder of one row: column arguments pass through
     * (ImplicitCastInputTypes casts or rejects them at analysis); each
@@ -908,6 +938,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     GraftFunctions.injectInto(ext)
     // conf-gated plan guardrails (no-ops until opted in; see each rule)
     ext.injectOptimizerRule(graft.plans.CartesianGuard.apply)
+    // the reference's stage shape: build the small join side, sort small
+    // results in the stage that reads them
+    ext.injectPlannerStrategy(_ => graft.plans.FkJoinBuildSide)
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.OnePartitionSort)
   }
 }
 

@@ -147,6 +147,11 @@ class HygieneSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"conf set on a caller's session: ${bad.mkString("; ")}")
   }
 
+  test("no TPC-H query carries a planner hint: its plan shape comes from graft's rules") {
+    val hinted = operators.Tpch.sql.collect { case (k, q) if q.contains("/*+") => k }
+    assert(hinted.isEmpty, s"hinted TPC-H SQL: $hinted")
+  }
+
   test("source: RowMetrics is the only listener under src/main") {
     val listener = ("(?:new|extends|with)\\s+[\\w.]*\\b" +
       "(?:SparkListener|StreamingQueryListener|QueryExecutionListener)\\b").r

@@ -40,6 +40,13 @@ class KernelSpec extends AnyFunSuite {
     "dot_product" -> Seq(Seq(Seq(1.0, 2.0, 3.0), Seq(3.0, -2.0, 0.5))),
     "hyperplane_bands" -> Seq(Seq(Seq(0.5, -1.0, 2.0, 0.25), 4, 8, 42L)))
 
+  /** One call per `nullOnNullElement` row with a NULL array element. */
+  private val nullElement: Map[String, Seq[Any]] = Map(
+    "cosine_sim" -> Seq(Seq(1.0, null), Seq(1.0, 1.0)),
+    "dot_product" -> Seq(Seq(1.0, 1.0), Seq(null, 1.0)),
+    "hyperplane_bands" -> Seq(Seq(0.5, null, 2.0, 0.25), 4, 8, 42L),
+    "word_shingles" -> Seq(Seq("x", null, "y", "z"), 2))
+
   private lazy val interpreted: SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.codegen.wholeStage", "false")
@@ -65,6 +72,16 @@ class KernelSpec extends AnyFunSuite {
 
   test("every native function has kernel fixtures") {
     assert(fixtures.keySet == GraftFunctions.names.toSet)
+  }
+
+  test("a NULL array element gives NULL out where the row says so") {
+    assert(nullElement.keySet ==
+      GraftFunctions.kernels.filter(_.nullOnNullElement).map(_.name).toSet)
+    GraftFunctions.kernels.filter(_.nullOnNullElement).foreach { k =>
+      val args = nullElement(k.name)
+      assert(call(spark, k, args)._1 == null, s"codegen ${k.name}$args")
+      assert(call(interpreted, k, args)._1 == null, s"interpreted ${k.name}$args")
+    }
   }
 
   GraftFunctions.kernels.foreach { k =>

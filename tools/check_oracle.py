@@ -2,15 +2,26 @@
 """Local replica of the driver's correctness gate: run Verify's parquet
 dumps against the DuckDB oracle (oracle_sql.json) on the same sf dir.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [--skip-n2]
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [--skip-n2] [--ordered]
 
 --skip-n2 excludes the oracles whose DUCKDB side is quadratic (exact
 pair-set cross joins / list-intersection self-joins) — the Spark side of
 every one of them is sub-quadratic, it is only the oracle formulation
 that can't scale. This is the sf0.1 gate tier: everything else must
 still be green at 10x the regular gate SF.
+
+--ordered also checks row ORDER, which `canon` (order-free) never sees.
+For each row whose oracle ends in ORDER BY (optionally followed by
+LIMIT) and whose order-free compare passed, the Spark rows in file order
+are compared with the oracle's sequence:
+  ORDERED  the sequences are equal;
+  TIES     they differ, but the Spark rows are sorted by the ORDER BY
+           keys (NULLs first ascending, last descending, as in Spark),
+           so only rows with tied keys are permuted;
+  UNORDERED the Spark rows are not sorted by the ORDER BY keys, or the
+           keys are not columns of the output (named or by position).
 """
-import json, sys, math
+import json, re, sys, math
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -45,13 +56,84 @@ def canon(rows, cols):
     return [c for c in sorted(cols)], out
 
 
-def main(sf_dir, out_dir, skip_n2=False):
+def order_terms(sql):
+    """The terms of a trailing top-level ORDER BY (before an optional
+    LIMIT), or None when the query does not end in one."""
+    depth, quote, start, cuts = 0, None, -1, []
+    up = sql.upper()
+    for i, c in enumerate(sql):
+        if quote:
+            quote = None if c == quote else quote
+        elif c in "'\"":
+            quote = c
+        elif c in "()":
+            depth += 1 if c == "(" else -1
+        elif depth == 0 and c == "," and start >= 0:
+            cuts.append(i)
+        elif depth == 0 and up.startswith("ORDER BY", i) and \
+                not (i and (sql[i - 1].isalnum() or sql[i - 1] == "_")):
+            start, cuts = i + len("ORDER BY"), []
+    if start < 0:
+        return None
+    tail = sql[start:]
+    limit = re.search(r"\bLIMIT\b", tail, re.I)
+    body = tail[:limit.start()] if limit else tail
+    if re.search(r"\b(FROM|WHERE|GROUP|HAVING|SELECT|UNION)\b", body, re.I):
+        return None  # an inner ORDER BY, not the query's last clause
+    bounds = [start - 1] + cuts + [start + len(body)]
+    return [sql[a + 1:b].strip().rstrip(";") for a, b in zip(bounds, bounds[1:])]
+
+
+def sorted_by(con, path, cols, terms):
+    """Whether the rows of parquet `path`, in file order, are sorted by the
+    ORDER BY `terms`: a stable re-sort by them must leave every row in
+    place. Positions and qualified names are resolved to output columns."""
+    def resolve(t):
+        m = re.fullmatch(r"(\d+)(\s.*)?", t, re.S)
+        if m:
+            return f'"{cols[int(m.group(1)) - 1]}"{m.group(2) or ""}'
+        return re.sub(r"^\w+\.(\w+)", r"\1", t)
+    keys = ", ".join(resolve(t) for t in terms)
+    try:
+        moved = con.execute(
+            f"SELECT count(*) FROM (SELECT __i, row_number() OVER "
+            f"(ORDER BY {keys}, __i) AS __r FROM (SELECT *, row_number() "
+            f"OVER () AS __i FROM read_parquet('{path}'))) WHERE __i <> __r"
+        ).fetchone()[0]
+    except Exception:
+        return False
+    return moved == 0
+
+
+def check_order(con, name, sql, path, grows, gcols, wrows, wcols):
+    """One row's --ordered verdict, printed; returns it."""
+    terms = order_terms(sql)
+    if terms is None:
+        return None
+
+    def seq(rows, cols):
+        return [canon([r], cols)[1][0] for r in rows]
+    if seq(grows, gcols) == seq(wrows, wcols):
+        verdict = "ORDERED"
+    elif sorted_by(con, path, gcols, terms):
+        verdict = "TIES"
+    else:
+        verdict = "UNORDERED"
+    print(f"{verdict} {name} (ORDER BY {', '.join(terms)})")
+    return verdict
+
+
+def main(sf_dir, out_dir, skip_n2=False, ordered=False):
     con = duckdb.connect()
+    # the --ordered sortedness check runs under Spark's NULL order
+    ocon = duckdb.connect()
+    ocon.execute("SET default_null_order = 'nulls_first_on_asc_last_on_desc'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    verdicts = {}
     skipped = [n for n in sorted(oracle) if skip_n2 and n in N2_ORACLES]
     for n in skipped:
         print(f"SKIP {n} (n^2 oracle, excluded at this tier)")
@@ -108,10 +190,20 @@ def main(sf_dir, out_dir, skip_n2=False):
         else:
             print(f"PASS {name} ({len(gr)} rows)")
             n_pass += 1
+            if ordered:
+                v = check_order(ocon, name, sql, f"{out_dir}/{name}/*.parquet",
+                                grows, gcols, wrows, wcols)
+                if v:
+                    verdicts.setdefault(v, []).append(name)
     skip_note = f", {len(skipped)} skipped (n^2 oracle)" if skipped else ""
     print(f"== {n_pass} pass, {n_fail} fail{skip_note} ==")
-    return 1 if n_fail else 0
+    if ordered:
+        print("== order: " + ", ".join(
+            f"{len(verdicts.get(v, []))} {v.lower()}"
+            for v in ("ORDERED", "TIES", "UNORDERED")) + " ==")
+    return 1 if n_fail or verdicts.get("UNORDERED") else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2], "--skip-n2" in sys.argv[3:]))
+    sys.exit(main(sys.argv[1], sys.argv[2], "--skip-n2" in sys.argv[3:],
+                  "--ordered" in sys.argv[3:]))
